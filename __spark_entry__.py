@@ -1534,10 +1534,9 @@ def _model_prelude(spark, sf_dir):
     model = bg_ops.background_model(seqs, min_count=p.min_word_corpus_count)
     windowed = win.with_time_window(seqs, length=p.window_length)
     themes = em_ops.filter_themes(
-        em_ops.best_run_themes(
-            em_ops.em_themes(windowed, model, k=p.num_themes,
-                             iterations=p.em_iterations,
-                             lambda_b=p.lambda_background)),
+        em_ops.em_themes(windowed, model, k=p.num_themes,
+                         iterations=p.em_iterations,
+                         lambda_b=p.lambda_background),
         p.num_themes, p.theme_score_floor_factor)
     return p, windowed, themes, model
 

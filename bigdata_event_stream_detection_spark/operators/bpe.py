@@ -126,8 +126,8 @@ def bpe_train(
     - ``auto`` (default): adaptive — recount while the argmax pair is
       hot (touched rows ≈ vocab, where recount's single explode beats
       delta's two), then switch permanently to delta once the top
-      pair count falls below ``_DELTA_SWITCH_FRACTION`` of the initial
-      symbol count (and the vocab is big enough for delta to ever
+      pair count falls below ``_DELTA_SWITCH_FRACTION`` of the vocab's
+      word count (and the vocab has enough symbols for delta to ever
       win, ``_DELTA_SYMBOL_THRESHOLD``).
 
     ``batch_size > 1`` (batched greedy): each round takes the top-m

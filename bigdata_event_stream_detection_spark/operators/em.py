@@ -1,12 +1,13 @@
 """Per-window EM theme extraction (M1-M4 of the operator inventory).
 
-Spark shape: ``groupBy(window_start, run).applyInPandas(em_fit_udf)``.
-The whole 25-iteration EM loop runs inside one task per (window, run)
-group — the reference fuses iterations into a single map task for the
-same no-per-iteration-shuffle reason (``EmAlgo.java:188-219``,
-report/themeExtraction.tex:78). Multi-run replication (J1) is a cheap
-``crossJoin(spark.range(R))`` instead of the reference's RDD cartesian;
-best-run selection (A6) is ``max_by`` via a window function.
+Spark shape: ``groupBy(window_start).applyInPandas(em_fit_udf)``.
+The whole 25-iteration EM loop runs inside one task per window — the
+reference fuses iterations into a single map task for the same
+no-per-iteration-shuffle reason (``EmAlgo.java:188-219``,
+report/themeExtraction.tex:78). The reference's R seeded runs (J1, an
+RDD cartesian) and best-run selection (A6) stay inside that task too:
+``em_window_best`` fits runs 0..R-1 and keeps the max-log-likelihood
+one, so every run count costs one shuffle on window_start.
 
 Background probabilities enter the kernel through a SparkContext
 broadcast of two aligned numpy arrays (word_id -> p), not a per-row
@@ -40,6 +41,15 @@ def _bg_arrays(background_pdf: pd.DataFrame):
         b["word_id"].to_numpy(dtype=np.int64),
         b["p"].to_numpy(dtype=np.float64),
     )
+
+
+def _broadcast_background(df: DataFrame, background):
+    """Background model as a SparkContext broadcast of ``_bg_arrays``.
+
+    ``background`` may be a Spark DataFrame or an already-collected
+    pandas frame (the pipeline collects once and shares it)."""
+    return df.sparkSession.sparkContext.broadcast(
+        _bg_arrays(collect_background(background)))
 
 
 #: Driver-side cap on the collected background model. 50M (word_id, p)
@@ -82,6 +92,35 @@ def collect_background(background, max_rows: int | None = None) -> pd.DataFrame:
     return pdf
 
 
+def _window_counts(docs: list, bg_ids: np.ndarray, bg_p: np.ndarray):
+    """(vocab, D x V float count matrix, p_bg) for one window's docs,
+    or None when the window holds no in-background word.
+
+    The window vocabulary is the kept (in-background) words present
+    here; ``p_bg`` is the background aligned to it and renormalized.
+    One vectorized pass builds every doc's count row: map the window's
+    concatenated tokens to vocab columns (searchsorted), then
+    scatter-count (doc, col) pairs via a single flat bincount — same
+    integer counts as a per-doc np.unique loop, without D rounds of
+    Python/numpy dispatch."""
+    if not docs:
+        return None
+    all_tok = np.concatenate([np.asarray(t, dtype=np.int64) for t in docs])
+    vocab = np.unique(all_tok[np.isin(all_tok, bg_ids)])
+    if vocab.size == 0:
+        return None
+    D = len(docs)
+    lens = np.fromiter((len(t) for t in docs), dtype=np.int64, count=D)
+    doc_of = np.repeat(np.arange(D, dtype=np.int64), lens)
+    pos = np.minimum(np.searchsorted(vocab, all_tok), vocab.size - 1)
+    known = vocab[pos] == all_tok
+    counts = np.bincount(
+        doc_of[known] * vocab.size + pos[known], minlength=D * vocab.size
+    ).reshape(D, vocab.size).astype(np.float64)
+    p_bg = bg_p[np.searchsorted(bg_ids, vocab)]
+    return vocab, counts, p_bg / p_bg.sum()
+
+
 def em_window(
     window_start,
     run: int,
@@ -109,51 +148,51 @@ def em_window(
     docs = pdf["tokens"].to_list()
     cols = ["window_start", "run", "theme_id", "loglik", "score",
             "n_docs", "word_ids", "probs"]
-    if not docs:
+    model = _window_counts(docs, bg_ids, bg_p)
+    if model is None:
         return pd.DataFrame(columns=cols)
-    # window vocabulary = kept (in-background) words present here
-    all_tok = np.concatenate([np.asarray(t, dtype=np.int64) for t in docs])
-    keep_mask = np.isin(all_tok, bg_ids, assume_unique=False)
-    vocab = np.unique(all_tok[keep_mask])
+    vocab, counts, p_bg = model
+    if min_distinct_words:
+        counts = counts[(counts > 0).sum(axis=1) > min_distinct_words]
     rows = []
-    if vocab.size:
-        D = len(docs)
-        # One vectorized pass builds every doc's count row: map the
-        # window's concatenated tokens to vocab columns (searchsorted),
-        # then scatter-count (doc, col) pairs via a single flat
-        # bincount — same integer counts as a per-doc np.unique loop,
-        # without D rounds of Python/numpy dispatch.
-        lens = np.fromiter((len(t) for t in docs), dtype=np.int64, count=D)
-        doc_of = np.repeat(np.arange(D, dtype=np.int64), lens)
-        pos = np.searchsorted(vocab, all_tok)
-        pos_c = np.minimum(pos, vocab.size - 1)
-        known = vocab[pos_c] == all_tok
-        flat_idx = doc_of[known] * vocab.size + pos_c[known]
-        counts = np.bincount(
-            flat_idx, minlength=D * vocab.size
-        ).reshape(D, vocab.size).astype(np.float64)
-        keep_doc = np.ones(D, dtype=bool)
-        if min_distinct_words:
-            keep_doc = (counts > 0).sum(axis=1) > min_distinct_words
-        counts = counts[keep_doc]
-        if counts.shape[0]:
-            # align background to window vocab, renormalized
-            pos = np.searchsorted(bg_ids, vocab)
-            p_bg = bg_p[pos]
-            p_bg = p_bg / p_bg.sum()
-            seed = stable_seed(
-                "em", int(pd.Timestamp(window_start).value), int(run))
-            theta, pi, loglik = em_fit(
-                counts, p_bg, k, iterations=iterations,
-                lambda_b=lambda_b, seed=seed)
-            scores = pi.mean(axis=0)  # avg pi per theme (A7/M3)
-            for j in range(k):
-                rows.append((
-                    window_start, int(run), j, float(loglik),
-                    float(scores[j]), int(counts.shape[0]),
-                    vocab.astype(np.int32), theta[j],
-                ))
+    if counts.shape[0]:
+        seed = stable_seed(
+            "em", int(pd.Timestamp(window_start).value), int(run))
+        theta, pi, loglik = em_fit(
+            counts, p_bg, k, iterations=iterations,
+            lambda_b=lambda_b, seed=seed)
+        scores = pi.mean(axis=0)  # avg pi per theme (A7/M3)
+        for j in range(k):
+            rows.append((
+                window_start, int(run), j, float(loglik),
+                float(scores[j]), int(counts.shape[0]),
+                vocab.astype(np.int32), theta[j],
+            ))
     return pd.DataFrame(rows, columns=cols)
+
+
+def em_window_best(
+    window_start,
+    pdf: pd.DataFrame,
+    bg_ids: np.ndarray,
+    bg_p: np.ndarray,
+    k: int,
+    runs: int = 1,
+    **em_kwargs,
+) -> pd.DataFrame:
+    """Best-of-R EM for ONE window (J1 + A6/M2, ``EmAlgo.java:228-264``):
+    fit ``em_window`` with seeds ``run = 0..runs-1`` and keep the run
+    with the highest log-likelihood; on a tie the lowest run id wins.
+    Every theme-extracting plan (batch, streaming, evolution) selects
+    its run here, so run selection cannot drift between them."""
+    best = None
+    for run in range(runs):
+        t = em_window(window_start, run, pdf, bg_ids, bg_p, k, **em_kwargs)
+        if t.empty:
+            return t  # emptiness depends on the docs, not on the seed
+        if best is None or t["loglik"].iloc[0] > best["loglik"].iloc[0]:
+            best = t
+    return best
 
 
 def em_themes(
@@ -165,36 +204,29 @@ def em_themes(
     runs: int = 1,
     min_distinct_words: int = 0,
 ) -> DataFrame:
-    """Extract k themes per window; one output row per (window, run, theme).
+    """Extract k themes per window from its best of ``runs`` EM fits;
+    one output row per (window, theme), ``run`` = the winning run id.
 
     ``windowed`` must carry (window_start, doc_id, tokens). Docs are
     restricted to background-model words (the reference's broadcast
     semi-join P4) inside the kernel via a sorted-array membership test.
     """
-    spark = windowed.sparkSession
-    bg_ids, bg_p = _bg_arrays(collect_background(background))
-    bcast = spark.sparkContext.broadcast((bg_ids, bg_p))
+    bcast = _broadcast_background(windowed, background)
 
     def fit(key, pdf):
-        window_start, run = key
         ids, p_all = bcast.value
-        return em_window(
-            window_start, int(run), pdf, ids, p_all, k,
+        return em_window_best(
+            key[0], pdf, ids, p_all, k, runs=runs,
             iterations=iterations, lambda_b=lambda_b,
             min_distinct_words=min_distinct_words)
 
-    replicated = windowed.select("window_start", "doc_id", "tokens")
-    if runs > 1:
-        # J1: replicate each window's docs once per run id
-        run_ids = spark.range(runs).select(F.col("id").cast("int").alias("run"))
-        replicated = replicated.crossJoin(F.broadcast(run_ids))
-    else:
-        replicated = replicated.withColumn("run", F.lit(0))
     # pin the kernel shuffle's parallelism: AQE byte-coalescing would
     # serialize the CPU-bound EM stage onto one task (util.py)
     from ..util import pin_partitions
-    return pin_partitions(replicated, "window_start", "run").groupBy(
-        "window_start", "run").applyInPandas(fit, schema=THEMES_SCHEMA)
+    return pin_partitions(
+        windowed.select("window_start", "doc_id", "tokens"),
+        "window_start").groupBy(
+        "window_start").applyInPandas(fit, schema=THEMES_SCHEMA)
 
 
 def em_themes_chunked(
@@ -210,7 +242,7 @@ def em_themes_chunked(
     the way to extract themes from a window too large for one kernel
     task. ``ntile`` over a deterministic doc order replaces the
     reference's driver-side list slicing; the chunk id rides the `run`
-    column so best-run selection and theme filtering compose unchanged.
+    column so theme filtering composes unchanged.
     """
     from pyspark.sql import Window as W
 
@@ -218,9 +250,7 @@ def em_themes_chunked(
     chunked = windowed.select(
         "window_start", "doc_id", "tokens"
     ).withColumn("run", (F.ntile(n_chunks).over(w) - 1))
-    spark = windowed.sparkSession
-    bg_ids, bg_p = _bg_arrays(collect_background(background))
-    bcast = spark.sparkContext.broadcast((bg_ids, bg_p))
+    bcast = _broadcast_background(windowed, background)
 
     def fit(key, pdf):
         window_start, run = key
@@ -254,25 +284,10 @@ def em_doc_weights_window(
     pdf = pdf.sort_values("doc_id")
     docs = pdf["tokens"].to_list()
     cols = ["window_start", "doc_id", "theme_id", "weight"]
-    if not docs:
+    model = _window_counts(docs, bg_ids, bg_p)
+    if model is None:
         return pd.DataFrame(columns=cols)
-    all_tok = np.concatenate([np.asarray(t, dtype=np.int64) for t in docs])
-    vocab = np.unique(all_tok[np.isin(all_tok, bg_ids)])
-    if vocab.size == 0:
-        return pd.DataFrame(columns=cols)
-    D = len(docs)
-    # same vectorized scatter-count as em_window
-    lens = np.fromiter((len(t) for t in docs), dtype=np.int64, count=D)
-    doc_of = np.repeat(np.arange(D, dtype=np.int64), lens)
-    pos = np.searchsorted(vocab, all_tok)
-    pos_c = np.minimum(pos, vocab.size - 1)
-    known = vocab[pos_c] == all_tok
-    counts = np.bincount(
-        doc_of[known] * vocab.size + pos_c[known],
-        minlength=D * vocab.size
-    ).reshape(D, vocab.size).astype(np.float64)
-    p_bg = bg_p[np.searchsorted(bg_ids, vocab)]
-    p_bg = p_bg / p_bg.sum()
+    _vocab, counts, p_bg = model
     seed = stable_seed("em", int(pd.Timestamp(window_start).value), 0)
     _, pi, _ = em_fit(counts, p_bg, k, iterations=iterations,
                       lambda_b=lambda_b, seed=seed)
@@ -294,9 +309,7 @@ def em_doc_weights(
     window — the doc-level view the reference exposes for its top-docs
     report (``EmInput.java:221-260``, O4). Same kernel/seeds as
     ``em_themes``, so weights correspond to that run's themes."""
-    spark = windowed.sparkSession
-    bg_ids, bg_p = _bg_arrays(collect_background(background))
-    bcast = spark.sparkContext.broadcast((bg_ids, bg_p))
+    bcast = _broadcast_background(windowed, background)
 
     def fit(key, pdf):
         (window_start,) = key
@@ -321,13 +334,6 @@ def top_docs_per_theme(doc_weights: DataFrame, k: int = 5) -> DataFrame:
         F.col("weight").desc(), F.col("doc_id").asc())
     return doc_weights.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k)
-
-
-def best_run_themes(themes: DataFrame) -> DataFrame:
-    """A6/M2: keep the max-log-likelihood run per window (max_by)."""
-    best = themes.groupBy("window_start").agg(
-        F.max_by("run", "loglik").alias("run"))
-    return themes.join(F.broadcast(best), ["window_start", "run"], "inner")
 
 
 def filter_themes(themes: DataFrame, k: int, floor_factor: float = 0.9) -> DataFrame:

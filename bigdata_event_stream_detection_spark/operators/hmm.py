@@ -5,14 +5,17 @@ with a driver-sequential blocked scan (``Hmm2.java:164-294, 643-1301``)
 — a scalability cliff it mitigated with 64Ki-token blocks and per-
 iteration driver collects. The rebuild bounds sequences per window
 instead (SURVEY.md §7.3 hard-part 1): each (window) group holds all of
-its sources' token streams, and the entire train+decode runs inside one
-``applyInPandas`` task via cogrouped pandas (sequences on one side,
-that window's themes on the other). No driver round-trips, no cross-
-group shuffles beyond the one hash shuffle on window_start.
+its sources' token streams, and ``detect_window_events`` runs the whole
+window — best-of-R EM, theme floor, train, decode, strength count —
+inside one ``applyInPandas`` task (or one streaming state timeout). No
+driver round-trips, no cross-group shuffles beyond the one hash shuffle
+on window_start.
 
 Output is the detected-event rows of the north rule: per (window,
 source, theme) strength counts (``LifeCycleAnalyserSpark.java:196-266``),
-with the non-background filter (P8) applied in-kernel.
+with the non-background filter (P8) applied in-kernel. The per-doc
+surfaces (``decode_tokens``, ``doc_theme_counts``) decode against an
+explicit theme table through a window-keyed cogroup instead.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .blocked_hmm import baum_welch_blocked, viterbi_blocked
+from .em import _broadcast_background, em_window_best
 from .kernels import baum_welch, hmm_assemble, viterbi
 
 # Above this sequence length the memory-bounded two-level-scan kernels
@@ -135,23 +139,24 @@ def detect_window_events(
     pi_threshold: float,
     a_threshold: float,
     theme_id_offset: int = 0,
+    runs: int = 1,
 ) -> list:
-    """EM -> theme floor -> HMM train/decode -> per-source strength rows
-    for ONE window, fused in a single kernel call.
+    """Best-of-``runs`` EM -> theme floor -> HMM train/decode ->
+    per-source strength rows for ONE window, fused in a single kernel
+    call.
 
-    This is THE shared close-window payload: the fused batch plan
-    (``detect_events_pooled``) and the streaming engine's state-timeout
-    kernel both call it, so batch/stream output parity rides on one
-    code path. Seeds come from the window's epoch nanos via
-    ``em_window``; rows are (window_start, source, theme_id, strength)
-    with ``theme_id_offset`` namespacing for chunked streaming state
-    (M4 semantics).
+    This is THE shared close-window payload: the batch plan
+    (``detect_events_pooled``) and the streaming engine's window and
+    session timeouts all call it, so batch/stream output parity rides
+    on one code path. Seeds come from the window's epoch nanos via
+    ``em_window_best``; rows are (window_start, source, theme_id,
+    strength) with ``theme_id_offset`` namespacing for chunked
+    streaming state (M4 semantics).
     """
-    from .em import em_window
-
-    themes = em_window(
-        pd.Timestamp(window_start), 0, seq_pdf[["doc_id", "tokens"]],
-        bg_ids, bg_p, k, iterations=em_iterations, lambda_b=lambda_b)
+    themes = em_window_best(
+        pd.Timestamp(window_start), seq_pdf[["doc_id", "tokens"]],
+        bg_ids, bg_p, k, runs=runs,
+        iterations=em_iterations, lambda_b=lambda_b)
     themes = themes[themes["score"] > score_floor]
     by_src: dict[str, list] = {}
     theme_ids = None
@@ -183,17 +188,18 @@ def detect_events_pooled(
     max_iterations: int = 50,
     pi_threshold: float = 0.01,
     a_threshold: float = 0.01,
+    runs: int = 1,
 ) -> DataFrame:
-    """Single-shuffle fused event detection for the em_runs == 1 plan.
+    """The flagship event rows (window_start, source, theme_id, strength)
+    in one shuffle: best-of-``runs`` EM + theme floor + HMM train/decode
+    + strength count run in ONE ``applyInPandas`` task per window, one
+    hash shuffle on window_start total, exactly like the streaming
+    state kernel (which shares the same ``detect_window_events``
+    payload).
 
-    The unfused plan shuffles the corpus TWICE — once into the EM
-    groups and again into the decode cogroup — plus two Arrow
-    round-trips. With a single EM run there is nothing between the two
-    that needs a DataFrame boundary (best-run selection is the
-    identity), so this operator runs EM + theme floor + HMM
-    train/decode in ONE ``applyInPandas`` task per window: one hash
-    shuffle on window_start total, exactly like the streaming state
-    kernel (which shares the same ``detect_window_events`` payload).
+    strength = count of tokens Viterbi-decoded to that (non-background)
+    theme in the window — aggregated *inside* the kernel (np.bincount),
+    so the UDF emits k rows per (window, source), not per token.
     """
     bcast = _broadcast_background(windowed, background)
 
@@ -204,7 +210,8 @@ def detect_events_pooled(
             window_start, pdf, bg_ids, bg_p, k=k,
             em_iterations=em_iterations, lambda_b=lambda_b,
             score_floor=score_floor, max_iterations=max_iterations,
-            pi_threshold=pi_threshold, a_threshold=a_threshold)
+            pi_threshold=pi_threshold, a_threshold=a_threshold,
+            runs=runs)
         return pd.DataFrame(rows, columns=[
             "window_start", "source", "theme_id", "strength"])
 
@@ -217,51 +224,21 @@ def detect_events_pooled(
             .applyInPandas(run, EVENTS_SCHEMA))
 
 
-def _broadcast_background(sequences: DataFrame, background):
-    """Background model as a SparkContext broadcast of aligned arrays.
-
-    ``background`` may be a Spark DataFrame or an already-collected
-    pandas frame (the pipeline collects once and shares it)."""
-    from .em import collect_background
-
-    b = collect_background(background).sort_values("word_id")
-    return sequences.sparkSession.sparkContext.broadcast(
-        (b["word_id"].to_numpy(np.int64), b["p"].to_numpy(np.float64)))
-
-
-def _cogrouped(sequences: DataFrame, themes: DataFrame, fn, schema,
-               by_source: bool = False):
-    """Cogrouped decode shuffle.
-
-    ``by_source=False``: one task per window (all sources decode
-    sequentially inside the kernel). ``by_source=True``: key both sides
-    by (window, source) — the window's themes are replicated onto each
-    of its sources via one small equi-join (#groups rows), so a heavy
-    source's Baum-Welch no longer serializes behind its siblings in one
-    task and the max task size drops from the whole window to its
-    largest source. Results are identical: per-source decode is
-    independent by construction (the EM pooling already happened on the
-    themes side)."""
+def _cogrouped(sequences: DataFrame, themes: DataFrame, fn, schema):
+    """Window-keyed cogrouped decode shuffle: one task per window, all
+    sources decode sequentially inside the kernel. Both sides are
+    pinned (AQE byte-coalescing would serialize the CPU-bound decode
+    stage onto one task — util.py)."""
     from ..util import pin_partitions
 
     seq_cols = sequences.select(
         "window_start", "source", "doc_id", "event_time", "tokens")
     theme_cols = themes.select(
         "window_start", "theme_id", "word_ids", "probs")
-    if not by_source:
-        # pin BOTH cogroup sides (AQE byte-coalescing would serialize
-        # the CPU-bound decode stage onto one task — util.py)
-        return pin_partitions(seq_cols, "window_start").groupBy(
-            "window_start").cogroup(
-            pin_partitions(theme_cols, "window_start")
-            .groupBy("window_start")).applyInPandas(fn, schema)
-    win_sources = sequences.select("window_start", "source").distinct()
-    replicated = theme_cols.join(win_sources, "window_start")
-    return pin_partitions(seq_cols, "window_start", "source").groupBy(
-        "window_start", "source").cogroup(
-        pin_partitions(replicated, "window_start", "source")
-        .groupBy("window_start", "source")
-    ).applyInPandas(fn, schema)
+    return pin_partitions(seq_cols, "window_start").groupBy(
+        "window_start").cogroup(
+        pin_partitions(theme_cols, "window_start")
+        .groupBy("window_start")).applyInPandas(fn, schema)
 
 
 def decode_tokens(
@@ -271,7 +248,6 @@ def decode_tokens(
     max_iterations: int = 50,
     pi_threshold: float = 0.01,
     a_threshold: float = 0.01,
-    by_source: bool = False,
 ) -> DataFrame:
     """Per-doc decoded state arrays (test/inspection surface; also proves
     the token-array byte-equality invariant: `tokens` passes through)."""
@@ -289,60 +265,7 @@ def decode_tokens(
         return pd.DataFrame(rows, columns=[
             "window_start", "source", "doc_id", "tokens", "states"])
 
-    return _cogrouped(sequences, themes, run, DECODED_SCHEMA,
-                      by_source=by_source)
-
-
-def detect_events(
-    sequences: DataFrame,
-    themes: DataFrame,
-    background: DataFrame,
-    max_iterations: int = 50,
-    pi_threshold: float = 0.01,
-    a_threshold: float = 0.01,
-    by_source: bool = False,
-) -> DataFrame:
-    """The flagship event rows: (window_start, source, theme_id, strength).
-
-    strength = count of tokens Viterbi-decoded to that (non-background)
-    theme in the window — aggregated *inside* the kernel (np.bincount),
-    so the UDF emits k rows per (window, source), not per token.
-
-    ``by_source=True`` keys the decode by (window, source): the
-    train/decode of a window's heaviest source no longer serializes its
-    siblings in one task. Opt-in: it pays off for few-heavy-sources x
-    large-window workloads (3% on the 70%-skew fixture) but the group
-    fan-out costs ~2x at many-small-sources scale factors, so the
-    window-keyed plan stays the default.
-    """
-    bcast = _broadcast_background(sequences, background)
-
-    def run(key, seq_pdf, theme_pdf):
-        window_start = key[0]
-        bg_ids, bg_p = bcast.value
-        by_src: dict[str, list] = {}
-        theme_ids = None
-        for src, _doc, _toks, states, tids in _decode_window(
-                seq_pdf, theme_pdf, bg_ids, bg_p,
-                max_iterations, pi_threshold, a_threshold):
-            by_src.setdefault(src, []).append(states)
-            theme_ids = tids
-        out = []
-        for src in sorted(by_src):
-            allst = np.concatenate(by_src[src])
-            counts = np.bincount(allst)
-            for state in range(1, counts.size):   # P8: drop state 0
-                if counts[state] > 0:
-                    # map the surviving-state index back to the EM theme
-                    # id — after filter_themes, state j is NOT theme j
-                    out.append((window_start, src,
-                                int(theme_ids[state - 1]),
-                                int(counts[state])))
-        return pd.DataFrame(out, columns=[
-            "window_start", "source", "theme_id", "strength"])
-
-    return _cogrouped(sequences, themes, run, EVENTS_SCHEMA,
-                      by_source=by_source)
+    return _cogrouped(sequences, themes, run, DECODED_SCHEMA)
 
 
 def doc_theme_counts(
@@ -358,8 +281,9 @@ def doc_theme_counts(
     absoluteStrength time slices (LifeCycleAnalyserSpark.java:327-410)
     and per-timestamp strength series (:196-229) are plain relational
     compositions (``theme_strength`` / ``strength_series`` below).
-    Same cogrouped kernel as ``detect_events``; the per-doc bincount
-    keeps the UDF output at O(docs x themes), never per token.
+    Summed per (window, source, theme) it gives the event-strength rows
+    decoded from ``themes``; the per-doc
+    bincount keeps the UDF output at O(docs x themes), never per token.
     """
     bcast = _broadcast_background(sequences, background)
 

@@ -173,12 +173,15 @@ def binary_hamming_topk(
     shortlist SET (not just the final ranking) is reproducible — the
     oracle mirrors the exact two-stage semantics.
 
-    Scale shape (the 10^9-vector story): the packed corpus scan streams
-    d/64 longs per row; per-partition partial top-C (one hash agg with
-    map-side combine, ``array_sort``+``slice`` of per-partition
-    structs) bounds the only shuffle to #partitions x #queries x C tiny
-    rows; the rescore joins the broadcast shortlist back into the
-    corpus scan, so float vectors never shuffle. The Hamming stage is
+    Scale shape: the packed corpus scan streams d/64 longs per row;
+    per-partition partial top-C (``array_sort``+``slice`` of
+    per-partition structs) bounds the only shuffle to #partitions x
+    #queries x C tiny rows; the rescore joins the broadcast shortlist
+    back into the corpus scan, so float vectors never shuffle. The
+    partial top-C is NOT memory-bounded: its ``collect_list`` buffers
+    every (hamming, id) struct of a (partition, query) group before the
+    slice, so task memory grows with partition rows x queries — keep
+    corpus partitions small for large query sets. The Hamming stage is
     the standard binary-quantization prefilter (a Faiss
     ``IndexBinaryFlat`` shaped relationally); recall is tuned by
     ``candidates``.
@@ -196,7 +199,8 @@ def binary_hamming_topk(
             F.expr("aggregate(zip_with(_bits, _qbits, "
                    "(x, y) -> bit_count(x ^ y)), 0, (a, b) -> a + b)")
             .alias("hamming")))
-    # per-partition partial top-C (map-side bounded), then global top-C
+    # per-partition partial top-C (bounds the shuffle, not the
+    # collect_list buffer), then global top-C
     part = (scored
             .groupBy(F.spark_partition_id().alias("_p"), "query_id")
             .agg(F.slice(F.array_sort(F.collect_list(

@@ -5,11 +5,13 @@ One declarative flow, equivalent to the reference's
 SURVEY.md §3.2) but with zero mid-query driver collects:
 
     sequences -> quality filters -> (background model) -> window assign
-              -> per-window EM themes -> best-run/theme filters
-              -> per-window HMM train+decode -> event strength rows
+              -> ONE per-window kernel: best-of-R EM themes -> theme
+                 floor -> HMM train+decode -> event strength rows
 
-Every stage is DataFrame -> DataFrame, so the streaming shell reuses the
-same operators under readStream.
+The per-window kernel (``hmm.detect_window_events``) is the same
+function the streaming engine runs when a window closes, so every
+``em_runs`` value is one shuffle on window_start, in batch and in
+streaming alike.
 """
 
 from __future__ import annotations
@@ -42,70 +44,39 @@ def detect_event_stream(
     """sequences (input-hint shape) -> event rows
     (window_start, source, theme_id, strength).
 
-    The filtered corpus and the theme table are persisted: the corpus
-    lineage is read by the background model, the EM stage, and the HMM
-    cogroup (3 consumers), and `best_run_themes` + the HMM side read
-    themes twice — without a persist the whole upstream scan/tokenize
-    recomputes per consumer (the reference persists at the same points:
-    InputParser.java:108, EmAlgo.java:231).
+    Without a precomputed ``model`` the filtered corpus has two
+    consumers (the background model and the kernel shuffle), so it is
+    persisted — otherwise the whole upstream scan/tokenize recomputes
+    per consumer (the reference persists at the same point:
+    InputParser.java:108). With a precomputed model the kernel is the
+    only consumer and the persist (a serial stage barrier) is skipped.
     """
     seqs = win.filter_docs(sequences, min_tokens=params.min_doc_tokens)
     if with_watermark_filter:
         seqs = win.drop_late(seqs, watermark_delay=params.watermark_delay)
     # background model over the *unwindowed* corpus: overlapping windows
     # must not double-count words (ArticleProcessorTest semantics).
-    # Collected ONCE (vocab-sized) and shared: the EM and HMM stages
-    # each broadcast from this pandas frame instead of running their
-    # own scan+agg+collect job. Callers running many queries over one
-    # corpus pass a precomputed `model` (the streaming engine's static
-    # side input works the same way). The corpus persist exists for the
-    # multi-consumer lineage (model scan + EM + HMM cogroup); with a
-    # precomputed model and the fused single-run plan there is exactly
-    # ONE consumer, so the persist materialization (a serial stage
-    # barrier) is skipped.
-    fused = params.em_runs == 1
-    consumers = (0 if model is not None else 1) + (1 if fused else 2)
-    if consumers > 1:
-        seqs = persist_once(seqs)
+    # Collected ONCE (vocab-sized) and broadcast into the kernel.
+    # Callers running many queries over one corpus pass a precomputed
+    # `model` (the streaming engine's static side input works the same
+    # way).
     if model is None:
-        model = em_ops.collect_background(
-            bg.background_model(seqs, min_count=params.min_word_corpus_count))
-    else:
-        model = em_ops.collect_background(model)
+        seqs = persist_once(seqs)
+        model = bg.background_model(
+            seqs, min_count=params.min_word_corpus_count)
+    model = em_ops.collect_background(model)
     windowed = win.with_time_window(
         seqs, length=params.window_length, slide=params.window_slide)
-    if fused:
-        # single-run plan: EM + theme floor + HMM decode fused into one
-        # applyInPandas task per window — ONE corpus shuffle instead of
-        # two (EM groups + decode cogroup); shares the streaming state
-        # kernel's payload, so outputs are identical by construction
-        return hmm_ops.detect_events_pooled(
-            windowed, model,
-            k=params.num_themes,
-            em_iterations=params.em_iterations,
-            lambda_b=params.lambda_background,
-            score_floor=params.theme_score_floor_factor / params.num_themes,
-            max_iterations=params.bw_max_iterations,
-            pi_threshold=params.bw_pi_threshold,
-            a_threshold=params.bw_a_threshold,
-        )
-    themes = em_ops.em_themes(
+    return hmm_ops.detect_events_pooled(
         windowed, model,
         k=params.num_themes,
-        iterations=params.em_iterations,
+        em_iterations=params.em_iterations,
         lambda_b=params.lambda_background,
-        runs=params.em_runs,
-    )
-    # best-run selection reads the theme table twice (agg + join back),
-    # so persist it
-    themes = em_ops.best_run_themes(persist_once(themes))
-    themes = em_ops.filter_themes(
-        themes, params.num_themes, params.theme_score_floor_factor)
-    return hmm_ops.detect_events(
-        windowed, themes, model,
+        score_floor=params.theme_score_floor_factor / params.num_themes,
         max_iterations=params.bw_max_iterations,
         pi_threshold=params.bw_pi_threshold,
         a_threshold=params.bw_a_threshold,
+        runs=params.em_runs,
     )
 
 
@@ -126,8 +97,6 @@ def evolution_graph(sequences: DataFrame, params: Params = DEFAULTS) -> DataFram
         iterations=params.em_iterations,
         lambda_b=params.lambda_background,
         runs=params.em_runs)
-    if params.em_runs > 1:
-        themes = em_ops.best_run_themes(persist_once(themes))
     themes = em_ops.filter_themes(
         themes, params.num_themes, params.theme_score_floor_factor)
     # the transition self-join reads themes twice (both sides) — persist

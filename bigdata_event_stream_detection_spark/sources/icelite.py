@@ -1674,18 +1674,20 @@ def _merge_mor(spark: SparkSession, path: str, parent: dict,
     # and delete application reads every eq file anyway
     del_entries = _write_aux_files(
         source.select(key).distinct().coalesce(1), path, prefix="d")
+    # kid = the key column's field id in the validated parent: eq
+    # entries are self-describing across later renames (read paths
+    # resolve kid -> the current declared name; the parquet column
+    # keeps its write-time name ``key``). Resolved once, not per retry:
+    # a rename committed between attempts would make ``key`` unknown
+    # to the newer snapshot.
+    kid = _field_ids(parent).get(key)
     prev: list[str] = []
     for _ in range(max_retries):
         cur = _load_snapshot(path, current_snapshot_id(path))
         seq = cur["snapshot_id"] + 1
         data_manifest = _write_manifest(path, _stamped(data_entries, seq))
-        # kid = the key column's field id at commit time: eq entries
-        # are self-describing across later renames (read paths resolve
-        # kid -> the current declared name; the parquet column keeps
-        # its write-time name)
         del_manifest = _write_manifest(
-            path, [{**e, "type": "eq", "key": key,
-                    "kid": _field_ids(cur).get(key), "seq": seq}
+            path, [{**e, "type": "eq", "key": key, "kid": kid, "seq": seq}
                    for e in del_entries])
         _unlink_quiet(path, *[os.path.join(_META, m) for m in prev])
         prev = [data_manifest, del_manifest]

@@ -36,7 +36,9 @@ from pyspark.sql.types import (
 
 from .icelite import (
     _all_manifests,
+    _declared_eq_key,
     _entry_seq,
+    _field_ids,
     _list_snapshot_ids,
     _load_manifest,
     _load_snapshot,
@@ -153,12 +155,16 @@ def _file_rows(path: str, snap: dict) -> list[tuple]:
 
 
 def _delete_file_rows(path: str, snap: dict) -> list[tuple]:
+    # equality keys are reported by their name in ``snap``'s schema (a
+    # rename since the delete was written resolves through its kid)
+    fids = _field_ids(snap)
     rows = []
     for e in _snapshot_delete_entries(path, snap):
+        eq = e["type"] == "eq"
         rows.append((
-            "position" if e["type"] == "pos" else "equality",
+            "equality" if eq else "position",
             e["path"], int(e["rows"]), int(e["bytes"]),
-            int(_entry_seq(e)), e.get("key"),
+            int(_entry_seq(e)), _declared_eq_key(e, fids) if eq else None,
             sorted(e["refs"]) if e.get("refs") is not None else None,
         ))
     return rows

@@ -46,8 +46,8 @@ from pyspark.sql.types import (
     StructType, TimestampType,
 )
 
-from ..operators.em import em_window
-from ..operators.hmm import _decode_window, detect_window_events
+from ..operators.em import _broadcast_background
+from ..operators.hmm import detect_window_events
 from ..params import DEFAULTS, Params
 
 SEQUENCE_SCHEMA = StructType([
@@ -302,10 +302,10 @@ def streaming_detect_events(
     event-time watermark passes the window end, the state times out and
     the full EM -> theme filter -> HMM assemble/train -> Viterbi ->
     strength-count kernel runs on the buffered window. The kernel IS
-    the batch code (``operators.em.em_window`` +
-    ``operators.hmm._decode_window``) — same seeds, same doc order —
-    so the emitted rows are identical to the batch pipeline for the
-    same input and watermark (the north-rule invariant).
+    the batch code (``operators.hmm.detect_window_events``, best of
+    ``params.em_runs`` EM fits) — same seeds, same doc order — so the
+    emitted rows are identical to the batch pipeline for the same
+    input and watermark (the north-rule invariant).
 
     ``state_chunks=1`` (default) keys state by window: EM pools all
     sources per window, exactly like the reference's TimePartition, and
@@ -331,16 +331,13 @@ def streaming_detect_events(
     window, keyed (window_start, source, theme_id) — the sink's
     idempotency key.
     """
-    b = background_pdf.sort_values("word_id")
-    bg_ids = b["word_id"].to_numpy(np.int64)
-    bg_p = b["p"].to_numpy(np.float64)
-    spark = stream.sparkSession
-    bcast = spark.sparkContext.broadcast((bg_ids, bg_p))
-    dropped_acc = spark.sparkContext.accumulator(0)
+    bcast = _broadcast_background(stream, background_pdf)
+    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
 
     k = params.num_themes
     em_iters = params.em_iterations
     lambda_b = params.lambda_background
+    runs = params.em_runs
     score_floor = params.theme_score_floor_factor / k
     bw_iters = params.bw_max_iterations
     pi_thr = params.bw_pi_threshold
@@ -371,7 +368,7 @@ def streaming_detect_events(
             em_iterations=em_iters, lambda_b=lambda_b,
             score_floor=score_floor, max_iterations=bw_iters,
             pi_threshold=pi_thr, a_threshold=a_thr,
-            theme_id_offset=chunk * k)
+            theme_id_offset=chunk * k, runs=runs)
 
     return _windowed_state_stream(
         stream, params, close_window, EVENT_SCHEMA,
@@ -419,17 +416,14 @@ def streaming_detect_events_sessions(
     Out-of-session-order arrivals *within* the watermark are merged by
     event time; rows beyond the watermark were already dropped upstream.
     """
-    b = background_pdf.sort_values("word_id")
-    bg_ids = b["word_id"].to_numpy(np.int64)
-    bg_p = b["p"].to_numpy(np.float64)
-    spark = stream.sparkSession
-    bcast = spark.sparkContext.broadcast((bg_ids, bg_p))
-    dropped_acc = spark.sparkContext.accumulator(0)
+    bcast = _broadcast_background(stream, background_pdf)
+    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
 
     gap_ms = _interval_ms(params.session_gap)
     k = params.num_themes
     em_iters = params.em_iterations
     lambda_b = params.lambda_background
+    runs = params.em_runs
     score_floor = params.theme_score_floor_factor / k
     bw_iters = params.bw_max_iterations
     pi_thr = params.bw_pi_threshold
@@ -438,6 +432,8 @@ def streaming_detect_events_sessions(
 
     def close_session(source, doc_ids, event_ms, doc_lens, flat,
                       start_ms, end_ms):
+        """The windowed detector's payload (``detect_window_events``)
+        over one closed session, seeded by the session start."""
         ids, p_all = bcast.value
         offs = np.concatenate([[0], np.cumsum(doc_lens)])
         toks = [flat[offs[i]:offs[i + 1]] for i in range(len(doc_ids))]
@@ -445,27 +441,14 @@ def streaming_detect_events_sessions(
             "source": [source] * len(doc_ids), "doc_id": doc_ids,
             "event_time": np.asarray(event_ms, dtype=np.int64),
             "tokens": toks})
-        themes = em_window(
-            pd.Timestamp(start_ms, unit="ms"), 0,
-            seq_pdf[["doc_id", "tokens"]], ids, p_all, k,
-            iterations=em_iters, lambda_b=lambda_b)
-        themes = themes[themes["score"] > score_floor]
-        out = []
-        states_all = []
-        theme_ids = None
-        for _src, _doc, _toks, states, tids in _decode_window(
-                seq_pdf, themes, ids, p_all, bw_iters, pi_thr, a_thr):
-            states_all.append(states)
-            theme_ids = tids
-        if states_all:
-            cnt = np.bincount(np.concatenate(states_all))
-            for s in range(1, cnt.size):
-                if cnt[s] > 0:
-                    # state index -> surviving theme's real EM id
-                    out.append((pd.Timestamp(start_ms, unit="ms"),
-                                pd.Timestamp(end_ms + gap_ms, unit="ms"),
-                                source, int(theme_ids[s - 1]), int(cnt[s])))
-        return out
+        session_end = pd.Timestamp(end_ms + gap_ms, unit="ms")
+        rows = detect_window_events(
+            pd.Timestamp(start_ms, unit="ms"), seq_pdf, ids, p_all, k=k,
+            em_iterations=em_iters, lambda_b=lambda_b,
+            score_floor=score_floor, max_iterations=bw_iters,
+            pi_threshold=pi_thr, a_threshold=a_thr, runs=runs)
+        return [(start, session_end, src, tid, n)
+                for start, src, tid, n in rows]
 
     def fn(key, pdf_iter, state: GroupState):
         (source,) = key

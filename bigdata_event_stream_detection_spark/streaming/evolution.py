@@ -6,12 +6,11 @@ Two stages:
 
 1. ``streaming_window_themes`` — the SAME grouped-state machine as the
    event detector (`engine._windowed_state_stream`) with a different
-   close payload: when the watermark closes a window, run the batch EM
-   kernel (``em_window``) for each run, keep the max-log-likelihood run
-   (``best_run_themes`` semantics) and apply the score floor
-   (``filter_themes``), then emit the surviving theme rows
-   (window_start, theme_id, loglik, score, n_docs, word_ids, probs) —
-   byte-identical to the batch pipeline's theme table at the
+   close payload: when the watermark closes a window, run the batch
+   best-of-R EM kernel (``em_window_best``, the one ``em_themes``
+   runs), apply the score floor (``filter_themes``), then emit the
+   surviving theme rows (window_start, theme_id, loglik, score,
+   n_docs, word_ids, probs) — byte-identical to the batch pipeline's theme table at the
    ``theme_transitions`` input point, for the same input and watermark.
 
 2. ``start_evolution_edge_sink`` — a ``foreachBatch`` correlator: each
@@ -51,7 +50,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.em import em_window
+from ..operators.em import _broadcast_background, em_window_best
 from ..operators.transitions import theme_transitions
 from ..params import DEFAULTS, Params
 
@@ -83,12 +82,8 @@ def streaming_window_themes(
     defined on whole-window themes."""
     from .engine import _windowed_state_stream
 
-    b = background_pdf.sort_values("word_id")
-    bg_ids = b["word_id"].to_numpy(np.int64)
-    bg_p = b["p"].to_numpy(np.float64)
-    spark = stream.sparkSession
-    bcast = spark.sparkContext.broadcast((bg_ids, bg_p))
-    dropped_acc = spark.sparkContext.accumulator(0)
+    bcast = _broadcast_background(stream, background_pdf)
+    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
 
     k = params.num_themes
     em_iters = params.em_iterations
@@ -103,16 +98,9 @@ def streaming_window_themes(
         offs = np.concatenate([[0], np.cumsum(doc_lens)])
         toks = [flat[offs[i]:offs[i + 1]] for i in range(len(doc_ids))]
         seq_pdf = pd.DataFrame({"doc_id": doc_ids, "tokens": toks})
-        best = None
-        for run in range(runs):
-            t = em_window(pd.Timestamp(window_start), run, seq_pdf,
-                          ids, p_all, k, iterations=em_iters,
-                          lambda_b=lambda_b)
-            if len(t) and (best is None
-                           or t["loglik"].iloc[0] > best["loglik"].iloc[0]):
-                best = t
-        if best is None:
-            return []
+        best = em_window_best(pd.Timestamp(window_start), seq_pdf,
+                              ids, p_all, k, runs=runs,
+                              iterations=em_iters, lambda_b=lambda_b)
         best = best[best["score"] > score_floor]
         return [
             (window_start, int(r.theme_id), float(r.loglik),

@@ -189,6 +189,45 @@ def test_rename_live_eq_delete_key(spark, tmp_path):
         drop_column(t, "key")
 
 
+def test_mor_merge_retry_across_concurrent_rename(spark, tmp_path,
+                                                 monkeypatch):
+    """A rename of the merge key lands between a merge-on-read commit
+    attempt and its retry: the retried delete entries still carry the
+    key's field id (resolved once from the validated parent, not from
+    the renamed snapshot) and the deletes apply under the new name."""
+    from bigdata_event_stream_detection_spark.sources import icelite
+
+    t = str(tmp_path / "t")
+    df = _df(spark)
+    create_table(t, df.schema)
+    append(df.repartition(2), t)
+    real_commit = icelite._commit_snapshot
+    raced = []
+
+    def racing_commit(path, snap):
+        if not raced and snap["operation"] == "merge-mor":
+            raced.append(snap["snapshot_id"])
+            rename_column(path, "k", "key")  # a concurrent writer wins
+            raise icelite.CommitConflict("lost the race")
+        return real_commit(path, snap)
+
+    monkeypatch.setattr(icelite, "_commit_snapshot", racing_commit)
+    src = (df.filter("k < 10")
+           .withColumn("v", F.col("v") + 100)
+           .withColumn("dead", F.col("k") % 3 == 0))
+    sid = merge_into(spark, t, src, key="k", delete_col="dead",
+                     strategy="merge-on-read")
+    assert raced and sid == raced[0] + 1  # exactly one retry
+    snap = icelite._load_snapshot(t, sid)
+    eq = [e for m in snap["delete_manifests"]
+          for e in icelite._load_manifest(t, m) if e["type"] == "eq"]
+    assert eq
+    assert all(e["kid"] == icelite._field_ids(snap)["key"] for e in eq)
+    got = {r["key"]: r["v"] for r in read_table(spark, t).collect()}
+    assert not {0, 3, 6, 9} & set(got)
+    assert got[1] == 101.0 and got[50] == 50.0 and len(got) == 96
+
+
 def test_rename_blocked_for_legacy_kidless_eq_entries(spark, tmp_path):
     """Entries written before the kid stamp (simulated by stripping it
     from the delete manifest) still require compact-first."""

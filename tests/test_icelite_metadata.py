@@ -29,6 +29,7 @@ from bigdata_event_stream_detection_spark.sources.icelite import (
     create_tag,
     merge_into,
     read_table,
+    rename_column,
     set_properties,
     snapshots,
     table_files,
@@ -138,6 +139,22 @@ def test_delete_files_after_mor_merge(spark, table):
     # aggregates them — both pre-delete counts, like Iceberg's
     files = read_metadata_table(spark, table, "files")
     assert files.agg(F.sum("record_count")).first()[0] == 600 + 45
+
+
+def test_delete_files_key_follows_rename(spark, table):
+    """After a metadata-only rename of a live equality-delete key, the
+    ``delete_files`` relation reports the key by its name in the pinned
+    snapshot's schema, not by its write-time name."""
+    src = (_rows(spark, 0, 50)
+           .withColumn("is_delete", F.col("k") % 10 == 0))
+    merged = merge_into(spark, table, src, key="k", delete_col="is_delete",
+                        strategy="merge-on-read")
+    rename_column(table, "k", "key")
+    dels = read_metadata_table(spark, table, "delete_files").collect()
+    assert dels and all(d["equality_key"] == "key" for d in dels)
+    pinned = read_metadata_table(spark, table, "delete_files",
+                                 version=merged).collect()
+    assert pinned and all(d["equality_key"] == "k" for d in pinned)
 
 
 def test_manifests_refs_properties(spark, table):

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -68,8 +71,8 @@ def test_decode_tokens_pass_through_byte_equal(tiny_sequences):
     seqs = win.filter_docs(tiny_sequences, min_tokens=PARAMS.min_doc_tokens)
     model = bg.background_model(seqs, min_count=PARAMS.min_word_corpus_count)
     windowed = win.with_time_window(seqs, length=PARAMS.window_length)
-    themes = em_ops.best_run_themes(em_ops.em_themes(
-        windowed, model, k=PARAMS.num_themes, iterations=PARAMS.em_iterations))
+    themes = em_ops.em_themes(
+        windowed, model, k=PARAMS.num_themes, iterations=PARAMS.em_iterations)
     decoded = hmm_ops.decode_tokens(windowed, themes, model,
                                     max_iterations=PARAMS.bw_max_iterations)
     joined = (
@@ -97,8 +100,7 @@ def test_decoded_states_track_planted_themes(tiny_sequences):
     seqs = win.filter_docs(tiny_sequences, min_tokens=50)
     model = bg.background_model(seqs, min_count=5)
     windowed = win.with_time_window(seqs, length="6 hours")
-    themes = em_ops.best_run_themes(em_ops.em_themes(
-        windowed, model, k=3, iterations=10))
+    themes = em_ops.em_themes(windowed, model, k=3, iterations=10)
     decoded = hmm_ops.decode_tokens(windowed, themes, model, max_iterations=8)
     pdf = decoded.limit(200).toPandas()
     agree = total = 0
@@ -132,11 +134,14 @@ def test_detect_events_theme_ids_survive_filter(tiny_sequences):
     seqs = win.filter_docs(tiny_sequences, min_tokens=PARAMS.min_doc_tokens)
     model = bg.background_model(seqs, min_count=PARAMS.min_word_corpus_count)
     windowed = win.with_time_window(seqs, length=PARAMS.window_length)
-    themes = em_ops.best_run_themes(em_ops.em_themes(
-        windowed, model, k=PARAMS.num_themes, iterations=PARAMS.em_iterations))
+    themes = em_ops.em_themes(
+        windowed, model, k=PARAMS.num_themes, iterations=PARAMS.em_iterations)
     surviving = themes.filter(F.col("theme_id") != 1)
-    events = hmm_ops.detect_events(windowed, surviving, model,
-                                   max_iterations=PARAMS.bw_max_iterations)
+    events = hmm_ops.doc_theme_counts(
+        windowed, surviving, model,
+        max_iterations=PARAMS.bw_max_iterations,
+    ).groupBy("window_start", "source", "theme_id").agg(
+        F.sum("strength").alias("strength"))
     rows = events.collect()
     assert rows
     ids = {r["theme_id"] for r in rows}
@@ -180,28 +185,60 @@ def test_em_themes_chunked_covers_all_docs(spark, tiny_sequences):
         assert n == truth[w]
 
 
-def test_fused_plan_matches_unfused(tiny_sequences):
-    """The em_runs==1 fused single-shuffle plan must emit exactly the
-    rows of the explicit em_themes -> filter_themes -> detect_events
-    composition (same kernels, same seeds, one shuffle instead of
-    two)."""
-    fused = _collect_events(detect_event_stream(tiny_sequences, PARAMS))
+def recompute_window_events(groups, bg_ids, bg_p, params):
+    """Single-node recomputation of the detection kernel, written out
+    step by step instead of calling the shared per-window helpers: fit
+    ``em_window`` once per run seed, keep the first max-loglik run,
+    apply the theme floor, decode with ``_decode_window`` and bincount
+    the states per source. ``groups`` yields (window_start, seq_pdf).
+    Returns (event rows, best run id per fitted window)."""
+    floor = params.theme_score_floor_factor / params.num_themes
+    rows, best_runs = [], []
+    for ws, seq_pdf in groups:
+        fits = [em_ops.em_window(
+                    ws, run, seq_pdf[["doc_id", "tokens"]], bg_ids, bg_p,
+                    params.num_themes, iterations=params.em_iterations,
+                    lambda_b=params.lambda_background)
+                for run in range(params.em_runs)]
+        if fits[0].empty:
+            continue
+        best = int(np.argmax([f["loglik"].iloc[0] for f in fits]))
+        best_runs.append(best)
+        themes = fits[best][fits[best]["score"] > floor]
+        by_src = {}
+        for src, _doc, _toks, states, tids in hmm_ops._decode_window(
+                seq_pdf, themes, bg_ids, bg_p, params.bw_max_iterations,
+                params.bw_pi_threshold, params.bw_a_threshold):
+            by_src.setdefault(src, ([], tids))[0].append(states)
+        for src, (states, tids) in sorted(by_src.items()):
+            cnt = np.bincount(np.concatenate(states))
+            rows += [(ws, src, int(tids[s - 1]), int(cnt[s]))
+                     for s in range(1, cnt.size) if cnt[s] > 0]
+    return rows, best_runs
 
-    seqs = win.filter_docs(
-        tiny_sequences, min_tokens=PARAMS.min_doc_tokens).persist()
+
+def test_detect_event_stream_matches_numpy_recompute(tiny_sequences):
+    """The one-shuffle plan emits exactly the rows of a step-by-step
+    numpy recomputation, for a single EM run and for best-of-3 (where
+    some window must pick a run other than 0, or the run selection
+    would go untested)."""
+    seqs = win.filter_docs(tiny_sequences, min_tokens=PARAMS.min_doc_tokens)
     model = em_ops.collect_background(bg.background_model(
         seqs, min_count=PARAMS.min_word_corpus_count))
-    windowed = win.with_time_window(seqs, length=PARAMS.window_length)
-    themes = em_ops.em_themes(
-        windowed, model, k=PARAMS.num_themes,
-        iterations=PARAMS.em_iterations,
-        lambda_b=PARAMS.lambda_background, runs=1)
-    themes = em_ops.filter_themes(
-        themes, PARAMS.num_themes, PARAMS.theme_score_floor_factor)
-    unfused = _collect_events(hmm_ops.detect_events(
-        windowed, themes, model,
-        max_iterations=PARAMS.bw_max_iterations,
-        pi_threshold=PARAMS.bw_pi_threshold,
-        a_threshold=PARAMS.bw_a_threshold))
-    seqs.unpersist()
-    assert fused == unfused
+    bg_ids, bg_p = em_ops._bg_arrays(model)
+    windowed = win.with_time_window(
+        seqs, length=PARAMS.window_length).select(
+        "window_start", "source", "doc_id", "event_time", "tokens"
+    ).toPandas()
+    groups = [(pd.Timestamp(ws), grp.drop(columns="window_start"))
+              for ws, grp in windowed.groupby("window_start", sort=True)]
+    for runs in (1, 3):
+        params = replace(PARAMS, em_runs=runs)
+        expected, best_runs = recompute_window_events(
+            groups, bg_ids, bg_p, params)
+        expected = sorted((ws.to_pydatetime(), src, tid, n)
+                          for ws, src, tid, n in expected)
+        got = _collect_events(detect_event_stream(tiny_sequences, params))
+        assert got == expected, f"em_runs={runs}"
+        if runs > 1:
+            assert any(best_runs)

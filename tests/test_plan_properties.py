@@ -147,3 +147,23 @@ def test_broadcast_join_on_small_dims(plans):
     plan = plans["revenue_per_nation"]
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+@pytest.mark.parametrize("em_runs", [1, 3])
+def test_detect_events_is_one_grouped_kernel(spark, em_runs):
+    """One shuffle for every configuration: the flagship plan holds
+    exactly one grouped pandas kernel and no cogroup, with one EM run
+    and with best-of-3 (run selection happens inside the kernel)."""
+    from dataclasses import replace
+
+    import __spark_entry__ as entry_mod
+    from bigdata_event_stream_detection_spark.plans.pipeline import (
+        detect_event_stream,
+    )
+
+    params = replace(entry_mod._small_params(), em_runs=em_runs)
+    plan = _formatted_plan(detect_event_stream(
+        entry_mod._documents_as_sequences(spark, SF_DIR), params))
+    ops = [op for _d, op, _n in _tree_nodes(plan)]
+    assert ops.count("FlatMapGroupsInPandas") == 1
+    assert "FlatMapCoGroupsInPandas" not in ops

@@ -194,27 +194,35 @@ def test_streaming_late_rows_dropped(spark, tmp_path):
 
 def test_streaming_detect_events_matches_batch(spark, stream_fixture):
     """The north-rule invariant: streaming (stateful, windowed,
-    watermarked) emits exactly the batch pipeline's event rows."""
+    watermarked) emits exactly the batch pipeline's event rows — for a
+    single EM run and for best-of-3, where the window close must pick
+    the same run as the batch plan (and on this fixture the pick
+    changes the rows)."""
+    from dataclasses import replace
+
     batch_df = stream_fixture["batch"]
     model = bg.background_model(
         batch_df.filter(F.col("n_tok") >= PARAMS.min_doc_tokens),
         min_count=PARAMS.min_word_corpus_count)
-    batch_events = detect_event_stream(batch_df, PARAMS)
-    batch_rows = {
-        (r["window_start"], r["source"], r["theme_id"]): r["strength"]
-        for r in batch_events.collect()}
-
-    stream = read_sequence_stream(spark, stream_fixture["dir"],
-                                  max_files_per_trigger=2)
-    events = streaming_detect_events(stream, model.toPandas(), PARAMS)
-    out = _run_to_memory(spark, events, "detect_stream", 300)
-    got = {(r["window_start"], r["source"], r["theme_id"]): r["strength"]
-           for r in out.collect()}
-    # The sentinel doc exists only on the streaming side and is 3 tokens
-    # (below min_doc_tokens=5) -> contributes nothing; its own window
-    # never closes but would emit nothing anyway. Every real window's
-    # rows must be IDENTICAL to batch.
-    assert got == batch_rows
+    results = []
+    for runs in (1, 3):
+        params = replace(PARAMS, em_runs=runs)
+        batch_rows = {
+            (r["window_start"], r["source"], r["theme_id"]): r["strength"]
+            for r in detect_event_stream(batch_df, params).collect()}
+        stream = read_sequence_stream(spark, stream_fixture["dir"],
+                                      max_files_per_trigger=2)
+        events = streaming_detect_events(stream, model.toPandas(), params)
+        out = _run_to_memory(spark, events, f"detect_stream_{runs}", 300)
+        got = {(r["window_start"], r["source"], r["theme_id"]):
+               r["strength"] for r in out.collect()}
+        # The sentinel doc exists only on the streaming side and is 3
+        # tokens (below min_doc_tokens=5) -> contributes nothing; its
+        # own window never closes but would emit nothing anyway. Every
+        # real window's rows must be IDENTICAL to batch.
+        assert got == batch_rows, f"em_runs={runs}"
+        results.append(got)
+    assert results[0] != results[1]
 
 
 def test_streaming_checkpoint_resume_exactly_once(spark, stream_fixture):
@@ -452,7 +460,6 @@ def test_streaming_detect_events_chunked_state(spark, stream_fixture):
     applied to grouped state): >1 state key per window, theme ids
     namespaced per chunk, and rows EQUAL to the batch chunked plan —
     per-chunk EM + decode with the shared full-corpus background."""
-    from bigdata_event_stream_detection_spark.operators import em as em_ops
     from bigdata_event_stream_detection_spark.operators import hmm as hmm_ops
     from bigdata_event_stream_detection_spark.operators import windows as win
 
@@ -468,14 +475,11 @@ def test_streaming_detect_events_chunked_state(spark, stream_fixture):
         sub = filtered.filter(
             F.pmod(F.xxhash64("doc_id"), F.lit(n_chunks)) == c)
         windowed = win.with_time_window(sub, length=PARAMS.window_length)
-        themes = em_ops.filter_themes(
-            em_ops.best_run_themes(em_ops.em_themes(
-                windowed, model_pdf, k=PARAMS.num_themes,
-                iterations=PARAMS.em_iterations,
-                lambda_b=PARAMS.lambda_background)),
-            PARAMS.num_themes, PARAMS.theme_score_floor_factor)
-        ev = hmm_ops.detect_events(
-            windowed, themes, model_pdf,
+        ev = hmm_ops.detect_events_pooled(
+            windowed, model_pdf, k=PARAMS.num_themes,
+            em_iterations=PARAMS.em_iterations,
+            lambda_b=PARAMS.lambda_background,
+            score_floor=PARAMS.theme_score_floor_factor / PARAMS.num_themes,
             max_iterations=PARAMS.bw_max_iterations,
             pi_threshold=PARAMS.bw_pi_threshold,
             a_threshold=PARAMS.bw_a_threshold)

@@ -67,8 +67,6 @@ def _batch_theme_rows(spark, batch_df):
         windowed, model, k=PARAMS.num_themes,
         iterations=PARAMS.em_iterations,
         lambda_b=PARAMS.lambda_background, runs=PARAMS.em_runs)
-    if PARAMS.em_runs > 1:
-        themes = em_ops.best_run_themes(themes)
     themes = em_ops.filter_themes(
         themes, PARAMS.num_themes, PARAMS.theme_score_floor_factor)
     return {

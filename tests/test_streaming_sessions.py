@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import time
+from dataclasses import replace
 
 import pandas as pd
 import pyarrow as pa
@@ -13,11 +14,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdata_event_stream_detection_spark.operators import background as bg
+from bigdata_event_stream_detection_spark.operators import em as em_ops
 from bigdata_event_stream_detection_spark.plans.pipeline import small_params
 from bigdata_event_stream_detection_spark.streaming.engine import (
     read_sequence_stream,
     streaming_detect_events_sessions,
 )
+from tests.test_pipeline import recompute_window_events
 from tests.test_streaming import ARROW_SCHEMA
 
 PARAMS = small_params(
@@ -83,3 +86,34 @@ def test_sessions_close_and_emit(spark, session_input):
     assert all(r["source"] == "A" for r in out if r["strength"])
     # strengths count only non-background decoded tokens
     assert all(r["strength"] > 0 for r in out)
+
+
+def test_sessions_best_of_3_match_recompute(spark, session_input):
+    """``em_runs=3`` reaches the session close: each closed session's
+    rows equal the step-by-step best-of-3 recomputation seeded by the
+    session start."""
+    params = replace(PARAMS, em_runs=3)
+    pdf = session_input["pdf"]
+    model = em_ops.collect_background(bg.background_model(
+        spark.createDataFrame(pdf).filter(
+            F.col("n_tok") >= params.min_doc_tokens),
+        min_count=params.min_word_corpus_count))
+    stream = read_sequence_stream(spark, session_input["dir"],
+                                  max_files_per_trigger=1)
+    events = streaming_detect_events_sessions(stream, model, params)
+    q = (events.writeStream.format("memory").queryName("sess_events_runs3")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    got = sorted((r["session_start"], r["source"], r["theme_id"],
+                  r["strength"])
+                 for r in spark.table("sess_events_runs3").collect())
+
+    t0 = pd.Timestamp("2015-01-01 00:00:00")
+    groups = [(start, pdf[pdf["doc_id"].str.startswith(prefix)])
+              for start, prefix in [(t0, "s1-"),
+                                    (t0 + pd.Timedelta(hours=3), "s2-")]]
+    bg_ids, bg_p = em_ops._bg_arrays(model)
+    expected, _ = recompute_window_events(groups, bg_ids, bg_p, params)
+    assert expected
+    assert got == sorted((ws.to_pydatetime(), src, tid, n)
+                         for ws, src, tid, n in expected)

@@ -25,9 +25,9 @@ def doc_counts(tiny_sequences):
     model = bg.background_model(seqs, min_count=PARAMS.min_word_corpus_count)
     windowed = win.with_time_window(seqs, length=PARAMS.window_length)
     themes = em_ops.filter_themes(
-        em_ops.best_run_themes(em_ops.em_themes(
+        em_ops.em_themes(
             windowed, model, k=PARAMS.num_themes,
-            iterations=PARAMS.em_iterations)),
+            iterations=PARAMS.em_iterations),
         PARAMS.num_themes, PARAMS.theme_score_floor_factor)
     dc = hmm_ops.doc_theme_counts(windowed, themes, model,
                                   max_iterations=PARAMS.bw_max_iterations)

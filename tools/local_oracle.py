@@ -8,8 +8,8 @@ kernels the Spark tasks run (``operators.em.em_window``,
 functions with deterministic seeds) orchestrated by pandas groupbys
 instead of Spark shuffles — and renders the expected rows as a DuckDB
 ``VALUES`` literal. What the comparison then checks is exactly the
-distributed plumbing: tokenization, window assignment, the cogrouped
-shuffle, broadcast alignment, and the state/theme-id mapping.
+distributed plumbing: tokenization, window assignment, the window
+shuffles, broadcast alignment, and the state/theme-id mapping.
 
 Reference semantics recomputed here: ThemesStrengthOverTime lifecycle
 (LifeCycleAnalyserSpark.java:161-266), KL transitions
