@@ -1,35 +1,62 @@
-"""Streaming CEP twins: the continuous forms of every pattern class in
-``operators/cep.py`` — absence, timeout/SLA (static and rules-table),
-Kleene-plus runs, and general MATCH_RECOGNIZE quantified sequences
-(static, rules-table, and DEFINE-predicate classified) — each with a
-required horizon so every pattern instance resolves exactly once at
-watermark finality.
+"""Streaming CEP twins: the continuous forms of the pattern classes in
+``operators/cep.py`` — timeout/SLA and absence (fixed or rules-table),
+Kleene-plus runs, and MATCH_RECOGNIZE quantified sequences (fixed,
+DEFINE-predicate classified, or rules-table). Every pattern instance
+resolves exactly once at watermark finality, with rows equal to the
+batch operator on the same drained input.
 
-Absence semantics (identical to batch): per key, every ``first``-typed event is
-an anchor; it matches if the earliest following ``then`` event (per-key
-(ts, event_id) order) has no ``without`` event between them and lands
-within ``within_seconds``. The horizon makes every anchor decidable in
-a stream, and event-time finality makes each one resolve exactly once:
+All seven run on ONE keyed-buffer state machine, ``_cep_state_stream``.
+It owns everything that is not pattern logic:
 
-* **match** is final once the watermark passes the matched then-event's
-  timestamp — any later arrival has ts >= watermark, so nothing can
-  slot between the anchor and its match, or earlier than the match;
-* **no-match via negation** is final once a ``without`` that precedes
-  every current ``then`` is itself behind the watermark;
-* **no-match via horizon** is final once the watermark passes
-  ``anchor + horizon``.
+* the state per key: a bounded buffer of ``(code, ts_us, event_id)``
+  triples — pattern roles only, never payloads — packed as binary
+  blobs like the engine's token buffers, plus the pattern's scalars (a
+  rule's horizon and spec, or the runs fold);
+* appending each micro-batch, and the bounded trim: past
+  ``max_events_in_state`` only the earliest events by (ts, event_id)
+  stay and the overflow is counted on ``dropped_events_acc``;
+* removing a key from the store once nothing is left (no tombstones:
+  every anchor is an independent pattern instance identified by its
+  event_id, and Spark's late-row filter stops replayed anchors from
+  re-entering), and the event-time wake-up, clamped past the watermark.
 
-State per key is a bounded buffer of (type_code, ts_us, event_id)
-triples — only the three pattern-relevant event types, never payloads —
-packed as binary blobs like the engine's token buffers. Anchors leave
-state the moment they resolve; non-anchor events are pruned once the
-watermark proves no current or future anchor can reach them (future
-anchors have ts >= watermark, so a then/without older than
-``watermark - horizon`` is dead). A key whose buffer empties is REMOVED
-from the store — no tombstones are needed because each anchor is an
-independent pattern instance identified by its event_id (unlike the
-funnel's once-per-user chain), and Spark's watermark filter stops
-replayed anchors from re-entering.
+Each pattern is a decision ``decide(key, code, us, eid, extra, wm_us)
+-> (rows, (code, us, eid), extra, fire_us)``; ``fire_us=None`` means
+nothing is left to wait for:
+
+* **timeout** (0 anchor / 1 silencer): an anchor alerts once the
+  watermark passes ``anchor + horizon``; a silencer buffered inside the
+  horizon retires it early and silently.
+* **absence** (0 anchor / 1 then / 2 without): a match is final once
+  the watermark passes the matched then-event (nothing can slot in
+  before it), a negation once the preceding without-event is behind
+  the watermark, a no-match once the watermark passes the horizon.
+* **runs** (1 target / 0 other): a fold — final events are consumed in
+  (ts, event_id) order into an open-run accumulator and leave state.
+* **seq**: ``operators.cep._seq_scan``, the scan batch uses too, with
+  the watermark as its decidability frontier.
+
+For timeout and absence, non-anchor events older than ``watermark -
+horizon`` are pruned: future anchors have ts >= watermark, so nothing
+can ever reach them.
+
+Keying. Rules tables become ROLES tables ``(rule_id, event_type, code,
+horizon_us[, steps])``, derived in SQL (so rules are re-read every
+micro-batch), deduplicated per rule, and attached with one broadcast
+join, so the stream is scanned once; state is keyed by (user, rule). An event playing two roles ("no repeat within
+T", "A then the next A") fans out one copy per role, and the
+strictly-after (ts, event_id) comparison keeps an anchor from matching
+its own copy. The fixed timeout and absence twins are one-rule tables
+on the same path. Fixed seq and runs classify with a column expression
+and stay keyed by user.
+
+Watermark rule, identical for all seven: every event of the input
+stream advances the watermark, not only pattern events (a stream of
+non-pattern events flushes pending anchors). The roles join sits above
+``withWatermark``; the expression filter reads the event-time column,
+because Catalyst pushes any filter that does not below the watermark.
+Only events with a NULL type never advance it in the roles twins
+(the join's inferred not-null filter is pushed down).
 """
 
 from __future__ import annotations
@@ -39,33 +66,318 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BinaryType, DoubleType, LongType, StringType, StructField,
-    StructType, TimestampType,
+
+from ..operators.cep import (
+    _parse_steps_spec, _seq_scan, _skip_past, _step_code_expr,
+    _validate_steps,
 )
 
-CEP_STATE_SCHEMA = StructType([
-    StructField("types", BinaryType()),     # int8 code: 0 first/1 then/2 wo
-    StructField("ts_us", BinaryType()),     # int64 event-time micros
-    StructField("eids", BinaryType()),      # int64 event ids (tie order)
-])
+# output schemas (DDL); each fixed twin's is its rules twin's minus rule_id
+RULES_OUT_SCHEMA = ("user_id long, rule_id string, first_event_id long, "
+                    "first_ts timestamp, deadline_ts timestamp")
+ABSENCE_RULES_OUT_SCHEMA = (
+    "user_id long, rule_id string, first_event_id long, "
+    "first_ts timestamp, then_ts timestamp, gap_sec double")
+RUNS_OUT_SCHEMA = ("user_id long, start_ts timestamp, end_ts timestamp, "
+                   "run_len long")
+SEQ_OUT_SCHEMA = ("user_id long, first_event_id long, start_ts timestamp, "
+                  "end_ts timestamp, n_events long, step_counts string")
+SEQ_RULES_OUT_SCHEMA = SEQ_OUT_SCHEMA.replace(
+    "user_id long,", "user_id long, rule_id string,")
 
-OUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("first_event_id", LongType()),
-    StructField("first_ts", TimestampType()),
-    StructField("then_ts", TimestampType()),
-    StructField("gap_sec", DoubleType()),
-])
+
+def _ts(us) -> pd.Timestamp:
+    return pd.Timestamp(int(us), unit="us")
 
 
-TIMEOUT_OUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("first_event_id", LongType()),
-    StructField("first_ts", TimestampType()),
-    StructField("deadline_ts", TimestampType()),
-])
+def _scalar(v):
+    return v.item() if isinstance(v, np.generic) else v
 
+
+def _cep_state_stream(keyed: DataFrame, decide, out_schema: str,
+                      extra_state_fields=(), max_events_in_state=10_000,
+                      rebase=None) -> DataFrame:
+    """Run ``decide`` per key over a bounded, watermark-driven buffer.
+
+    ``keyed`` carries ``user_id`` [, ``rule_id``] (the state key),
+    ``_ts``, ``_eid`` and ``_code``. ``extra_state_fields`` are
+    ``(name, ddl_type)`` state scalars next to the buffer: those that
+    are also columns of ``keyed`` are refreshed from every micro-batch
+    (a rule's horizon), the rest belong to the decision (the runs
+    fold). ``rebase(code, old, new)`` re-encodes the buffered codes when
+    refreshed scalars change; code -1 drops the event."""
+    names = [n for n, _ in extra_state_fields]
+    columns = [f.split()[0] for f in out_schema.split(",")]
+    keys = [c for c in ("user_id", "rule_id") if c in keyed.columns]
+    dropped_acc = keyed.sparkSession.sparkContext.accumulator(0)
+
+    def fn(key, pdf_iter, state: GroupState):
+        wm_us = state.getCurrentWatermarkMs() * 1000
+        if state.exists:
+            tb, ub, eb, *extra = state.get
+            code = np.frombuffer(tb, dtype=np.int8)
+            us = np.frombuffer(ub, dtype=np.int64)
+            eid = np.frombuffer(eb, dtype=np.int64)
+        else:
+            code = np.empty(0, np.int8)
+            us = eid = np.empty(0, np.int64)
+            extra = [None] * len(names)
+        parts = ([] if state.hasTimedOut
+                 else [pdf for pdf in pdf_iter if len(pdf)])
+        if parts:
+            tail = parts[-1]
+            new = [_scalar(tail[n].iloc[-1]) if n in tail.columns else x
+                   for n, x in zip(names, extra)]
+            if rebase is not None and state.exists and new != extra:
+                code = rebase(code, extra, new)
+                ok = code >= 0
+                code, us, eid = code[ok], us[ok], eid[ok]
+            extra = new
+            code = np.concatenate(
+                [code] + [p["_code"].to_numpy(np.int8) for p in parts])
+            us = np.concatenate([us] + [
+                p["_ts"].to_numpy("datetime64[ns]").astype(np.int64)
+                // 1_000 for p in parts])
+            eid = np.concatenate(
+                [eid] + [p["_eid"].to_numpy(np.int64) for p in parts])
+            if code.size > max_events_in_state:
+                dropped_acc.add(code.size - max_events_in_state)
+                keep = np.sort(
+                    np.lexsort((eid, us))[:max_events_in_state])
+                code, us, eid = code[keep], us[keep], eid[keep]
+
+        rows, (code, us, eid), extra, fire_us = decide(
+            key, code, us, eid, extra, wm_us)
+        if fire_us is None:
+            if state.exists:
+                state.remove()
+        else:
+            state.update((code.tobytes(), us.tobytes(), eid.tobytes(),
+                          *extra))
+            state.setTimeoutTimestamp(
+                max(fire_us // 1000 + 1, wm_us // 1000 + 1))
+        if rows:
+            yield pd.DataFrame(rows, columns=columns)
+
+    out = keyed.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType="types binary, ts_us binary, eids binary" + "".join(
+            f", {n} {t}" for n, t in extra_state_fields),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+    out.dropped_events_acc = dropped_acc
+    return out
+
+
+def _keyed(stream: DataFrame, time_col, key_col, type_col, id_col,
+           watermark_delay, roles: DataFrame | None = None, code=None):
+    """The skeleton's input. Every event is watermarked first, then
+    classified by ONE broadcast join against a roles table
+    ``(rule_id, _et, _code, ...)``, or by a ``code`` expression whose
+    null filter also reads the event time so that Catalyst cannot push
+    it below ``withWatermark``."""
+    ev = stream.withWatermark(time_col, watermark_delay).select(
+        F.col(key_col).alias("user_id"), F.col(time_col).alias("_ts"),
+        F.col(id_col).cast("long").alias("_eid"),
+        F.col(type_col).alias("_et") if roles is not None
+        else code.alias("_code"))
+    if roles is not None:
+        return ev.join(F.broadcast(roles), "_et").drop("_et")
+    return ev.filter(
+        F.when(F.col("_code").isNotNull(), F.col("_ts")).isNotNull())
+
+
+def _horizon_us():
+    return (F.round(F.col("within_seconds").cast("double") * 1e6)
+            .cast("long").alias("horizon_us"))
+
+
+def _roles(rules: DataFrame, *roles) -> DataFrame:
+    """Rules with one type column per role -> the roles table
+    ``(rule_id, _et, _code, horizon_us)``, deduplicated per rule (a
+    type named twice for one role plays it once); ``roles`` are
+    ``(column, code)`` pairs and NULL types play no role."""
+    return (rules.select("rule_id", _horizon_us(), F.inline(
+        F.array_distinct(F.array(*[
+            F.struct(F.col(c).alias("_et"),
+                     F.lit(code).cast("tinyint").alias("_code"))
+            for c, code in roles]))))
+        .filter(F.col("_et").isNotNull()))
+
+
+def _one_rule(stream: DataFrame, within_seconds, **types) -> DataFrame:
+    """A fixed pattern as a one-row rules table (rule_id ""), built in
+    the JVM so the per-micro-batch re-read starts no Python worker."""
+    return stream.sparkSession.range(1).select(
+        F.lit("").alias("rule_id"),
+        F.lit(float(within_seconds)).alias("within_seconds"),
+        *[F.lit(t).cast("string").alias(c) for c, t in types.items()])
+
+
+def _without_rule_id(out: DataFrame) -> DataFrame:
+    fixed = out.drop("rule_id")
+    fixed.dropped_events_acc = out.dropped_events_acc
+    return fixed
+
+
+# ---------------------------------------------------------------------------
+# pattern decisions
+# ---------------------------------------------------------------------------
+
+def _after(us, eid, t0, e0):
+    """(ts, eid) strictly after (t0, e0) — the batch sort order."""
+    return (us > t0) | ((us == t0) & (eid > e0))
+
+
+def _earliest(mask, us, eid):
+    j = np.flatnonzero(mask)
+    if not j.size:
+        return None
+    jj = j[np.lexsort((eid[j], us[j]))[0]]
+    return int(us[jj]), int(eid[jj])
+
+
+def _anchor_decision(judge):
+    """Decision of the per-anchor patterns (timeout, absence): code 0
+    marks an anchor and ``extra`` is ``(horizon_us,)``. ``judge``
+    returns the output row tail (emit, then retire), None (retire
+    silently) or the event time at which the anchor becomes
+    decidable."""
+    def decide(key, code, us, eid, extra, wm_us):
+        (h,) = extra
+        rows, keep, pending = [], np.ones(code.size, dtype=bool), []
+        for i in np.flatnonzero(code == 0):
+            verdict = judge(code, us, eid, int(us[i]), int(eid[i]), h,
+                            wm_us)
+            if isinstance(verdict, list):
+                rows.append([*key, *verdict])
+            elif verdict is not None:
+                pending.append(verdict)
+                continue
+            keep[i] = False
+        # a non-anchor event older than wm - horizon is strictly after
+        # no live or future anchor (live anchors have ts >= wm - horizon
+        # and ts ties resolve by event_id, so the boundary survives)
+        keep &= (code == 0) | (us >= wm_us - h)
+        code, us, eid = code[keep], us[keep], eid[keep]
+        fire = (min(pending) if pending
+                else int(us.min()) + h if us.size else None)
+        return rows, (code, us, eid), extra, fire
+    return decide
+
+
+def _timeout_judge(code, us, eid, f_us, f_eid, h, wm_us):
+    if ((code == 1) & _after(us, eid, f_us, f_eid)
+            & (us - f_us <= h)).any():
+        return None                       # answered early: never alerts
+    if wm_us > f_us + h:                  # deadline passed: alert once
+        return [f_eid, _ts(f_us), _ts(f_us + h)]
+    return f_us + h
+
+
+def _absence_judge(code, us, eid, f_us, f_eid, h, wm_us):
+    fol = _after(us, eid, f_us, f_eid)
+    t = _earliest(fol & (code == 1), us, eid)
+    w = _earliest(fol & (code == 2), us, eid)
+    if t is not None and (w is None or t < w) and t[0] - f_us <= h:
+        if t[0] < wm_us:                  # match final: emit + retire
+            return [f_eid, _ts(f_us), _ts(t[0]),
+                    round((t[0] - f_us) / 1e6, 6)]
+        return t[0]                       # match pending finality
+    if w is not None and w[0] < wm_us and (t is None or w < t):
+        return None                       # negation final
+    if wm_us > f_us + h:
+        return None                       # horizon final: no match
+    return f_us + h
+
+
+def _runs_decision(min_run, gap_us):
+    def decide(key, code, us, eid, extra, wm_us):
+        run_len, start_us, last_us = (x or 0 for x in extra)
+        order = np.lexsort((eid, us))
+        code, us, eid = code[order], us[order], eid[order]
+        final = us < wm_us
+        rows = []
+
+        def emit():
+            if run_len >= min_run:
+                rows.append([*key, _ts(start_us), _ts(last_us), run_len])
+
+        for i in np.flatnonzero(final):
+            t = int(us[i])
+            if code[i] == 1 and run_len and t - last_us <= gap_us:
+                run_len, last_us = run_len + 1, t
+                continue
+            emit()                        # a breaker or a gap closes it
+            if code[i] == 1:
+                run_len, start_us, last_us = 1, t, t
+            else:
+                run_len = 0
+        if run_len and wm_us > last_us + gap_us:
+            emit()                        # nothing can ever extend it
+            run_len = 0
+        code, us, eid = code[~final], us[~final], eid[~final]
+        # wake at the run's gap deadline or when the watermark can
+        # finalize more of the buffered out-of-order suffix
+        cand = ([last_us + gap_us] if run_len else []) + (
+            [int(us[0])] if us.size else [])
+        return (rows, (code, us, eid), (run_len, start_us, last_us),
+                min(cand) if cand else None)
+    return decide
+
+
+def _step_tids(types):
+    """Step-type codes: index of the type among the distinct types."""
+    tid_of = {t: i for i, t in enumerate(dict.fromkeys(types))}
+    return tid_of, [tid_of[t] for t in types]
+
+
+def _spec_pattern(spec: str):
+    labels, types, quants = _validate_steps(_parse_steps_spec(spec))
+    return labels, quants, _step_tids(types)[1]
+
+
+def _seq_rebase(code, old, new):
+    """A rule's spec string changed: re-encode its buffered codes under
+    the new spec; types absent from it leave the buffer (-1)."""
+    if old[0] == new[0]:
+        return code
+    types = [s[1] for s in _parse_steps_spec(old[0])]
+    new_of = _step_tids([s[1] for s in _parse_steps_spec(new[0])])[0]
+    return np.array([new_of.get(t, -1) for t in dict.fromkeys(types)],
+                    dtype=np.int8)[code]
+
+
+def _seq_decision(pattern, skip_past=True):
+    """``pattern(extra) -> (labels, quants, step_tids, horizon_us)``."""
+    def decide(key, code, us, eid, extra, wm_us):
+        labels, quants, step_tids, h = pattern(extra)
+        order = np.lexsort((eid, us))
+        code, us, eid = code[order], us[order], eid[order]
+        matches, consumed = _seq_scan(code, us, eid, step_tids, quants,
+                                      h, wm_us, skip_past)
+        # never drop the out-of-order suffix: a future anchor (ts >=
+        # watermark) may still be followed by buffered ts >= wm events
+        consumed = min(consumed, int(np.searchsorted(us, wm_us)))
+        rows = [[*key, int(eid[a]), _ts(us[a]), _ts(us[last]),
+                 int(sum(counts)),
+                 ",".join(f"{lb}={c}" for lb, c in zip(labels, counts))]
+                for a, last, counts in matches]
+        code, us, eid = code[consumed:], us[consumed:], eid[consumed:]
+        anchors = np.flatnonzero(code == step_tids[0])
+        # wake when the first pending anchor becomes decidable; a
+        # non-anchor suffix only waits to be pruned once final
+        fire = (int(us[anchors[0]]) + h if anchors.size
+                else int(us[0]) if us.size else None)
+        return rows, (code, us, eid), extra, fire
+    return decide
+
+
+# ---------------------------------------------------------------------------
+# the seven twins
+# ---------------------------------------------------------------------------
 
 def streaming_match_timeout(
     stream: DataFrame,
@@ -85,106 +397,57 @@ def streaming_match_timeout(
     ``then`` (nor ``unless``) event landed within the horizon — equal to
     the batch ``match_timeout`` rows, each exactly once.
 
-    Every anchor resolves at a single point: ``wm > first_ts + horizon``
-    (all in-horizon events are then final). A ``then``/``unless``
-    already buffered inside the horizon retires the anchor early and
-    silently — no alert can ever fire after that, so the state empties
-    as soon as the answer is known, not at the deadline.
+    A one-rule :func:`streaming_match_timeout_rules` in which ``unless``
+    is a second silencer type; ``first == then`` ("no repeat within
+    T") works like any rule whose types coincide.
     """
-    horizon_us = int(round(float(within_seconds) * 1e6))
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
-    watch = [t for t in (then, unless) if t is not None]
+    rules = _one_rule(stream, within_seconds, first_type=first,
+                      then_type=then, unless_type=unless)
+    return _without_rule_id(_timeout_stream(
+        _keyed(stream, time_col, key_col, type_col, id_col,
+               watermark_delay,
+               roles=_roles(rules, ("first_type", 0), ("then_type", 1),
+                            ("unless_type", 1))),
+        max_events_in_state))
 
-    def fn(key, pdf_iter, state: GroupState):
-        user = key[0]
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            tb, ub, eb = state.get
-            typ = np.frombuffer(tb, dtype=np.int8)
-            us = np.frombuffer(ub, dtype=np.int64)
-            eid = np.frombuffer(eb, dtype=np.int64)
-        else:
-            typ = np.empty(0, np.int8)
-            us = np.empty(0, np.int64)
-            eid = np.empty(0, np.int64)
 
-        if not state.hasTimedOut:
-            nt, nu, ne = [], [], []
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                nt.append(pdf["_code"].to_numpy(np.int8))
-                nu.append(pdf[time_col].to_numpy("datetime64[ns]")
-                          .astype(np.int64) // 1_000)
-                ne.append(pdf[id_col].to_numpy(np.int64))
-            if nt:
-                typ = np.concatenate([typ] + nt)
-                us = np.concatenate([us] + nu)
-                eid = np.concatenate([eid] + ne)
-                if typ.size > max_events_in_state:
-                    dropped_acc.add(typ.size - max_events_in_state)
-                    order = np.lexsort((eid, us))
-                    keep = np.sort(order[:max_events_in_state])
-                    typ, us, eid = typ[keep], us[keep], eid[keep]
+def streaming_match_timeout_rules(
+    stream: DataFrame,
+    rules: DataFrame,
+    time_col: str = "ts",
+    key_col: str = "user_id",
+    type_col: str = "event_type",
+    id_col: str = "event_id",
+    watermark_delay: str = "30 minutes",
+    max_events_in_state: int = 10_000,
+) -> DataFrame:
+    """Continuous dynamic-rules timeout CEP: the streaming twin of
+    ``operators.cep.match_timeout_rules``. Emits the same
+    ``(user_id, rule_id, first_event_id, first_ts, deadline_ts)`` rows,
+    each exactly once, at the moment the watermark passes the rule's
+    deadline.
 
-        rows = []
-        drop = np.zeros(typ.size, dtype=bool)
-        pending_deadline_us = []
-        for i in np.flatnonzero(typ == 0):
-            f_us, f_eid = int(us[i]), int(eid[i])
-            silencer = (
-                (typ > 0)
-                & ((us > f_us) | ((us == f_us) & (eid > f_eid)))
-                & (us - f_us <= horizon_us))
-            if silencer.any():
-                drop[i] = True            # answered early: never alerts
-            elif wm_us > f_us + horizon_us:
-                rows.append([user, f_eid,
-                             pd.Timestamp(f_us, unit="us"),
-                             pd.Timestamp(f_us + horizon_us, unit="us")])
-                drop[i] = True            # deadline passed: alert once
-            else:
-                pending_deadline_us.append(f_us + horizon_us)
+    ``rules(rule_id, first_type, then_type, within_seconds)`` is the
+    STATIC side of a stream-static join, re-read every micro-batch:
+    inserting a rule row starts matching it on the next trigger with no
+    redeploy (the broadcast-state idiom). Deleting a rule stops NEW
+    anchors immediately while already-buffered anchors still resolve
+    with the horizon stored in their group's state; changing a horizon
+    applies to a group the next time data for it arrives. State is
+    keyed by (user, rule) and stores the rule's own horizon, so a group
+    stays decidable on a pure timeout wake-up with no rules lookup.
+    """
+    return _timeout_stream(
+        _keyed(stream, time_col, key_col, type_col, id_col,
+               watermark_delay,
+               roles=_roles(rules, ("first_type", 0), ("then_type", 1))),
+        max_events_in_state)
 
-        keep = ~drop
-        # watched events only matter inside a live or future anchor's
-        # horizon; anchors are kept by their own pending deadline
-        keep &= (typ == 0) | (us >= wm_us - horizon_us)
-        typ, us, eid = typ[keep], us[keep], eid[keep]
 
-        if not typ.size:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((typ.tobytes(), us.tobytes(), eid.tobytes()))
-            fire_us = (min(pending_deadline_us) if pending_deadline_us
-                       else int(us.min()) + horizon_us)
-            state.setTimeoutTimestamp(
-                max(fire_us // 1000 + 1, wm_us // 1000 + 1))
-        if rows:
-            yield pd.DataFrame(rows, columns=[
-                "user_id", "first_event_id", "first_ts", "deadline_ts"])
-
-    pairs = [F.lit(first), F.lit(0)]
-    for w in watch:
-        pairs += [F.lit(w), F.lit(1)]
-    code_of = F.create_map(*pairs)
-    keyed = (
-        stream.withWatermark(time_col, watermark_delay)
-        .filter(F.col(type_col).isin([first] + watch))
-        .select(F.col(key_col).alias("user_id"), time_col,
-                F.col(id_col).cast("long").alias(id_col),
-                code_of[F.col(type_col)].cast("int").alias("_code"))
-    )
-    out = keyed.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=TIMEOUT_OUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out.dropped_events_acc = dropped_acc
-    return out
+def _timeout_stream(keyed, max_events_in_state):
+    return _cep_state_stream(
+        keyed, _anchor_decision(_timeout_judge), RULES_OUT_SCHEMA,
+        [("horizon_us", "long")], max_events_in_state)
 
 
 def streaming_match_absence(
@@ -202,144 +465,59 @@ def streaming_match_absence(
 ) -> DataFrame:
     """Emit ``(user_id, first_event_id, first_ts, then_ts, gap_sec)``
     rows equal to the batch ``match_absence(..., within_seconds=...)``
-    output on the same input, each exactly once."""
-    horizon_us = int(round(float(within_seconds) * 1e6))
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
-
-    def after(ts, eid, t0, e0):
-        """(ts, eid) strictly after (t0, e0) — the batch sort order."""
-        return (ts > t0) | ((ts == t0) & (eid > e0))
-
-    def fn(key, pdf_iter, state: GroupState):
-        user = key[0]
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            tb, ub, eb = state.get
-            typ = np.frombuffer(tb, dtype=np.int8)
-            us = np.frombuffer(ub, dtype=np.int64)
-            eid = np.frombuffer(eb, dtype=np.int64)
-        else:
-            typ = np.empty(0, np.int8)
-            us = np.empty(0, np.int64)
-            eid = np.empty(0, np.int64)
-
-        if not state.hasTimedOut:
-            nt, nu, ne = [], [], []
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                nt.append(pdf["_code"].to_numpy(np.int8))
-                nu.append(pdf[time_col].to_numpy("datetime64[ns]")
-                          .astype(np.int64) // 1_000)
-                ne.append(pdf[id_col].to_numpy(np.int64))
-            if nt:
-                typ = np.concatenate([typ] + nt)
-                us = np.concatenate([us] + nu)
-                eid = np.concatenate([eid] + ne)
-                if typ.size > max_events_in_state:
-                    dropped_acc.add(typ.size - max_events_in_state)
-                    order = np.lexsort((eid, us))
-                    keep = np.sort(order[:max_events_in_state])
-                    typ, us, eid = typ[keep], us[keep], eid[keep]
-
-        rows = []
-        drop = np.zeros(typ.size, dtype=bool)
-        pending_decision_us = []
-        for i in np.flatnonzero(typ == 0):
-            f_us, f_eid = int(us[i]), int(eid[i])
-            fol = after(us, eid, f_us, f_eid)
-            t_mask = fol & (typ == 1)
-            w_mask = fol & (typ == 2)
-            t_us = t_eid = None
-            if t_mask.any():
-                j = np.flatnonzero(t_mask)
-                jj = j[np.lexsort((eid[j], us[j]))[0]]
-                t_us, t_eid = int(us[jj]), int(eid[jj])
-            w_us = w_eid = None
-            if w_mask.any():
-                j = np.flatnonzero(w_mask)
-                jj = j[np.lexsort((eid[j], us[j]))[0]]
-                w_us, w_eid = int(us[jj]), int(eid[jj])
-            then_first = t_us is not None and (
-                w_us is None or (t_us, t_eid) < (w_us, w_eid))
-            if then_first and t_us - f_us <= horizon_us:
-                if t_us < wm_us:          # match final: emit + retire
-                    gap = round((t_us - f_us) / 1e6, 6)
-                    rows.append([user, int(f_eid),
-                                 pd.Timestamp(int(f_us), unit="us"),
-                                 pd.Timestamp(t_us, unit="us"), gap])
-                    drop[i] = True
-                else:                     # match pending finality
-                    pending_decision_us.append(t_us)
-            elif (w_us is not None and w_us < wm_us
-                  and (t_us is None or (w_us, w_eid) < (t_us, t_eid))):
-                drop[i] = True            # negation final: retire silently
-            elif wm_us > f_us + horizon_us:
-                drop[i] = True            # horizon final: no match
-            else:
-                pending_decision_us.append(f_us + horizon_us)
-
-        keep = ~drop
-        # non-anchor events older than watermark - horizon can never be
-        # strictly-after any live or future anchor (live anchors have
-        # f_us >= wm - horizon, and ties on ts are resolved by event_id,
-        # so the boundary itself must survive): provably dead below it
-        keep &= (typ == 0) | (us >= wm_us - horizon_us)
-        typ, us, eid = typ[keep], us[keep], eid[keep]
-
-        if not typ.size:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((typ.tobytes(), us.tobytes(), eid.tobytes()))
-            if pending_decision_us:
-                fire_us = min(pending_decision_us)
-            else:
-                # only non-anchor events: dead once wm passes ts+horizon
-                fire_us = int(us.min()) + horizon_us
-            state.setTimeoutTimestamp(
-                max(fire_us // 1000 + 1, wm_us // 1000 + 1))
-        if rows:
-            yield pd.DataFrame(rows, columns=[
-                "user_id", "first_event_id", "first_ts", "then_ts",
-                "gap_sec"])
-
-    code_of = F.create_map(
-        F.lit(first), F.lit(0), F.lit(then), F.lit(1),
-        F.lit(without), F.lit(2))
-    keyed = (
-        stream.withWatermark(time_col, watermark_delay)
-        .filter(F.col(type_col).isin([first, then, without]))
-        .select(F.col(key_col).alias("user_id"), time_col,
-                F.col(id_col).cast("long").alias(id_col),
-                code_of[F.col(type_col)].cast("int").alias("_code"))
-    )
-    out = keyed.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=OUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out.dropped_events_acc = dropped_acc
-    return out
+    output on the same input, each exactly once — a one-rule
+    :func:`streaming_match_absence_rules` ("A then the next A" included).
+    """
+    rules = _one_rule(stream, within_seconds, first_type=first,
+                      then_type=then, without_type=without)
+    return _without_rule_id(_absence_stream(
+        _keyed(stream, time_col, key_col, type_col, id_col,
+               watermark_delay, roles=_absence_roles(rules)),
+        max_events_in_state))
 
 
-RUNS_STATE_SCHEMA = StructType([
-    StructField("types", BinaryType()),     # int8: 1 target / 0 other
-    StructField("ts_us", BinaryType()),     # int64 event-time micros
-    StructField("eids", BinaryType()),      # int64 event ids (tie order)
-    StructField("run_len", LongType()),     # open-run accumulator
-    StructField("start_us", LongType()),
-    StructField("last_us", LongType()),
-])
+def streaming_match_absence_rules(
+    stream: DataFrame,
+    rules: DataFrame,
+    time_col: str = "ts",
+    key_col: str = "user_id",
+    type_col: str = "event_type",
+    id_col: str = "event_id",
+    watermark_delay: str = "30 minutes",
+    max_events_in_state: int = 10_000,
+) -> DataFrame:
+    """Continuous dynamic-rules absence CEP: the streaming twin of
+    ``operators.cep.match_absence_rules``, emitting the same
+    ``(user_id, rule_id, first_event_id, first_ts, then_ts, gap_sec)``
+    rows exactly once at watermark finality.
 
-RUNS_OUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("start_ts", TimestampType()),
-    StructField("end_ts", TimestampType()),
-    StructField("run_len", LongType()),
-])
+    Same architecture as :func:`streaming_match_timeout_rules` — rules
+    ``(rule_id, first_type, then_type, without_type, within_seconds)``
+    are the static side of a per-micro-batch join, state is keyed by
+    (user, rule) and stores the rule's horizon. ``then_type ==
+    without_type`` is rejected: the silencer would tie every match.
+    """
+    return _absence_stream(
+        _keyed(stream, time_col, key_col, type_col, id_col,
+               watermark_delay, roles=_absence_roles(rules)),
+        max_events_in_state)
+
+
+def _absence_roles(rules):
+    bad = rules.filter(
+        F.col("then_type") == F.col("without_type")).limit(1).collect()
+    if bad:
+        raise ValueError(
+            f"rule {bad[0]['rule_id']}: then_type == without_type "
+            "can never fire (the silencer ties every match)")
+    return _roles(rules, ("first_type", 0), ("then_type", 1),
+                  ("without_type", 2))
+
+
+def _absence_stream(keyed, max_events_in_state):
+    return _cep_state_stream(
+        keyed, _anchor_decision(_absence_judge), ABSENCE_RULES_OUT_SCHEMA,
+        [("horizon_us", "long")], max_events_in_state)
 
 
 def streaming_match_runs(
@@ -358,12 +536,10 @@ def streaming_match_runs(
     ``match_runs(..., max_gap_seconds=...)`` output on the same input,
     each exactly once.
 
-    Unlike the absence/timeout twins (which buffer every
-    pattern-relevant event across the horizon), run state is a FOLD:
-    events final under the watermark are consumed in (ts, event_id)
-    order into a 3-long accumulator (open-run length / start / last)
-    and leave state immediately — the buffer only ever holds the
-    out-of-order suffix (ts >= watermark). A run resolves exactly once:
+    Run state is a FOLD: events final under the watermark are consumed
+    in (ts, event_id) order into a 3-long accumulator (open-run length
+    / start / last) and leave state immediately — the buffer only holds
+    the out-of-order suffix (ts >= watermark). A run resolves once:
 
     * **broken** when a differently-typed or too-late event lands
       behind the watermark directly after it — the breaker is final, so
@@ -378,116 +554,13 @@ def streaming_match_runs(
         raise ValueError(
             f"max_gap_seconds={max_gap_seconds} must be positive — a "
             "finite positive gap is what makes trailing runs decidable")
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
-
-    def fn(key, pdf_iter, state: GroupState):
-        user = key[0]
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            tb, ub, eb, run_len, start_us, last_us = state.get
-            typ = np.frombuffer(tb, dtype=np.int8)
-            us = np.frombuffer(ub, dtype=np.int64)
-            eid = np.frombuffer(eb, dtype=np.int64)
-        else:
-            typ = np.empty(0, np.int8)
-            us = np.empty(0, np.int64)
-            eid = np.empty(0, np.int64)
-            run_len, start_us, last_us = 0, 0, 0
-
-        if not state.hasTimedOut:
-            nt, nu, ne = [], [], []
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                nt.append(pdf["_code"].to_numpy(np.int8))
-                nu.append(pdf[time_col].to_numpy("datetime64[ns]")
-                          .astype(np.int64) // 1_000)
-                ne.append(pdf[id_col].to_numpy(np.int64))
-            if nt:
-                typ = np.concatenate([typ] + nt)
-                us = np.concatenate([us] + nu)
-                eid = np.concatenate([eid] + ne)
-                if typ.size > max_events_in_state:
-                    dropped_acc.add(typ.size - max_events_in_state)
-                    order = np.lexsort((eid, us))
-                    keep = np.sort(order[:max_events_in_state])
-                    typ, us, eid = typ[keep], us[keep], eid[keep]
-
-        order = np.lexsort((eid, us))
-        typ, us, eid = typ[order], us[order], eid[order]
-        final = us < wm_us
-        rows = []
-
-        def close():
-            nonlocal run_len
-            if run_len >= min_run:
-                rows.append([user, pd.Timestamp(start_us, unit="us"),
-                             pd.Timestamp(last_us, unit="us"),
-                             run_len])
-            run_len = 0
-
-        for i in np.flatnonzero(final):
-            if typ[i] == 1:
-                if run_len and int(us[i]) - last_us <= gap_us:
-                    run_len += 1
-                else:
-                    close()
-                    run_len, start_us = 1, int(us[i])
-                last_us = int(us[i])
-            else:
-                close()
-        if run_len and wm_us > last_us + gap_us:
-            close()                      # nothing can ever extend it
-
-        keep = ~final
-        typ, us, eid = typ[keep], us[keep], eid[keep]
-        if not typ.size and not run_len:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((typ.tobytes(), us.tobytes(), eid.tobytes(),
-                          int(run_len), int(start_us), int(last_us)))
-            # poke at the earliest decision point: the run's gap
-            # deadline and/or the moment the watermark can finalize
-            # more of the buffered suffix
-            cand = []
-            if run_len:
-                cand.append(last_us + gap_us)
-            if us.size:
-                cand.append(int(us.min()))
-            fire_us = min(cand)
-            state.setTimeoutTimestamp(
-                max(fire_us // 1000 + 1, wm_us // 1000 + 1))
-        if rows:
-            yield pd.DataFrame(rows, columns=[
-                "user_id", "start_ts", "end_ts", "run_len"])
-
-    keyed = (
-        stream.withWatermark(time_col, watermark_delay)
-        .select(F.col(key_col).alias("user_id"), time_col,
-                F.col(id_col).cast("long").alias(id_col),
-                (F.col(type_col) == run_type).cast("tinyint")
-                .alias("_code"))
-    )
-    out = keyed.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=RUNS_OUT_SCHEMA,
-        stateStructType=RUNS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out.dropped_events_acc = dropped_acc
-    return out
-
-
-SEQ_OUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("first_event_id", LongType()),
-    StructField("start_ts", TimestampType()),
-    StructField("end_ts", TimestampType()),
-    StructField("n_events", LongType()),
-    StructField("step_counts", StringType()),
-])
+    return _cep_state_stream(
+        _keyed(stream, time_col, key_col, type_col, id_col,
+               watermark_delay,
+               code=(F.col(type_col) == run_type).cast("tinyint")),
+        _runs_decision(min_run, gap_us), RUNS_OUT_SCHEMA,
+        [("run_len", "long"), ("start_us", "long"), ("last_us", "long")],
+        max_events_in_state)
 
 
 def streaming_match_seq(
@@ -515,138 +588,27 @@ def streaming_match_seq(
     mandatory here (same reason ``streaming_match_runs`` requires a
     finite gap). The scan also returns how far the buffer can never
     matter again (events behind the first undecided anchor), clamped to
-    the finality frontier so out-of-order suffix events survive; state
-    per key is the bounded (type, ts, id) buffer between those two
-    frontiers, and a key whose buffer empties is REMOVED.
+    the finality frontier so out-of-order suffix events survive.
 
-    Note (applies to every CEP twin in this module): the type filter is
-    pushed below the watermark node by Catalyst, so only
-    pattern-relevant events advance the watermark — a quiet stream of
-    non-pattern events does not flush pending anchors. Feed the
-    pattern-relevant types, or union a heartbeat of one of them.
+    Every input event advances the watermark, pattern-relevant or not
+    (classify="predicate" included): the classifying filter stays above
+    ``withWatermark``, so a quiet stream of other events still flushes
+    pending anchors.
     """
-    from ..operators.cep import (
-        _seq_scan, _skip_past, _step_code_expr, _validate_steps,
-    )
-
     labels, types, quants = _validate_steps(steps)
     skip_past = _skip_past(after_match)
     horizon_us = int(round(float(within_seconds) * 1e6))
     if horizon_us <= 0:
         raise ValueError("within_seconds must be positive — the "
                          "horizon is what makes anchors decidable")
-    distinct_types = list(dict.fromkeys(types))
-    tid_of = {t: i for i, t in enumerate(distinct_types)}
-    step_tids = [tid_of[t] for t in types]
-    anchor_tid = step_tids[0]
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
-
-    def fn(key, pdf_iter, state: GroupState):
-        user = key[0]
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            tb, ub, eb = state.get
-            tid = np.frombuffer(tb, dtype=np.int8)
-            us = np.frombuffer(ub, dtype=np.int64)
-            eid = np.frombuffer(eb, dtype=np.int64)
-        else:
-            tid = np.empty(0, np.int8)
-            us = np.empty(0, np.int64)
-            eid = np.empty(0, np.int64)
-
-        if not state.hasTimedOut:
-            nt, nu, ne = [], [], []
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                nt.append(pdf["_tid"].to_numpy(np.int8))
-                nu.append(pdf[time_col].to_numpy("datetime64[ns]")
-                          .astype(np.int64) // 1_000)
-                ne.append(pdf[id_col].to_numpy(np.int64))
-            if nt:
-                tid = np.concatenate([tid] + nt)
-                us = np.concatenate([us] + nu)
-                eid = np.concatenate([eid] + ne)
-                if tid.size > max_events_in_state:
-                    dropped_acc.add(tid.size - max_events_in_state)
-                    order = np.lexsort((eid, us))
-                    keep = np.sort(order[:max_events_in_state])
-                    tid, us, eid = tid[keep], us[keep], eid[keep]
-
-        order = np.lexsort((eid, us))
-        tid, us, eid = tid[order], us[order], eid[order]
-        matches, consumed = _seq_scan(tid, us, eid, step_tids, quants,
-                                      horizon_us, wm_us, skip_past)
-        # never drop the out-of-order suffix: a future anchor (ts >=
-        # watermark) may still be followed by buffered ts >= wm events
-        consumed = min(consumed,
-                       int(np.searchsorted(us, wm_us, side="left")))
-        rows = []
-        for a, last, counts in matches:
-            rows.append([
-                user, int(eid[a]),
-                pd.Timestamp(int(us[a]), unit="us"),
-                pd.Timestamp(int(us[last]), unit="us"),
-                int(sum(counts)),
-                ",".join(f"{lb}={c}" for lb, c in zip(labels, counts)),
-            ])
-        tid, us, eid = tid[consumed:], us[consumed:], eid[consumed:]
-
-        if not tid.size:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((tid.tobytes(), us.tobytes(), eid.tobytes()))
-            anchors = np.flatnonzero(tid == anchor_tid)
-            if anchors.size:
-                # wake when the first pending anchor becomes decidable
-                fire_us = int(us[int(anchors[0])]) + horizon_us
-            else:
-                # only non-anchor suffix events: prune once final
-                fire_us = int(us.min())
-            state.setTimeoutTimestamp(
-                max(fire_us // 1000 + 1, wm_us // 1000 + 1))
-        if rows:
-            yield pd.DataFrame(rows, columns=[
-                "user_id", "first_event_id", "start_ts", "end_ts",
-                "n_events", "step_counts"])
-
-    keyed = (
-        stream.withWatermark(time_col, watermark_delay)
-        .select(F.col(key_col).alias("user_id"), time_col,
-                F.col(id_col).cast("long").alias(id_col),
-                _step_code_expr(tid_of, classify, type_col)
-                .alias("_tid"))
-        .filter(F.col("_tid").isNotNull())
-    )
-    out = keyed.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=SEQ_OUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out.dropped_events_acc = dropped_acc
-    return out
-
-
-SEQ_RULES_STATE_SCHEMA = StructType([
-    StructField("types", BinaryType()),     # int8 step-type codes
-    StructField("ts_us", BinaryType()),     # int64 event-time micros
-    StructField("eids", BinaryType()),      # int64 event ids (tie order)
-    StructField("steps", StringType()),     # the spec the codes use
-    StructField("horizon_us", LongType()),
-])
-
-SEQ_RULES_OUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("rule_id", StringType()),
-    StructField("first_event_id", LongType()),
-    StructField("start_ts", TimestampType()),
-    StructField("end_ts", TimestampType()),
-    StructField("n_events", LongType()),
-    StructField("step_counts", StringType()),
-])
+    tid_of, step_tids = _step_tids(types)
+    pattern = (labels, quants, step_tids, horizon_us)
+    return _cep_state_stream(
+        _keyed(stream, time_col, key_col, type_col, id_col,
+               watermark_delay,
+               code=_step_code_expr(tid_of, classify, type_col)),
+        _seq_decision(lambda extra: pattern, skip_past), SEQ_OUT_SCHEMA,
+        (), max_events_in_state)
 
 
 def streaming_match_seq_rules(
@@ -674,10 +636,6 @@ def streaming_match_seq_rules(
     data for it arrives (buffered types absent from the new spec are
     dropped); already-emitted matches are never retracted.
     """
-    from ..operators.cep import (
-        _parse_steps_spec, _seq_scan, _validate_steps,
-    )
-
     rrows = rules.select("rule_id", "steps", "within_seconds").collect()
     if not rrows:
         raise ValueError("rules table is empty")
@@ -686,446 +644,17 @@ def streaming_match_seq_rules(
         if not (float(r["within_seconds"]) > 0):
             raise ValueError(
                 f"rule {r['rule_id']}: within_seconds must be positive")
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
-
-    def fn(key, pdf_iter, state: GroupState):
-        user, rule = key
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            tb, ub, eb, spec, horizon_us = state.get
-            tid = np.frombuffer(tb, dtype=np.int8)
-            us = np.frombuffer(ub, dtype=np.int64)
-            eid = np.frombuffer(eb, dtype=np.int64)
-        else:
-            tid = np.empty(0, np.int8)
-            us = np.empty(0, np.int64)
-            eid = np.empty(0, np.int64)
-            spec, horizon_us = None, 0
-
-        if not state.hasTimedOut:
-            new_spec = None
-            nt, nu, ne = [], [], []
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                if new_spec is None:
-                    new_spec = pdf["_steps"].iloc[0]
-                    horizon_us = int(pdf["_horizon_us"].iloc[0])
-                    if spec is not None and new_spec != spec:
-                        # re-encode the buffer under the new spec
-                        old_types = [s[1] for s in
-                                     _parse_steps_spec(spec)]
-                        old_of = list(dict.fromkeys(old_types))
-                        new_steps = _parse_steps_spec(new_spec)
-                        new_of = {t: i for i, t in enumerate(
-                            dict.fromkeys(s[1] for s in new_steps))}
-                        remap = np.full(len(old_of), -1, np.int8)
-                        for i, t in enumerate(old_of):
-                            remap[i] = new_of.get(t, -1)
-                        tid = remap[tid]
-                        keep = tid >= 0
-                        tid, us, eid = tid[keep], us[keep], eid[keep]
-                    spec = new_spec
-                steps = _parse_steps_spec(spec)
-                t_of = {t: i for i, t in enumerate(
-                    dict.fromkeys(s[1] for s in steps))}
-                codes = pdf[type_col].map(t_of)
-                ok = codes.notna().to_numpy()
-                nt.append(codes.to_numpy(np.float64)[ok]
-                          .astype(np.int8))
-                nu.append(pdf[time_col].to_numpy("datetime64[ns]")
-                          .astype(np.int64)[ok] // 1_000)
-                ne.append(pdf[id_col].to_numpy(np.int64)[ok])
-            if nt:
-                tid = np.concatenate([tid] + nt)
-                us = np.concatenate([us] + nu)
-                eid = np.concatenate([eid] + ne)
-                if tid.size > max_events_in_state:
-                    dropped_acc.add(tid.size - max_events_in_state)
-                    order = np.lexsort((eid, us))
-                    keep = np.sort(order[:max_events_in_state])
-                    tid, us, eid = tid[keep], us[keep], eid[keep]
-
-        if spec is None:        # timed out before ever seeing data
-            if state.exists:
-                state.remove()
-            return
-        steps = _parse_steps_spec(spec)
-        labels, types, quants = _validate_steps(steps)
-        t_of = {t: i for i, t in enumerate(dict.fromkeys(types))}
-        step_tids = [t_of[t] for t in types]
-        order = np.lexsort((eid, us))
-        tid, us, eid = tid[order], us[order], eid[order]
-        matches, consumed = _seq_scan(tid, us, eid, step_tids, quants,
-                                      horizon_us, wm_us)
-        consumed = min(consumed,
-                       int(np.searchsorted(us, wm_us, side="left")))
-        rows = []
-        for a, last, counts in matches:
-            rows.append([
-                user, rule, int(eid[a]),
-                pd.Timestamp(int(us[a]), unit="us"),
-                pd.Timestamp(int(us[last]), unit="us"),
-                int(sum(counts)),
-                ",".join(f"{lb}={c}" for lb, c in zip(labels, counts)),
-            ])
-        tid, us, eid = tid[consumed:], us[consumed:], eid[consumed:]
-
-        if not tid.size:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((tid.tobytes(), us.tobytes(), eid.tobytes(),
-                          spec, int(horizon_us)))
-            anchors = np.flatnonzero(tid == step_tids[0])
-            if anchors.size:
-                fire_us = int(us[int(anchors[0])]) + horizon_us
-            else:
-                fire_us = int(us.min())
-            state.setTimeoutTimestamp(
-                max(fire_us // 1000 + 1, wm_us // 1000 + 1))
-        if rows:
-            yield pd.DataFrame(rows, columns=[
-                "user_id", "rule_id", "first_event_id", "start_ts",
-                "end_ts", "n_events", "step_counts"])
-
-    r = rules.select(
-        "rule_id", F.col("steps").alias("_steps"),
-        F.round(F.col("within_seconds").cast("double") * 1e6)
-        .cast("long").alias("_horizon_us"))
-    membership = (r.select(
-        "rule_id",
-        F.explode(F.transform(
-            F.split("_steps", ","),
-            lambda p: F.trim(F.regexp_extract(p, r"^(.*):[^:]*$", 1))))
-        .alias("_et"))
-        .distinct())
-    keyed = (
-        stream.withWatermark(time_col, watermark_delay)
-        .join(F.broadcast(membership), F.col(type_col) == F.col("_et"))
-        .join(F.broadcast(r), "rule_id")
-        .select(F.col(key_col).alias("user_id"), "rule_id", time_col,
-                F.col(id_col).cast("long").alias(id_col), type_col,
-                "_steps", "_horizon_us")
-    )
-    out = keyed.groupBy("user_id", "rule_id").applyInPandasWithState(
-        fn,
-        outputStructType=SEQ_RULES_OUT_SCHEMA,
-        stateStructType=SEQ_RULES_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out.dropped_events_acc = dropped_acc
-    return out
-
-
-RULES_STATE_SCHEMA = StructType([
-    StructField("types", BinaryType()),     # int8: 0 anchor / 1 silencer
-    StructField("ts_us", BinaryType()),     # int64 event-time micros
-    StructField("eids", BinaryType()),      # int64 event ids (tie order)
-    StructField("horizon_us", LongType()),  # this rule's own horizon
-])
-
-RULES_OUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("rule_id", StringType()),
-    StructField("first_event_id", LongType()),
-    StructField("first_ts", TimestampType()),
-    StructField("deadline_ts", TimestampType()),
-])
-
-
-def streaming_match_timeout_rules(
-    stream: DataFrame,
-    rules: DataFrame,
-    time_col: str = "ts",
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    watermark_delay: str = "30 minutes",
-    max_events_in_state: int = 10_000,
-) -> DataFrame:
-    """Continuous dynamic-rules timeout CEP: the streaming twin of
-    ``operators.cep.match_timeout_rules``. Emits the same
-    ``(user_id, rule_id, first_event_id, first_ts, deadline_ts)`` rows,
-    each exactly once, at the moment the watermark passes the rule's
-    deadline.
-
-    ``rules`` is the STATIC side of a stream-static join, re-read every
-    micro-batch: inserting a rule row starts matching it on the next
-    trigger with no redeploy (the broadcast-state idiom). Deleting a
-    rule stops NEW anchors immediately while already-buffered anchors
-    still resolve with the horizon stored in their group's state;
-    changing a horizon applies to a group the next time data for it
-    arrives. State is
-    keyed by (user, rule) — the key space is |users| x |matching
-    rules|, strictly more parallel than the single-pattern twin — and
-    each group stores the rule's own horizon alongside the usual
-    bounded event buffer, so a group stays decidable on a pure timeout
-    wake-up with no rules lookup.
-    """
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
-
-    def fn(key, pdf_iter, state: GroupState):
-        user, rule = key
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            tb, ub, eb, horizon_us = state.get
-            typ = np.frombuffer(tb, dtype=np.int8)
-            us = np.frombuffer(ub, dtype=np.int64)
-            eid = np.frombuffer(eb, dtype=np.int64)
-        else:
-            typ = np.empty(0, np.int8)
-            us = np.empty(0, np.int64)
-            eid = np.empty(0, np.int64)
-            horizon_us = 0
-
-        if not state.hasTimedOut:
-            nt, nu, ne = [], [], []
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                nt.append(pdf["_code"].to_numpy(np.int8))
-                nu.append(pdf[time_col].to_numpy("datetime64[ns]")
-                          .astype(np.int64) // 1_000)
-                ne.append(pdf[id_col].to_numpy(np.int64))
-                horizon_us = int(pdf["_horizon_us"].iloc[0])
-            if nt:
-                typ = np.concatenate([typ] + nt)
-                us = np.concatenate([us] + nu)
-                eid = np.concatenate([eid] + ne)
-                if typ.size > max_events_in_state:
-                    dropped_acc.add(typ.size - max_events_in_state)
-                    order = np.lexsort((eid, us))
-                    keep = np.sort(order[:max_events_in_state])
-                    typ, us, eid = typ[keep], us[keep], eid[keep]
-
-        rows = []
-        drop = np.zeros(typ.size, dtype=bool)
-        pending_deadline_us = []
-        for i in np.flatnonzero(typ == 0):
-            f_us, f_eid = int(us[i]), int(eid[i])
-            silencer = (
-                (typ == 1)
-                & ((us > f_us) | ((us == f_us) & (eid > f_eid)))
-                & (us - f_us <= horizon_us))
-            if silencer.any():
-                drop[i] = True            # answered early: never alerts
-            elif wm_us > f_us + horizon_us:
-                rows.append([user, rule, f_eid,
-                             pd.Timestamp(f_us, unit="us"),
-                             pd.Timestamp(f_us + horizon_us,
-                                          unit="us")])
-                drop[i] = True            # deadline passed: alert once
-            else:
-                pending_deadline_us.append(f_us + horizon_us)
-
-        keep = ~drop
-        # silencers only matter inside a live or future anchor's
-        # horizon; anchors are kept by their own pending deadline
-        keep &= (typ == 0) | (us >= wm_us - horizon_us)
-        typ, us, eid = typ[keep], us[keep], eid[keep]
-
-        if not typ.size:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((typ.tobytes(), us.tobytes(), eid.tobytes(),
-                          int(horizon_us)))
-            fire_us = (min(pending_deadline_us) if pending_deadline_us
-                       else int(us.min()) + horizon_us)
-            state.setTimeoutTimestamp(
-                max(fire_us // 1000 + 1, wm_us // 1000 + 1))
-        if rows:
-            yield pd.DataFrame(rows, columns=[
-                "user_id", "rule_id", "first_event_id", "first_ts",
-                "deadline_ts"])
-
-    r = rules.select(
-        "rule_id", "first_type", "then_type",
-        F.round(F.col("within_seconds").cast("double") * 1e6)
-        .cast("long").alias("_horizon_us"))
-    base = (stream.withWatermark(time_col, watermark_delay)
-            .select(F.col(key_col).alias("user_id"), time_col,
-                    F.col(id_col).cast("long").alias(id_col),
-                    type_col))
-    anchors = base.join(
-        F.broadcast(r), F.col(type_col) == F.col("first_type")) \
-        .withColumn("_code", F.lit(0).cast("tinyint"))
-    silencers = base.join(
-        F.broadcast(r), F.col(type_col) == F.col("then_type")) \
-        .withColumn("_code", F.lit(1).cast("tinyint"))
-    keyed = anchors.unionByName(silencers).select(
-        "user_id", "rule_id", time_col, id_col, "_code", "_horizon_us")
-    out = keyed.groupBy("user_id", "rule_id").applyInPandasWithState(
-        fn,
-        outputStructType=RULES_OUT_SCHEMA,
-        stateStructType=RULES_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out.dropped_events_acc = dropped_acc
-    return out
-
-
-ABSENCE_RULES_OUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("rule_id", StringType()),
-    StructField("first_event_id", LongType()),
-    StructField("first_ts", TimestampType()),
-    StructField("then_ts", TimestampType()),
-    StructField("gap_sec", DoubleType()),
-])
-
-
-def streaming_match_absence_rules(
-    stream: DataFrame,
-    rules: DataFrame,
-    time_col: str = "ts",
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    watermark_delay: str = "30 minutes",
-    max_events_in_state: int = 10_000,
-) -> DataFrame:
-    """Continuous dynamic-rules absence CEP: the streaming twin of
-    ``operators.cep.match_absence_rules``, emitting the same
-    ``(user_id, rule_id, first_event_id, first_ts, then_ts, gap_sec)``
-    rows exactly once at watermark finality.
-
-    Same architecture as :func:`streaming_match_timeout_rules` —
-    rules are the static side of a per-micro-batch join, state is
-    keyed by (user, rule) and stores the rule's horizon — but events
-    fan out to one buffered copy PER ROLE (anchor 0 / then 1 /
-    without 2): a rule whose first and then types coincide ("A then
-    the next A") buffers an A twice, and the strictly-after
-    (ts, event_id) comparison keeps an anchor from matching its own
-    copy, mirroring the batch frame semantics with no special cases.
-    """
-    bad = rules.filter(
-        F.col("then_type") == F.col("without_type")).limit(1).collect()
-    if bad:
-        raise ValueError(
-            f"rule {bad[0]['rule_id']}: then_type == without_type "
-            "can never fire (the silencer ties every match)")
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
-
-    def fn(key, pdf_iter, state: GroupState):
-        user, rule = key
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            tb, ub, eb, horizon_us = state.get
-            typ = np.frombuffer(tb, dtype=np.int8)
-            us = np.frombuffer(ub, dtype=np.int64)
-            eid = np.frombuffer(eb, dtype=np.int64)
-        else:
-            typ = np.empty(0, np.int8)
-            us = np.empty(0, np.int64)
-            eid = np.empty(0, np.int64)
-            horizon_us = 0
-
-        if not state.hasTimedOut:
-            nt, nu, ne = [], [], []
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                nt.append(pdf["_code"].to_numpy(np.int8))
-                nu.append(pdf[time_col].to_numpy("datetime64[ns]")
-                          .astype(np.int64) // 1_000)
-                ne.append(pdf[id_col].to_numpy(np.int64))
-                horizon_us = int(pdf["_horizon_us"].iloc[0])
-            if nt:
-                typ = np.concatenate([typ] + nt)
-                us = np.concatenate([us] + nu)
-                eid = np.concatenate([eid] + ne)
-                if typ.size > max_events_in_state:
-                    dropped_acc.add(typ.size - max_events_in_state)
-                    order = np.lexsort((eid, us))
-                    keep = np.sort(order[:max_events_in_state])
-                    typ, us, eid = typ[keep], us[keep], eid[keep]
-
-        def after(ts, ei, t0, e0):
-            return (ts > t0) | ((ts == t0) & (ei > e0))
-
-        rows = []
-        drop = np.zeros(typ.size, dtype=bool)
-        pending_decision_us = []
-        for i in np.flatnonzero(typ == 0):
-            f_us, f_eid = int(us[i]), int(eid[i])
-            fol = after(us, eid, f_us, f_eid)
-            t_mask = fol & (typ == 1)
-            w_mask = fol & (typ == 2)
-            t_us = t_eid = None
-            if t_mask.any():
-                j = np.flatnonzero(t_mask)
-                jj = j[np.lexsort((eid[j], us[j]))[0]]
-                t_us, t_eid = int(us[jj]), int(eid[jj])
-            w_us = w_eid = None
-            if w_mask.any():
-                j = np.flatnonzero(w_mask)
-                jj = j[np.lexsort((eid[j], us[j]))[0]]
-                w_us, w_eid = int(us[jj]), int(eid[jj])
-            then_first = t_us is not None and (
-                w_us is None or (t_us, t_eid) < (w_us, w_eid))
-            if then_first and t_us - f_us <= horizon_us:
-                if t_us < wm_us:          # match final: emit + retire
-                    gap = round((t_us - f_us) / 1e6, 6)
-                    rows.append([user, rule, int(f_eid),
-                                 pd.Timestamp(int(f_us), unit="us"),
-                                 pd.Timestamp(t_us, unit="us"), gap])
-                    drop[i] = True
-                else:                     # match pending finality
-                    pending_decision_us.append(t_us)
-            elif (w_us is not None and w_us < wm_us
-                  and (t_us is None or (w_us, w_eid) < (t_us, t_eid))):
-                drop[i] = True            # negation final: retire silently
-            elif wm_us > f_us + horizon_us:
-                drop[i] = True            # horizon final: no match
-            else:
-                pending_decision_us.append(f_us + horizon_us)
-
-        keep = ~drop
-        keep &= (typ == 0) | (us >= wm_us - horizon_us)
-        typ, us, eid = typ[keep], us[keep], eid[keep]
-
-        if not typ.size:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((typ.tobytes(), us.tobytes(), eid.tobytes(),
-                          int(horizon_us)))
-            fire_us = (min(pending_decision_us) if pending_decision_us
-                       else int(us.min()) + horizon_us)
-            state.setTimeoutTimestamp(
-                max(fire_us // 1000 + 1, wm_us // 1000 + 1))
-        if rows:
-            yield pd.DataFrame(rows, columns=[
-                "user_id", "rule_id", "first_event_id", "first_ts",
-                "then_ts", "gap_sec"])
-
-    r = rules.select(
-        "rule_id", "first_type", "then_type", "without_type",
-        F.round(F.col("within_seconds").cast("double") * 1e6)
-        .cast("long").alias("_horizon_us"))
-    base = (stream.withWatermark(time_col, watermark_delay)
-            .select(F.col(key_col).alias("user_id"), time_col,
-                    F.col(id_col).cast("long").alias(id_col),
-                    type_col))
-    roles = []
-    for code, rcol in ((0, "first_type"), (1, "then_type"),
-                       (2, "without_type")):
-        roles.append(base.join(
-            F.broadcast(r), F.col(type_col) == F.col(rcol))
-            .withColumn("_code", F.lit(code).cast("tinyint")))
-    keyed = roles[0].unionByName(roles[1]).unionByName(roles[2]) \
-        .select("user_id", "rule_id", time_col, id_col, "_code",
-                "_horizon_us")
-    out = keyed.groupBy("user_id", "rule_id").applyInPandasWithState(
-        fn,
-        outputStructType=ABSENCE_RULES_OUT_SCHEMA,
-        stateStructType=RULES_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out.dropped_events_acc = dropped_acc
-    return out
+    # the spec's distinct step types in first-appearance order, each
+    # coded by its position — the same codes _step_tids assigns
+    types = F.array_distinct(F.transform(
+        F.split("steps", ","),
+        lambda p: F.trim(F.regexp_extract(p, r"^(.*):[^:]*$", 1))))
+    roles = (rules.select("rule_id", "steps", _horizon_us(),
+                          F.posexplode(types).alias("_code", "_et"))
+             .withColumn("_code", F.col("_code").cast("tinyint")))
+    return _cep_state_stream(
+        _keyed(stream, time_col, key_col, type_col, id_col,
+               watermark_delay, roles=roles),
+        _seq_decision(lambda extra: (*_spec_pattern(extra[0]), extra[1])),
+        SEQ_RULES_OUT_SCHEMA, [("steps", "string"), ("horizon_us", "long")],
+        max_events_in_state, rebase=_seq_rebase)

@@ -167,3 +167,56 @@ def test_detect_events_is_one_grouped_kernel(spark, em_runs):
     ops = [op for _d, op, _n in _tree_nodes(plan)]
     assert ops.count("FlatMapGroupsInPandas") == 1
     assert "FlatMapCoGroupsInPandas" not in ops
+
+
+def _cep_twins(spark, stream):
+    from bigdata_event_stream_detection_spark.streaming import cep
+
+    timeout_rules = spark.createDataFrame(
+        [("r1", "A", "B", 60.0), ("r2", "B", "B", 60.0)],
+        "rule_id string, first_type string, then_type string,"
+        " within_seconds double")
+    absence_rules = spark.createDataFrame(
+        [("r1", "A", "B", "C", 60.0), ("r2", "A", "A", "C", 60.0)],
+        "rule_id string, first_type string, then_type string,"
+        " without_type string, within_seconds double")
+    seq_rules = spark.createDataFrame(
+        [("r1", "A:1,B:+", 60.0)],
+        "rule_id string, steps string, within_seconds double")
+    return {
+        "timeout": lambda: cep.streaming_match_timeout(
+            stream, "A", "B", 60.0, unless="C"),
+        "timeout_rules": lambda: cep.streaming_match_timeout_rules(
+            stream, timeout_rules),
+        "absence": lambda: cep.streaming_match_absence(
+            stream, "A", "B", "C", 60.0),
+        "absence_rules": lambda: cep.streaming_match_absence_rules(
+            stream, absence_rules),
+        "runs": lambda: cep.streaming_match_runs(stream, "A"),
+        "seq": lambda: cep.streaming_match_seq(
+            stream, [("a", "A", "1"), ("b", "B", "+")], 60.0),
+        "seq_rules": lambda: cep.streaming_match_seq_rules(
+            stream, seq_rules),
+    }
+
+
+@pytest.mark.parametrize("twin", [
+    "timeout", "timeout_rules", "absence", "absence_rules", "runs", "seq",
+    "seq_rules"])
+def test_streaming_cep_twin_scans_once(spark, tmp_path, twin):
+    """Every streaming CEP twin reads its stream ONCE (role fan-out is a
+    single broadcast join, never a union of per-role scans) and runs
+    ONE grouped-state operator."""
+    import pandas as pd
+
+    pd.DataFrame({"user_id": [1], "event_id": [1],
+                  "ts": [pd.Timestamp("2024-06-01")],
+                  "event_type": ["A"]}).to_parquet(tmp_path / "ev.parquet")
+    stream = (spark.readStream
+              .schema("user_id long, event_id long, ts timestamp,"
+                      " event_type string")
+              .parquet(str(tmp_path)))
+    plan = _formatted_plan(_cep_twins(spark, stream)[twin]())
+    ops = [op for _d, op, _n in _tree_nodes(plan)]
+    assert ops.count("StreamingRelation") == 1, plan
+    assert ops.count("FlatMapGroupsInPandasWithState") == 1, plan

@@ -16,6 +16,7 @@ from datetime import datetime, timedelta
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_event_stream_detection_spark.operators.cep import (
@@ -106,6 +107,18 @@ def test_streaming_match_absence_matches_batch(spark, tmp_path):
     assert {g[0] for g in got} == {1, 4, 5, 6}
     assert len([g for g in got if g[0] == 5]) == 2
     assert out.dropped_events_acc.value == 0
+
+    # a type playing two roles ("A then the next A"): one buffered copy
+    # per role, and an anchor never matches its own copy
+    aa = streaming_match_absence(_read(spark, d), "A", "A", "C", WITHIN)
+    q = (aa.writeStream.format("memory").queryName("cep_s_aa")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    truth_aa = _rows(match_absence(
+        spark.createDataFrame(pdf), "A", "A", "C",
+        within_seconds=WITHIN).collect())
+    assert truth_aa
+    assert _rows(spark.table("cep_s_aa").collect()) == truth_aa
 
 
 def test_streaming_match_absence_resumes_from_checkpoint(spark, tmp_path):
@@ -266,6 +279,23 @@ def test_streaming_match_timeout_matches_batch(spark, tmp_path):
     # their deadline; only the sentinel anchor remains
     progress = q.lastProgress or q.recentProgress[-1]
     assert progress["stateOperators"][0]["numRowsTotal"] == 1
+
+    # "no repeat within T" (first == then): the anchor's silencer copy
+    # of itself is not strictly after it
+    aa = streaming_match_timeout(_read(spark, d), "A", "A",
+                                 within_seconds=WITHIN)
+    q = (aa.writeStream.format("memory").queryName("cep_to_aa")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    truth_aa = {(r["user_id"], r["first_event_id"], r["first_ts"],
+                 r["deadline_ts"])
+                for r in match_timeout(
+                    spark.createDataFrame(pdf), "A", "A",
+                    within_seconds=WITHIN).collect()}
+    assert truth_aa
+    assert {(r["user_id"], r["first_event_id"], r["first_ts"],
+             r["deadline_ts"])
+            for r in spark.table("cep_to_aa").collect()} == truth_aa
 
 
 def _run_rows(collected):
@@ -1016,3 +1046,134 @@ def test_streaming_match_seq_next_row_chunking_parity(spark, tmp_path):
         after_match="next_row").collect())
     assert got == truth
     assert out.dropped_events_acc.value == 0
+
+
+def test_fixed_twins_flush_on_non_pattern_sentinel(spark, tmp_path):
+    """Every input event advances the watermark in every twin: a stream
+    ending in a non-pattern ('noise') sentinel still resolves pending
+    anchors, and the fixed timeout/absence twins equal batch AND their
+    one-rule rules twin without rule_id."""
+    from bigdata_event_stream_detection_spark.operators.cep import (
+        match_timeout,
+    )
+    from bigdata_event_stream_detection_spark.streaming.cep import (
+        streaming_match_absence_rules, streaming_match_timeout,
+        streaming_match_timeout_rules,
+    )
+    rng = random.Random(19)
+    rows = []
+    for u in range(1, 12):
+        for _ in range(rng.randint(3, 10)):
+            rows.append((u, len(rows),
+                         T0 + timedelta(seconds=rng.randint(0, 5400)),
+                         rng.choice(["A", "B", "C", "noise"])))
+    # a last anchor nothing answers: only the noise sentinel decides it
+    rows.append((50, len(rows), T0 + timedelta(seconds=5400), "A"))
+    pdf = (pd.DataFrame(rows, columns=COLS)
+           .sort_values(["ts", "event_id"]).reset_index(drop=True))
+    d = str(tmp_path / "noise_end")
+    os.makedirs(d)
+    half = len(pdf) // 2
+    _write_chunk(d, "c0.parquet", pdf.iloc[:half], 0)
+    _write_chunk(d, "c1.parquet", pdf.iloc[half:], 1)
+    _write_chunk(d, "zz.parquet", pd.DataFrame(
+        [(99, 990, pdf["ts"].max() + pd.Timedelta(days=30), "noise")],
+        columns=COLS), 9)
+
+    def drain(out, name):
+        q = (out.writeStream.format("memory").queryName(name)
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        return spark.table(name).drop("rule_id").collect()
+
+    to_keys = ("user_id", "first_event_id", "first_ts", "deadline_ts")
+    fixed_to = {tuple(r[k] for k in to_keys) for r in drain(
+        streaming_match_timeout(_read(spark, d), "A", "B", WITHIN),
+        "noise_to")}
+    rules_to = {tuple(r[k] for k in to_keys) for r in drain(
+        streaming_match_timeout_rules(_read(spark, d), spark.createDataFrame(
+            [("r", "A", "B", float(WITHIN))],
+            "rule_id string, first_type string, then_type string,"
+            " within_seconds double")), "noise_to_rules")}
+    batch_to = {tuple(r[k] for k in to_keys) for r in match_timeout(
+        spark.createDataFrame(pdf), "A", "B",
+        within_seconds=WITHIN).collect()}
+    assert any(t[0] == 50 for t in batch_to)
+    assert fixed_to == batch_to
+    assert fixed_to == rules_to
+
+    fixed_ab = _rows(drain(streaming_match_absence(
+        _read(spark, d), "A", "B", "C", WITHIN), "noise_ab"))
+    rules_ab = _rows(drain(streaming_match_absence_rules(
+        _read(spark, d), spark.createDataFrame(
+            [("r", "A", "B", "C", float(WITHIN))],
+            "rule_id string, first_type string, then_type string,"
+            " without_type string, within_seconds double")),
+        "noise_ab_rules"))
+    batch_ab = _rows(match_absence(
+        spark.createDataFrame(pdf), "A", "B", "C",
+        within_seconds=WITHIN).collect())
+    assert batch_ab
+    assert fixed_ab == batch_ab
+    assert fixed_ab == rules_ab
+
+
+@pytest.mark.parametrize("twin", ["timeout", "seq"])
+def test_bounded_state_keeps_earliest_events(spark, tmp_path, twin):
+    """max_events_in_state: one user's events arrive in ONE micro-batch;
+    the buffer keeps the earliest N by (ts, event_id), the accumulator
+    counts exactly the overflow, and the emitted rows equal batch on
+    those N events (which differ from batch on all of them)."""
+    from bigdata_event_stream_detection_spark.operators.cep import (
+        match_seq, match_timeout,
+    )
+    from bigdata_event_stream_detection_spark.streaming.cep import (
+        streaming_match_seq, streaming_match_timeout,
+    )
+    cap = 5
+    if twin == "timeout":
+        # the 6th event (B @55) would silence the 5th (A @50)
+        plan = [(0, "A"), (5, "B"), (10, "A"), (20, "A"), (50, "A"),
+                (55, "B"), (60, "A"), (62, "B"), (70, "A")]
+
+        def stream_of(src):
+            return streaming_match_timeout(
+                src, "A", "B", within_seconds=WITHIN,
+                max_events_in_state=cap)
+
+        def batch_of(df):
+            return match_timeout(df, "A", "B", within_seconds=WITHIN)
+    else:
+        # the 6th event (C @30) would complete the 4th's A B+ C
+        plan = [(0, "A"), (5, "B"), (10, "C"), (20, "A"), (25, "B"),
+                (30, "C"), (40, "A"), (41, "B"), (42, "C")]
+
+        def stream_of(src):
+            return streaming_match_seq(
+                src, VCP, within_seconds=WITHIN,
+                max_events_in_state=cap)
+
+        def batch_of(df):
+            return match_seq(df, VCP, within_seconds=WITHIN)
+    pdf = pd.DataFrame([(1, 100 + i, T0 + m * M, t)
+                        for i, (m, t) in enumerate(plan)], columns=COLS)
+    d = str(tmp_path / f"cap_{twin}")
+    os.makedirs(d)
+    # one micro-batch, rows in reverse order: the trim must sort
+    _write_chunk(d, "c0.parquet", pdf.iloc[::-1], 0)
+    _write_chunk(d, "zz.parquet", pd.DataFrame(
+        [(99, 990, T0 + pd.Timedelta(days=30), "noise")], columns=COLS), 9)
+
+    out = stream_of(_read(spark, d))
+    q = (out.writeStream.format("memory").queryName(f"cap_{twin}")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+
+    def rowset(rs):
+        return {tuple(r) for r in rs}
+
+    got = rowset(spark.table(f"cap_{twin}").collect())
+    truth = rowset(batch_of(spark.createDataFrame(pdf.iloc[:cap])).collect())
+    assert out.dropped_events_acc.value == len(pdf) - cap
+    assert got == truth
+    assert truth != rowset(batch_of(spark.createDataFrame(pdf)).collect())
