@@ -1,26 +1,32 @@
-"""Streaming burst detection: the continuous form of
-``operators.windows.burst_windows``.
+"""Closed-window counting in grouped state, and streaming burst
+detection on it: the continuous form of ``operators.windows.
+burst_windows``.
 
-Per event-type key, tumbling event-time windows are counted in grouped
-state; when the watermark passes a window's end it is closed IN ORDER,
-compared against the trailing baseline of the most recent non-empty
-closed windows, and emitted (append-mode, exactly once per closed
-window) iff its count reaches ``min_lift`` x that baseline. Output
-rows are identical to the batch operator on the same input once every
-real window has closed — the same batch/streaming parity contract as
-``streaming_detect_events``.
+``_closed_window_counter`` is the skeleton shared with
+``streaming/changepoint.py``. Per key (event type / tenant / source)
+it counts rows into tumbling event-time windows, closes each window IN
+ORDER once the watermark passes its end, and hands the closed count to
+the operator's fold, ``step(n, fold) -> (row | None, fold)``; a row is
+emitted (append mode, exactly once per closed window) as ``(key,
+ws_epoch, *row)``. The skeleton owns the open-window counts and the
+vectorized micro-batch bucketing (one numpy pass per key), the late
+fence — rows for a window at or before the newest closed one are
+dropped and COUNTED into ``dropped_rows_acc`` (append mode cannot
+revise an emitted window) — and the wake-up at the first open window's
+end, clamped past the watermark.
+
+Burst's fold is the trailing baseline of the most recent non-empty
+closed windows: a window is emitted iff its count reaches ``min_lift``
+x that baseline. Output rows are identical to the batch operator on
+the same input once every real window has closed — the same
+batch/streaming parity contract as ``streaming_detect_events``.
 
 Scale shape: the ONLY exchange is the hash shuffle on ``key_col``
-(event type / tenant / source — naturally bounded cardinality), and
-each key's state is O(open windows + baseline_windows) longs, so the
-state store carries kilobytes per key no matter the stream volume;
-the per-batch bucketing is one vectorized numpy pass per key. Contrast
-with a naive global sort or an unbounded raw-event buffer — neither
-survives a hot stream.
-
-Late rows for a window that already closed are dropped and COUNTED
-into ``dropped_rows_acc`` (append-mode can't resurrect an emitted
-window), mirroring the engine's accounted-drop policy.
+(naturally bounded cardinality), and each key's state is O(open
+windows) longs plus the fold (here ``baseline_windows`` longs), so the
+state store carries kilobytes per key no matter the stream volume.
+Contrast with a naive global sort or an unbounded raw-event buffer —
+neither survives a hot stream.
 """
 
 from __future__ import annotations
@@ -31,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType, DoubleType, LongType, StringType, StructField, StructType,
+    DoubleType, LongType, StringType, StructField, StructType,
 )
 
 BURST_SCHEMA = StructType([
@@ -42,16 +48,69 @@ BURST_SCHEMA = StructType([
     StructField("lift", DoubleType()),
 ])
 
-# Per-key state: counts of the still-open windows + the trailing
-# non-empty closed-window counts (the baseline), + the newest closed
-# window start (late-row fence). Arrays here are a handful of longs
-# per key — boxed ArrayType is fine (unlike the engine's token blobs).
-BURST_STATE_SCHEMA = StructType([
-    StructField("open_ws", ArrayType(LongType())),
-    StructField("open_n", ArrayType(LongType())),
-    StructField("hist_n", ArrayType(LongType())),
-    StructField("last_closed_ws", LongType()),
-])
+
+def _closed_window_counter(stream: DataFrame, step, fold: tuple,
+                           fold_ddl: str, out_schema: StructType, *,
+                           time_col: str, key_col: str, window_seconds: int,
+                           watermark_delay: str) -> DataFrame:
+    """Run ``step`` over each key's closed-window counts, in window
+    order (see module docstring). ``fold`` is the initial fold and
+    ``fold_ddl`` its state fields; open windows are a handful of longs
+    per key, so boxed arrays are fine (unlike the engine's token
+    blobs)."""
+    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
+    win = int(window_seconds)
+
+    def fn(key, pdf_iter, state: GroupState):
+        wm_ms = state.getCurrentWatermarkMs()
+        if state.exists:
+            open_ws, open_n, last_closed, *acc = state.get
+            counts = dict(zip(open_ws, open_n))
+        else:
+            counts, last_closed, acc = {}, -(1 << 62), fold
+        if not state.hasTimedOut:
+            for pdf in pdf_iter:
+                if not len(pdf):
+                    continue
+                sec = (pdf[time_col].to_numpy("datetime64[ns]")
+                       .astype(np.int64) // 1_000_000_000)
+                uws, cnt = np.unique((sec // win) * win, return_counts=True)
+                for ws, c in zip(uws.tolist(), cnt.tolist()):
+                    if ws <= last_closed:
+                        dropped_acc.add(c)  # late: window emitted
+                    else:
+                        counts[ws] = counts.get(ws, 0) + c
+        rows = []
+        for ws in sorted(counts):
+            if (ws + win) * 1000 > wm_ms:
+                break
+            row, acc = step(counts.pop(ws), acc)
+            if row is not None:
+                rows.append((key[0], ws, *row))
+            last_closed = ws
+        open_ws = sorted(counts)
+        state.update((open_ws, [counts[w] for w in open_ws], last_closed,
+                      *acc))
+        if open_ws:
+            state.setTimeoutTimestamp(
+                max((open_ws[0] + win) * 1000, wm_ms + 1))
+        if rows:
+            yield pd.DataFrame(rows, columns=out_schema.fieldNames())
+
+    keyed = (
+        stream.withWatermark(time_col, watermark_delay)
+        .select(F.col(key_col).alias("event_type"), time_col)
+    )
+    out = keyed.groupBy("event_type").applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=("open_ws array<bigint>, open_n array<bigint>, "
+                         "last_closed_ws bigint, " + fold_ddl),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+    out.dropped_rows_acc = dropped_acc
+    return out
 
 
 def streaming_burst_windows(
@@ -69,81 +128,19 @@ def streaming_burst_windows(
     ``date_trunc('hour')`` bucketing (UTC). Emitted columns equal
     ``windows.burst_windows``: (key, ws_epoch, n, baseline, lift).
     """
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
-    win = int(window_seconds)
     base_k = int(baseline_windows)
     lift_thr = float(min_lift)
 
-    def close_ready(key, open_ws, open_n, hist_n, last_closed, wm_ms):
-        """Close every open window whose end the watermark passed, in
-        window order; return (emitted rows, new state tuple)."""
-        rows = []
-        order = np.argsort(open_ws)
-        keep_ws, keep_n = [], []
-        for i in order:
-            ws, n = int(open_ws[i]), int(open_n[i])
-            if (ws + win) * 1000 <= wm_ms:
-                if hist_n:
-                    base = float(np.mean(hist_n[-base_k:]))
-                    if n >= base * lift_thr:
-                        rows.append((key, ws, n, round(base, 6),
-                                     round(n / base, 6)))
-                hist_n = (hist_n + [n])[-base_k:]
-                last_closed = max(last_closed, ws)
-            else:
-                keep_ws.append(ws)
-                keep_n.append(n)
-        return rows, (keep_ws, keep_n, hist_n, last_closed)
+    def step(n, fold):
+        hist = list(fold[0])
+        row = None
+        if hist:
+            base = float(np.mean(hist[-base_k:]))
+            if n >= base * lift_thr:
+                row = (n, round(base, 6), round(n / base, 6))
+        return row, ((hist + [n])[-base_k:],)
 
-    def fn(key, pdf_iter, state: GroupState):
-        k = key[0]
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.exists:
-            open_ws, open_n, hist_n, last_closed = state.get
-            open_ws, open_n = list(open_ws), list(open_n)
-            hist_n = list(hist_n)
-        else:
-            open_ws, open_n, hist_n, last_closed = [], [], [], -(1 << 62)
-
-        if not state.hasTimedOut:
-            counts: dict[int, int] = dict(zip(open_ws, open_n))
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                sec = (pdf[time_col].to_numpy("datetime64[ns]")
-                       .astype(np.int64) // 1_000_000_000)
-                ws_arr = (sec // win) * win
-                uws, cnt = np.unique(ws_arr, return_counts=True)
-                for ws, c in zip(uws.tolist(), cnt.tolist()):
-                    if ws <= last_closed:
-                        dropped_acc.add(int(c))  # late: window emitted
-                    else:
-                        counts[ws] = counts.get(ws, 0) + int(c)
-            open_ws = list(counts.keys())
-            open_n = [counts[w] for w in open_ws]
-
-        rows, (open_ws, open_n, hist_n, last_closed) = close_ready(
-            k, open_ws, open_n, hist_n, last_closed, wm_ms)
-
-        state.update((open_ws, open_n, hist_n, last_closed))
-        if open_ws:
-            next_end_ms = (min(open_ws) + win) * 1000
-            # clamp past the watermark (engine.py's out-of-order rule)
-            state.setTimeoutTimestamp(max(next_end_ms, wm_ms + 1))
-        if rows:
-            yield pd.DataFrame(rows, columns=[
-                "event_type", "ws_epoch", "n", "baseline", "lift"])
-
-    keyed = (
-        stream.withWatermark(time_col, watermark_delay)
-        .select(F.col(key_col).alias("event_type"), time_col)
-    )
-    out = keyed.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=BURST_SCHEMA,
-        stateStructType=BURST_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out.dropped_rows_acc = dropped_acc
-    return out
+    return _closed_window_counter(
+        stream, step, ([],), "hist_n array<bigint>", BURST_SCHEMA,
+        time_col=time_col, key_col=key_col, window_seconds=window_seconds,
+        watermark_delay=watermark_delay)

@@ -1,36 +1,32 @@
 """Streaming CUSUM changepoint detection: the continuous form of
-``operators.changepoint.cusum_changepoints``.
+``operators.changepoint.cusum_changepoints``, as a fold on the
+closed-window counter it shares with burst detection
+(``streaming/burst._closed_window_counter``: per-key window counts,
+in-order close on the watermark, late rows counted into
+``dropped_rows_acc``).
 
-Per key, tumbling event-time windows are counted in grouped state;
-when the watermark passes a window's end it closes IN ORDER. The first
-``calibration_windows`` closed (non-empty) windows calibrate the
-expected rate ``mu``; afterwards each close advances the one-sided
-CUSUM recursion ``S = max(0, S + n - mu*(1+drift))`` and the window is
-emitted (append-mode, exactly once) iff ``S > threshold * mu``. Output
-rows are identical to the batch operator on the same input once every
-real window has closed — the same parity contract as
-``streaming_burst_windows``, and the float sequence matches because
-both sides accumulate deviations in the key's window order with plain
-double arithmetic.
+The fold: the first ``calibration_windows`` closed (non-empty) windows
+calibrate the expected rate ``mu``; afterwards each close advances the
+one-sided CUSUM recursion ``S = max(0, S + n - mu*(1+drift))`` and the
+window is emitted iff ``S > threshold * mu``. Output rows are identical
+to the batch operator on the same input once every real window has
+closed, and the float sequence matches because both sides accumulate
+deviations in the key's window order with plain double arithmetic.
 
-Scale shape: one hash exchange on the key; per-key state is
-O(open windows) longs plus four scalars (calibration counts fold into
-``mu`` once full), so state stays kilobytes per key on an unbounded
-stream. Late rows for already-closed windows are dropped and counted
-into ``dropped_rows_acc`` (append mode cannot revise an emitted
-window).
+Scale shape: one hash exchange on the key; per-key state is O(open
+windows) longs plus the fold's three fields (calibration counts fold
+into ``mu`` once full), so state stays kilobytes per key on an
+unbounded stream.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType, DoubleType, LongType, StringType, StructField, StructType,
+    DoubleType, LongType, StringType, StructField, StructType,
 )
+
+from .burst import _closed_window_counter
 
 CUSUM_SCHEMA = StructType([
     StructField("event_type", StringType()),
@@ -38,17 +34,6 @@ CUSUM_SCHEMA = StructType([
     StructField("n", LongType()),
     StructField("cusum", DoubleType()),
     StructField("target", DoubleType()),
-])
-
-# calib holds the first closed-window counts until calibration is full;
-# mu < 0 means "not calibrated yet". s is the running CUSUM statistic.
-CUSUM_STATE_SCHEMA = StructType([
-    StructField("open_ws", ArrayType(LongType())),
-    StructField("open_n", ArrayType(LongType())),
-    StructField("calib", ArrayType(LongType())),
-    StructField("mu", DoubleType()),
-    StructField("s", DoubleType()),
-    StructField("last_closed_ws", LongType()),
 ])
 
 
@@ -69,94 +54,28 @@ def streaming_cusum_changepoints(
     ``changepoint.cusum_changepoints``: (key, ws_epoch, n, cusum,
     target).
     """
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
-    win = int(window_seconds)
     calib_k = int(calibration_windows)
     drift_f = float(drift)
     thr_f = float(threshold)
 
-    def close_ready(key, open_ws, open_n, calib, mu, s, last_closed,
-                    wm_ms):
-        """Close every open window whose end the watermark passed, in
-        window order; return (emitted rows, new state tuple).
+    def step(n, fold):
+        """Calibration, then the Page recursion. The batch side computes
+        S via cumsum-minus-running-min of plain double sums in ws order,
+        which equals this max(0, ...) fold over the same sequence; mu <
+        0 means not calibrated yet."""
+        calib, mu, s = fold
+        if mu < 0.0:
+            calib = list(calib) + [n]
+            if len(calib) >= calib_k:
+                mu = float(sum(calib)) / float(len(calib))
+                calib = []
+            return None, (calib, mu, s)
+        s = max(0.0, s + (float(n) - mu * (1.0 + drift_f)))
+        row = (n, round(s, 6), round(mu, 6)) if s > mu * thr_f else None
+        return row, (calib, mu, s)
 
-        The deviation accumulation mirrors the batch identity exactly:
-        the batch side computes S via cumsum-minus-running-min of plain
-        double sums in ws order, which equals this max(0, ...) fold
-        over the same sequence.
-        """
-        rows = []
-        order = np.argsort(open_ws)
-        keep_ws, keep_n = [], []
-        for i in order:
-            ws, n = int(open_ws[i]), int(open_n[i])
-            if (ws + win) * 1000 <= wm_ms:
-                if mu < 0.0:
-                    calib = calib + [n]
-                    if len(calib) >= calib_k:
-                        mu = float(sum(calib)) / float(len(calib))
-                        calib = []
-                else:
-                    s = max(0.0, s + (float(n) - mu * (1.0 + drift_f)))
-                    if s > mu * thr_f:
-                        rows.append((key, ws, n, round(s, 6),
-                                     round(mu, 6)))
-                last_closed = max(last_closed, ws)
-            else:
-                keep_ws.append(ws)
-                keep_n.append(n)
-        return rows, (keep_ws, keep_n, calib, mu, s, last_closed)
-
-    def fn(key, pdf_iter, state: GroupState):
-        k = key[0]
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.exists:
-            open_ws, open_n, calib, mu, s, last_closed = state.get
-            open_ws, open_n = list(open_ws), list(open_n)
-            calib = list(calib)
-        else:
-            open_ws, open_n, calib = [], [], []
-            mu, s, last_closed = -1.0, 0.0, -(1 << 62)
-
-        if not state.hasTimedOut:
-            counts: dict[int, int] = dict(zip(open_ws, open_n))
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                sec = (pdf[time_col].to_numpy("datetime64[ns]")
-                       .astype(np.int64) // 1_000_000_000)
-                ws_arr = (sec // win) * win
-                uws, cnt = np.unique(ws_arr, return_counts=True)
-                for ws, c in zip(uws.tolist(), cnt.tolist()):
-                    if ws <= last_closed:
-                        dropped_acc.add(int(c))
-                    else:
-                        counts[ws] = counts.get(ws, 0) + int(c)
-            open_ws = list(counts.keys())
-            open_n = [counts[w] for w in open_ws]
-
-        rows, st = close_ready(
-            k, open_ws, open_n, calib, mu, s, last_closed, wm_ms)
-        open_ws = st[0]
-
-        state.update(st)
-        if open_ws:
-            next_end_ms = (min(open_ws) + win) * 1000
-            state.setTimeoutTimestamp(max(next_end_ms, wm_ms + 1))
-        if rows:
-            yield pd.DataFrame(rows, columns=[
-                "event_type", "ws_epoch", "n", "cusum", "target"])
-
-    keyed = (
-        stream.withWatermark(time_col, watermark_delay)
-        .select(F.col(key_col).alias("event_type"), time_col)
-    )
-    out = keyed.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=CUSUM_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out.dropped_rows_acc = dropped_acc
-    return out
+    return _closed_window_counter(
+        stream, step, ([], -1.0, 0.0),
+        "calib array<bigint>, mu double, s double", CUSUM_SCHEMA,
+        time_col=time_col, key_col=key_col, window_seconds=window_seconds,
+        watermark_delay=watermark_delay)

@@ -3,14 +3,22 @@
 The batch pipeline (plans/pipeline.py) is a pure DataFrame->DataFrame
 composition; this module runs the same operators continuously:
 
-    readStream(sequences) -> withWatermark -> window assignment
-      -> applyInPandasWithState per (source, window): buffer docs,
-         close the window when the event-time watermark passes its end,
-         run EM theme extraction + HMM train/decode in one numpy kernel,
-         emit the detected-event strength rows
+    readStream(sequences) -> withWatermark -> state key
+      -> grouped pandas state per key: buffer docs, close a window or
+         session once the event-time watermark passes its end, run EM
+         theme extraction + HMM train/decode in one numpy kernel, emit
+         the detected-event strength rows
       -> (optionally) stream-stream join correlating events across
          sources inside the same window
       -> exactly-once file sink + checkpoint
+
+Every detector rides ONE doc buffer, ``_windowed_state_stream``, and
+ONE kernel call, ``_window_kernel``; a detector only picks its state
+key and close rule. ``_tumbling`` keys by (window, chunk) and closes a
+window once the watermark passes its end (the window detector and
+``streaming/evolution.streaming_window_themes``); the session detector
+keys by source and closes each gap-separated session once its last
+doc + gap is behind the watermark.
 
 Reference mapping: the reference is pure batch (SURVEY.md §1.4); the
 windowing duplication of ``EmInputFromParser.java:67-95`` becomes
@@ -21,19 +29,19 @@ inside grouped state instead of driver-mediated block scans.
 
 Scale notes (the part that must survive 1000 executors):
 * The only wide exchange before the stateful operator is the hash
-  shuffle on the state key — (window, [chunk]) for the tumbling
+  shuffle on the state key — (window, chunk) for the tumbling
   detector, (source,) for sessions. A hot window (an event burst)
   fans out over ``state_chunks`` deterministic doc-hash sub-keys,
   trading exact window pooling for the reference's own
   split-large-window (M4) semantics — N state partitions and N kernel
   tasks per window instead of one.
 * State per key is bounded: at most ``max_docs_in_state`` buffered
-  docs; overflow drops are COUNTED into the ``dropped_docs_acc``
-  accumulator on the returned DataFrame, never silent.
+  docs; overflow and late drops are COUNTED into the
+  ``dropped_docs_acc`` accumulator on the returned DataFrame, never
+  silent.
 * The background model is a small static side input (vocab-sized),
   broadcast once — never a per-batch join.
 """
-
 from __future__ import annotations
 
 import numpy as np
@@ -46,9 +54,10 @@ from pyspark.sql.types import (
     StructType, TimestampType,
 )
 
-from ..operators.em import _broadcast_background
+from ..operators.em import _broadcast_background, em_window_best
 from ..operators.hmm import detect_window_events
 from ..params import DEFAULTS, Params
+from ..plans.pipeline import _window_seconds
 
 SEQUENCE_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -81,6 +90,8 @@ STATE_SCHEMA = StructType([
     StructField("event_ms", BinaryType()),     # int64, one per doc
     StructField("doc_lens", BinaryType()),     # int32, one per doc
     StructField("flat_tokens", BinaryType()),  # int32 token stream
+    # the rule's next close time: the window end, or the end of the
+    # source's first open session
     StructField("window_end_ms", LongType()),
 ])
 
@@ -150,122 +161,140 @@ def streaming_session_doc_counts(
 # ---------------------------------------------------------------------------
 
 def _windowed_state_stream(
-    stream: DataFrame,
-    params: Params,
-    close_window,
+    keyed: DataFrame,
+    keys: list[str],
+    rule,
+    close,
     out_schema: StructType,
-    out_columns: list[str],
     *,
     min_tokens: int,
     max_docs_in_state: int,
-    state_chunks: int,
-    dropped_acc,
 ) -> DataFrame:
-    """Shared buffering skeleton for per-window grouped-state operators:
-    watermarked window assignment, binary-packed doc buffering across
-    micro-batches, bounded state with counted drops, and watermark-close
-    via event-time timeout. The payload differs per operator —
-    ``close_window(window_start, chunk, doc_ids, sources, event_ms,
-    doc_lens, flat) -> rows`` — so the detector and the theme emitter
-    (streaming/evolution.py) ride ONE state machine."""
+    """The one doc buffer of every detector: per state key, binary-
+    packed doc buffering across micro-batches, bounded state with
+    counted drops, and an event-time wake-up clamped past the watermark.
+
+    ``rule(key, event_ms, doc_ids, n_old, wm_ms) -> (closed, kept,
+    fire_ms)`` decides over the buffer, whose first ``n_old`` docs were
+    buffered before this call: ``closed`` lists the index arrays of the
+    groups to close now, ``kept`` the docs to keep buffered (at most
+    ``max_docs_in_state`` of them, in ``kept`` order), ``fire_ms`` when
+    to wake next. Docs in neither are late; they and the cap overflow
+    count on ``dropped_docs_acc``. ``close(key, seq_pdf) -> rows`` runs
+    the payload on one closed group (``_doc_frame`` columns)."""
+    dropped_acc = keyed.sparkSession.sparkContext.accumulator(0)
 
     def fn(key, pdf_iter, state: GroupState):
-        window_start, window_end = key[0], key[1]
-        chunk = int(key[2]) if len(key) > 2 else 0
-        if state.hasTimedOut:
-            if state.exists:
-                (doc_ids, src_vocab, src_codes, event_ms, doc_lens, flat,
-                 _) = state.get
-                codes = np.frombuffer(src_codes, dtype=np.int32)
-                vocab_arr = np.asarray(list(src_vocab), dtype=object)
-                sources = (vocab_arr[codes] if codes.size
-                           else np.empty(0, dtype=object))
-                rows = close_window(
-                    window_start, chunk, list(doc_ids), sources,
-                    np.frombuffer(event_ms, dtype=np.int64),
-                    np.frombuffer(doc_lens, dtype=np.int32),
-                    np.frombuffer(flat, dtype=np.int32))
-                state.remove()
-                if rows:
-                    yield pd.DataFrame(rows, columns=out_columns)
-            else:
-                state.remove()
-            return
-        # Vectorized buffer of this batch's docs — no per-row Python in
-        # the hot path (timestamps and lengths stay numpy end to end).
-        new_ids: list[str] = []
-        new_src: list[str] = []
-        ms_parts: list[np.ndarray] = []
-        len_parts: list[np.ndarray] = []
-        flat_parts: list[np.ndarray] = []
-        for pdf in pdf_iter:
-            pdf = pdf[pdf["n_tok"] >= min_tokens]
-            if not len(pdf):
-                continue
-            new_ids.extend(pdf["doc_id"].tolist())
-            new_src.extend(pdf["source"].tolist())
-            ms_parts.append(
-                pdf["event_time"].to_numpy("datetime64[ns]")
-                .astype(np.int64) // 1_000_000)
-            toks = [np.asarray(t, dtype=np.int32) for t in pdf["tokens"]]
-            len_parts.append(np.fromiter(
-                (t.size for t in toks), dtype=np.int32, count=len(toks)))
-            flat_parts.append(
-                np.concatenate(toks) if toks else np.empty(0, np.int32))
-        cur_wm = state.getCurrentWatermarkMs()
+        wm_ms = state.getCurrentWatermarkMs()
         if state.exists:
-            (doc_ids, src_vocab, src_codes, event_ms, doc_lens, flat,
-             we_ms) = state.get
-            doc_ids = list(doc_ids) + new_ids
-            src_vocab = list(src_vocab)
-            code_of = {s: i for i, s in enumerate(src_vocab)}
-            codes = np.concatenate(
-                [np.frombuffer(src_codes, dtype=np.int32),
-                 _encode_sources(new_src, src_vocab, code_of)])
-            ms = np.concatenate(
-                [np.frombuffer(event_ms, dtype=np.int64)] + ms_parts)
-            lens = np.concatenate(
-                [np.frombuffer(doc_lens, dtype=np.int32)] + len_parts)
-            flat_arr = np.concatenate(
-                [np.frombuffer(flat, dtype=np.int32)] + flat_parts)
+            doc_ids, vocab, codes, ms, lens, flat, _ = state.get
+            doc_ids, vocab = list(doc_ids), list(vocab)
+            buf = (doc_ids, np.frombuffer(codes, dtype=np.int32),
+                   np.frombuffer(ms, dtype=np.int64),
+                   np.frombuffer(lens, dtype=np.int32),
+                   np.frombuffer(flat, dtype=np.int32))
         else:
-            we_ms = int(pd.Timestamp(window_end).value // 1_000_000)
-            if we_ms <= cur_wm:
-                # out-of-order arrival for a window the watermark already
-                # finalized (file sources can deliver batches out of
-                # event-time order): late data — drop, never resurrect a
-                # closed window (append-mode exactly-once)
-                dropped_acc.add(len(new_ids))
-                return
-            if not new_ids:
-                return  # nothing survived the filter — don't open state
-            doc_ids = new_ids
-            src_vocab = []
-            codes = _encode_sources(new_src, src_vocab, {})
-            ms = np.concatenate(ms_parts)
-            lens = np.concatenate(len_parts)
-            flat_arr = np.concatenate(flat_parts)
-        if len(doc_ids) > max_docs_in_state:
-            # bounded state (the reference's per-window doc cap) — the
-            # drop is accounted, never silent
-            dropped_acc.add(len(doc_ids) - max_docs_in_state)
-            doc_ids = doc_ids[:max_docs_in_state]
-            codes = codes[:max_docs_in_state]
-            ms = ms[:max_docs_in_state]
-            keep_n = int(lens[:max_docs_in_state].sum())
-            lens = lens[:max_docs_in_state]
-            flat_arr = flat_arr[:keep_n]
-        state.update((doc_ids, src_vocab, codes.tobytes(), ms.tobytes(),
-                      lens.tobytes(), flat_arr.tobytes(), we_ms))
-        # close when the watermark passes the window end; clamp past the
-        # current watermark (an existing key whose end the watermark just
-        # crossed still fires on the NEXT batch's timeout sweep)
-        state.setTimeoutTimestamp(max(we_ms, cur_wm + 1))
-        return
-        yield  # pragma: no cover — generator form
+            vocab = []
+            buf = ([], np.empty(0, np.int32), np.empty(0, np.int64),
+                   np.empty(0, np.int32), np.empty(0, np.int32))
+        n_old = len(buf[0])
+        if not state.hasTimedOut:
+            buf = _append_docs(buf, vocab, pdf_iter, min_tokens)
+        n = len(buf[0])
+        if not n:
+            return
+        closed, kept, fire_ms = rule(key, buf[2], buf[0], n_old, wm_ms)
+        kept = kept[:max_docs_in_state]  # bounded state, accounted drop
+        lost = n - kept.size - sum(c.size for c in closed)
+        if lost:
+            dropped_acc.add(lost)
+        rows = []
+        for idx in closed:
+            rows += close(key, _doc_frame(vocab, *_take(buf, idx)))
+        if kept.size:
+            doc_ids, codes, ms, lens, flat = _take(buf, kept)
+            state.update((doc_ids, vocab, codes.tobytes(), ms.tobytes(),
+                          lens.tobytes(), flat.tobytes(), fire_ms))
+            state.setTimeoutTimestamp(max(fire_ms, wm_ms + 1))
+        elif state.exists:
+            state.remove()
+        if rows:
+            yield pd.DataFrame(rows, columns=out_schema.fieldNames())
 
+    out = keyed.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+    out.dropped_docs_acc = dropped_acc
+    return out
+
+
+def _append_docs(buf, vocab: list, pdf_iter, min_tokens: int):
+    """Append one micro-batch to a buffer, vectorized: no per-row Python
+    in the hot path (timestamps and lengths stay numpy end to end)."""
+    doc_ids, codes, ms, lens, flat = buf
+    new_ids: list[str] = []
+    new_src: list[str] = []
+    ms_parts, len_parts, flat_parts = [ms], [lens], [flat]
+    for pdf in pdf_iter:
+        pdf = pdf[pdf["n_tok"] >= min_tokens]
+        if not len(pdf):
+            continue
+        new_ids.extend(pdf["doc_id"].tolist())
+        new_src.extend(pdf["source"].tolist())
+        ms_parts.append(pdf["event_time"].to_numpy("datetime64[ns]")
+                        .astype(np.int64) // 1_000_000)
+        toks = [np.asarray(t, dtype=np.int32) for t in pdf["tokens"]]
+        len_parts.append(np.fromiter(
+            (t.size for t in toks), dtype=np.int32, count=len(toks)))
+        flat_parts.append(
+            np.concatenate(toks) if toks else np.empty(0, np.int32))
+    if not new_ids:
+        return buf
+    code_of = {s: i for i, s in enumerate(vocab)}
+    return (doc_ids + new_ids,
+            np.concatenate([codes, _encode_sources(new_src, vocab, code_of)]),
+            np.concatenate(ms_parts), np.concatenate(len_parts),
+            np.concatenate(flat_parts))
+
+
+def _take(buf, idx: np.ndarray):
+    """Docs ``idx`` of a buffer (doc_ids, codes, ms, lens, flat): the
+    buffer itself when ``idx`` is all of it in order, else one
+    vectorized token gather."""
+    doc_ids, codes, ms, lens, flat = buf
+    if idx.size == len(doc_ids) and np.array_equal(idx, np.arange(idx.size)):
+        return buf
+    offs = np.concatenate([[0], np.cumsum(lens, dtype=np.int64)])
+    sel = lens[idx]
+    out_offs = np.concatenate([[0], np.cumsum(sel, dtype=np.int64)[:-1]])
+    pos = np.repeat(offs[idx] - out_offs, sel) + np.arange(sel.sum())
+    return [doc_ids[i] for i in idx], codes[idx], ms[idx], sel, flat[pos]
+
+
+def _doc_frame(vocab, doc_ids, codes, ms, lens, flat) -> pd.DataFrame:
+    """A buffer as the kernel's input frame (source, doc_id, event_time
+    in epoch ms, tokens)."""
+    offs = np.concatenate([[0], np.cumsum(lens, dtype=np.int64)])
+    return pd.DataFrame({
+        "source": np.asarray(vocab, dtype=object)[codes],
+        "doc_id": doc_ids, "event_time": ms,
+        "tokens": [flat[offs[i]:offs[i + 1]] for i in range(len(doc_ids))],
+    })
+
+
+def _tumbling(stream: DataFrame, params: Params, state_chunks: int = 1):
+    """Window keying and close rule for the skeleton: state key
+    (window_start, window_end, chunk); the window closes once the
+    watermark passes its end. A new key whose window the watermark has
+    already finalized is late data (file sources can deliver batches
+    out of event-time order): its docs are dropped, never resurrecting
+    a closed window (append-mode exactly-once)."""
     length = params.window_length
-    windowed = (
+    keyed = (
         stream.withWatermark("event_time", params.watermark_delay)
         .withColumn("_w", F.window("event_time", length, params.window_slide)
                     if params.window_slide else F.window("event_time", length))
@@ -276,17 +305,50 @@ def _windowed_state_stream(
                 .cast("int").alias("_chunk"),
                 "source", "doc_id", "n_tok", "tokens", "event_time")
     )
-    out = windowed.groupBy(
-        "window_start", "window_end", "_chunk"
-    ).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out.dropped_docs_acc = dropped_acc
-    return out
+
+    def rule(key, event_ms, doc_ids, n_old, wm_ms):
+        we_ms = int(pd.Timestamp(key[1]).value // 1_000_000)
+        every = np.arange(event_ms.size)
+        if not n_old and we_ms <= wm_ms:
+            return [], every[:0], None
+        if we_ms < wm_ms:
+            return [every], every[:0], None
+        return [], every, we_ms
+
+    return keyed, ["window_start", "window_end", "_chunk"], rule
+
+
+def _window_kernel(stream: DataFrame, background_pdf: pd.DataFrame,
+                   params: Params):
+    """The one kernel call of every detector close, with the background
+    model broadcast once: ``kernel(window_start, seq_pdf,
+    theme_id_offset=0)`` is ``hmm.detect_window_events`` — the SAME
+    function the fused batch plan runs, which is what makes streaming
+    rows identical to the batch pipeline; ``decode=False`` stops after
+    its best-of-R EM and theme floor (the evolution close)."""
+    bcast = _broadcast_background(stream, background_pdf)
+    k = params.num_themes
+    floor = params.theme_score_floor_factor / k
+
+    def kernel(window_start, seq_pdf, theme_id_offset=0, decode=True):
+        ids, p_all = bcast.value
+        if not decode:
+            best = em_window_best(
+                pd.Timestamp(window_start), seq_pdf[["doc_id", "tokens"]],
+                ids, p_all, k, runs=params.em_runs,
+                iterations=params.em_iterations,
+                lambda_b=params.lambda_background)
+            return best[best["score"] > floor]
+        return detect_window_events(
+            window_start, seq_pdf, ids, p_all, k=k,
+            em_iterations=params.em_iterations,
+            lambda_b=params.lambda_background, score_floor=floor,
+            max_iterations=params.bw_max_iterations,
+            pi_threshold=params.bw_pi_threshold,
+            a_threshold=params.bw_a_threshold,
+            theme_id_offset=theme_id_offset, runs=params.em_runs)
+
+    return kernel
 
 
 def streaming_detect_events(
@@ -320,7 +382,9 @@ def streaming_detect_events(
     changes which docs pool together (as M4 does in batch), so the
     byte-parity invariant vs the batch pipeline holds for
     ``state_chunks=1``; for N>1 the invariant is vs the chunked batch
-    plan.
+    plan, and the emitted theme_id is namespaced as ``chunk *
+    num_themes + em_theme_id`` so (window, source, theme_id) stays a
+    unique exactly-once sink key across chunks.
 
     Docs beyond ``max_docs_in_state`` per key are dropped (the
     reference's per-window doc cap) — COUNTED, never silent: the
@@ -331,62 +395,17 @@ def streaming_detect_events(
     window, keyed (window_start, source, theme_id) — the sink's
     idempotency key.
     """
-    bcast = _broadcast_background(stream, background_pdf)
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
-
+    kernel = _window_kernel(stream, background_pdf, params)
     k = params.num_themes
-    em_iters = params.em_iterations
-    lambda_b = params.lambda_background
-    runs = params.em_runs
-    score_floor = params.theme_score_floor_factor / k
-    bw_iters = params.bw_max_iterations
-    pi_thr = params.bw_pi_threshold
-    a_thr = params.bw_a_threshold
-    min_tokens = params.min_doc_tokens
 
-    def close_window(window_start, chunk, doc_ids, sources, event_ms,
-                     doc_lens, flat):
-        """Run the shared fused per-window kernel on the buffered docs.
-
-        The payload is ``hmm.detect_window_events`` — the SAME function
-        the fused batch plan runs, which is what makes streaming output
-        rows identical to the batch pipeline. With ``state_chunks > 1``
-        the emitted theme_id is namespaced as ``chunk * num_themes +
-        em_theme_id`` so (window, source, theme_id) stays a unique
-        exactly-once sink key across chunks (chunk EMs are independent,
-        like M4's per-chunk runs)."""
-        ids, p_all = bcast.value
-        offs = np.concatenate([[0], np.cumsum(doc_lens)])
-        toks = [flat[offs[i]:offs[i + 1]] for i in range(len(doc_ids))]
-        seq_pdf = pd.DataFrame({
-            "source": sources, "doc_id": doc_ids,
-            "event_time": np.asarray(event_ms, dtype=np.int64),
-            "tokens": toks,
-        })
-        return detect_window_events(
-            window_start, seq_pdf, ids, p_all, k=k,
-            em_iterations=em_iters, lambda_b=lambda_b,
-            score_floor=score_floor, max_iterations=bw_iters,
-            pi_threshold=pi_thr, a_threshold=a_thr,
-            theme_id_offset=chunk * k, runs=runs)
+    def close(key, seq_pdf):
+        return kernel(key[0], seq_pdf, theme_id_offset=int(key[2]) * k)
 
     return _windowed_state_stream(
-        stream, params, close_window, EVENT_SCHEMA,
-        ["window_start", "source", "theme_id", "strength"],
-        min_tokens=min_tokens, max_docs_in_state=max_docs_in_state,
-        state_chunks=state_chunks, dropped_acc=dropped_acc)
+        *_tumbling(stream, params, state_chunks), close, EVENT_SCHEMA,
+        min_tokens=params.min_doc_tokens,
+        max_docs_in_state=max_docs_in_state)
 
-
-# Session state uses the same binary packing as STATE_SCHEMA (one
-# blob per numeric column instead of millions of boxed array elements).
-SESSION_STATE_SCHEMA = StructType([
-    StructField("doc_ids", ArrayType(StringType())),
-    StructField("event_ms", BinaryType()),     # int64, one per doc
-    StructField("doc_lens", BinaryType()),     # int32, one per doc
-    StructField("flat_tokens", BinaryType()),  # int32 token stream
-    StructField("session_start_ms", LongType()),
-    StructField("session_end_ms", LongType()),
-])
 
 SESSION_EVENT_SCHEMA = StructType([
     StructField("session_start", TimestampType()),
@@ -406,136 +425,51 @@ def streaming_detect_events_sessions(
     """Session-window variant of the stateful detector.
 
     ``session_window`` composes with built-in aggregations but not with
-    ``applyInPandasWithState``, so the gap-merge logic lives in state
-    (SURVEY.md §7.3 hard-part 5): keyed by source, the state holds the
-    current open session; a doc within ``session_gap`` of the session
-    end extends it, a later doc closes it (emit + start new), and the
-    event-time timeout closes it when the watermark passes
-    session_end + gap — matching ``session_window(ts, gap)`` semantics.
-
-    Out-of-session-order arrivals *within* the watermark are merged by
-    event time; rows beyond the watermark were already dropped upstream.
+    grouped pandas state, so sessions are cut in state (SURVEY.md §7.3
+    hard-part 5), on the window detector's doc buffer keyed by source.
+    Each call sorts the source's buffered docs by (event_time, doc_id)
+    and splits them wherever two docs lie more than ``session_gap``
+    apart, as ``windows.with_session_window_batch`` does. A session
+    closes once its last doc + gap is strictly behind the watermark and
+    emits (session_start, last doc + gap, source, theme_id, strength)
+    from the detector's kernel, seeded by the session start; later
+    sessions stay buffered, so a doc that arrives out of order still
+    joins the session its event time belongs to. A doc that arrives
+    with its event time already behind the watermark is late, as for
+    ``session_window``: dropped and counted on ``dropped_docs_acc``,
+    like docs past ``max_docs_in_state`` per source.
     """
-    bcast = _broadcast_background(stream, background_pdf)
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
+    kernel = _window_kernel(stream, background_pdf, params)
+    gap_ms = _window_seconds(params.session_gap) * 1000
+    keyed = stream.withWatermark("event_time", params.watermark_delay).select(
+        "source", "doc_id", "n_tok", "tokens", "event_time")
 
-    gap_ms = _interval_ms(params.session_gap)
-    k = params.num_themes
-    em_iters = params.em_iterations
-    lambda_b = params.lambda_background
-    runs = params.em_runs
-    score_floor = params.theme_score_floor_factor / k
-    bw_iters = params.bw_max_iterations
-    pi_thr = params.bw_pi_threshold
-    a_thr = params.bw_a_threshold
-    min_tokens = params.min_doc_tokens
+    def rule(key, event_ms, doc_ids, n_old, wm_ms):
+        live = np.flatnonzero((event_ms >= wm_ms)
+                              | (np.arange(event_ms.size) < n_old))
+        order = live[np.lexsort((np.asarray(doc_ids, dtype=str)[live],
+                                 event_ms[live]))]
+        if not order.size:
+            return [], order, None
+        sessions = np.split(
+            order, np.flatnonzero(np.diff(event_ms[order]) > gap_ms) + 1)
+        ends = [int(event_ms[s[-1]]) + gap_ms for s in sessions]
+        n_closed = sum(e < wm_ms for e in ends)
+        if n_closed == len(ends):
+            return sessions[:n_closed], order[:0], None
+        return (sessions[:n_closed], np.concatenate(sessions[n_closed:]),
+                ends[n_closed])
 
-    def close_session(source, doc_ids, event_ms, doc_lens, flat,
-                      start_ms, end_ms):
-        """The windowed detector's payload (``detect_window_events``)
-        over one closed session, seeded by the session start."""
-        ids, p_all = bcast.value
-        offs = np.concatenate([[0], np.cumsum(doc_lens)])
-        toks = [flat[offs[i]:offs[i + 1]] for i in range(len(doc_ids))]
-        seq_pdf = pd.DataFrame({
-            "source": [source] * len(doc_ids), "doc_id": doc_ids,
-            "event_time": np.asarray(event_ms, dtype=np.int64),
-            "tokens": toks})
-        session_end = pd.Timestamp(end_ms + gap_ms, unit="ms")
-        rows = detect_window_events(
-            pd.Timestamp(start_ms, unit="ms"), seq_pdf, ids, p_all, k=k,
-            em_iterations=em_iters, lambda_b=lambda_b,
-            score_floor=score_floor, max_iterations=bw_iters,
-            pi_threshold=pi_thr, a_threshold=a_thr, runs=runs)
-        return [(start, session_end, src, tid, n)
-                for start, src, tid, n in rows]
+    def close(key, seq_pdf):
+        ms = seq_pdf["event_time"]
+        end = pd.Timestamp(int(ms.max()) + gap_ms, unit="ms")
+        return [(start, end, src, tid, n) for start, src, tid, n in kernel(
+            pd.Timestamp(int(ms.min()), unit="ms"), seq_pdf)]
 
-    def fn(key, pdf_iter, state: GroupState):
-        (source,) = key
-        rows_out = []
-        new = []
-        for pdf in pdf_iter:
-            pdf = pdf[pdf["n_tok"] >= min_tokens]
-            for doc_id, ets, toks in zip(
-                    pdf["doc_id"], pdf["event_time"], pdf["tokens"]):
-                new.append((int(pd.Timestamp(ets).value // 1_000_000),
-                            doc_id, np.asarray(toks, dtype=np.int32)))
-        new.sort(key=lambda r: (r[0], r[1]))
-
-        if state.hasTimedOut:
-            if state.exists:
-                doc_ids, event_ms, doc_lens, flat, s_ms, e_ms = state.get
-                rows_out += close_session(
-                    source, list(doc_ids),
-                    np.frombuffer(event_ms, dtype=np.int64),
-                    np.frombuffer(doc_lens, dtype=np.int32),
-                    np.frombuffer(flat, dtype=np.int32), s_ms, e_ms)
-                state.remove()
-            if rows_out:
-                yield pd.DataFrame(rows_out, columns=[
-                    "session_start", "session_end", "source",
-                    "theme_id", "strength"])
-            return
-
-        if state.exists:
-            doc_ids, event_ms, doc_lens, flat, s_ms, e_ms = state.get
-            doc_ids = list(doc_ids)
-            event_ms = np.frombuffer(event_ms, dtype=np.int64).tolist()
-            doc_lens = np.frombuffer(doc_lens, dtype=np.int32).tolist()
-            flat_parts = [np.frombuffer(flat, dtype=np.int32)]
-        else:
-            doc_ids, event_ms, doc_lens = [], [], []
-            flat_parts = []
-            s_ms = e_ms = None
-
-        def session_arrays():
-            return (np.asarray(event_ms, dtype=np.int64),
-                    np.asarray(doc_lens, dtype=np.int32),
-                    np.concatenate(flat_parts) if flat_parts
-                    else np.empty(0, np.int32))
-
-        for ts_ms, doc_id, toks in new:
-            if s_ms is not None and ts_ms - e_ms > gap_ms:
-                # gap exceeded -> close current session, start fresh
-                ms_arr, len_arr, flat_arr = session_arrays()
-                rows_out += close_session(
-                    source, doc_ids, ms_arr, len_arr, flat_arr, s_ms, e_ms)
-                doc_ids, event_ms, doc_lens = [], [], []
-                flat_parts = []
-                s_ms = None
-            if s_ms is None:
-                s_ms = ts_ms
-                e_ms = ts_ms
-            e_ms = max(e_ms, ts_ms)
-            if len(doc_ids) < max_docs_in_state:
-                doc_ids.append(doc_id)
-                event_ms.append(ts_ms)
-                doc_lens.append(int(toks.size))
-                flat_parts.append(toks)
-            else:
-                dropped_acc.add(1)  # bounded state — accounted drop
-
-        if s_ms is not None:
-            ms_arr, len_arr, flat_arr = session_arrays()
-            state.update((doc_ids, ms_arr.tobytes(), len_arr.tobytes(),
-                          flat_arr.tobytes(), int(s_ms), int(e_ms)))
-            state.setTimeoutTimestamp(
-                max(int(e_ms + gap_ms), state.getCurrentWatermarkMs() + 1))
-        if rows_out:
-            yield pd.DataFrame(rows_out, columns=[
-                "session_start", "session_end", "source",
-                "theme_id", "strength"])
-
-    filtered = stream.withWatermark("event_time", params.watermark_delay)
-    out = filtered.groupBy("source").applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_EVENT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out.dropped_docs_acc = dropped_acc
-    return out
+    return _windowed_state_stream(
+        keyed, ["source"], rule, close, SESSION_EVENT_SCHEMA,
+        min_tokens=params.min_doc_tokens,
+        max_docs_in_state=max_docs_in_state)
 
 
 def _encode_sources(srcs: list, src_vocab: list, code_of: dict) -> np.ndarray:
@@ -551,13 +485,6 @@ def _encode_sources(srcs: list, src_vocab: list, code_of: dict) -> np.ndarray:
             code_of[s] = c
         out[i] = c
     return out
-
-
-def _interval_ms(spec: str) -> int:
-    qty, unit = spec.split()
-    mult = {"second": 1, "seconds": 1, "minute": 60, "minutes": 60,
-            "hour": 3600, "hours": 3600, "day": 86400, "days": 86400}[unit]
-    return int(qty) * mult * 1000
 
 
 # ---------------------------------------------------------------------------

@@ -41,7 +41,6 @@ store past ``max_gap_windows`` (old windows can never gain new edges).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -50,7 +49,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.em import _broadcast_background, em_window_best
 from ..operators.transitions import theme_transitions
 from ..params import DEFAULTS, Params
 
@@ -63,9 +61,6 @@ THEMES_SCHEMA = StructType([
     StructField("word_ids", ArrayType(LongType())),
     StructField("probs", ArrayType(DoubleType())),
 ])
-
-_THEME_COLS = ["window_start", "theme_id", "loglik", "score",
-               "n_docs", "word_ids", "probs"]
 
 
 def streaming_window_themes(
@@ -80,39 +75,23 @@ def streaming_window_themes(
     keyed by window alone (no doc-hash chunking): chunked EM changes
     which docs pool together, and the evolution graph's KL edges are
     defined on whole-window themes."""
-    from .engine import _windowed_state_stream
+    from .engine import _tumbling, _window_kernel, _windowed_state_stream
 
-    bcast = _broadcast_background(stream, background_pdf)
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
+    kernel = _window_kernel(stream, background_pdf, params)
 
-    k = params.num_themes
-    em_iters = params.em_iterations
-    lambda_b = params.lambda_background
-    runs = params.em_runs
-    score_floor = params.theme_score_floor_factor / k
-    min_tokens = params.min_doc_tokens
-
-    def close_window(window_start, chunk, doc_ids, sources, event_ms,
-                     doc_lens, flat):
-        ids, p_all = bcast.value
-        offs = np.concatenate([[0], np.cumsum(doc_lens)])
-        toks = [flat[offs[i]:offs[i + 1]] for i in range(len(doc_ids))]
-        seq_pdf = pd.DataFrame({"doc_id": doc_ids, "tokens": toks})
-        best = em_window_best(pd.Timestamp(window_start), seq_pdf,
-                              ids, p_all, k, runs=runs,
-                              iterations=em_iters, lambda_b=lambda_b)
-        best = best[best["score"] > score_floor]
+    def close(key, seq_pdf):
+        best = kernel(key[0], seq_pdf, decode=False)
         return [
-            (window_start, int(r.theme_id), float(r.loglik),
+            (key[0], int(r.theme_id), float(r.loglik),
              float(r.score), int(r.n_docs),
              [int(w) for w in r.word_ids], [float(p) for p in r.probs])
             for r in best.itertuples()
         ]
 
     return _windowed_state_stream(
-        stream, params, close_window, THEMES_SCHEMA, _THEME_COLS,
-        min_tokens=min_tokens, max_docs_in_state=max_docs_in_state,
-        state_chunks=1, dropped_acc=dropped_acc)
+        *_tumbling(stream, params), close, THEMES_SCHEMA,
+        min_tokens=params.min_doc_tokens,
+        max_docs_in_state=max_docs_in_state)
 
 
 def evolution_edge_batch_writer(

@@ -169,8 +169,15 @@ def test_detect_events_is_one_grouped_kernel(spark, em_runs):
     assert "FlatMapCoGroupsInPandas" not in ops
 
 
-def _cep_twins(spark, stream):
-    from bigdata_event_stream_detection_spark.streaming import cep
+def _state_operators(spark, events, seqs):
+    import pandas as pd
+
+    from bigdata_event_stream_detection_spark.plans.pipeline import (
+        small_params,
+    )
+    from bigdata_event_stream_detection_spark.streaming import (
+        burst, cep, changepoint, engine, evolution,
+    )
 
     timeout_rules = spark.createDataFrame(
         [("r1", "A", "B", 60.0), ("r2", "B", "B", 60.0)],
@@ -183,40 +190,62 @@ def _cep_twins(spark, stream):
     seq_rules = spark.createDataFrame(
         [("r1", "A:1,B:+", 60.0)],
         "rule_id string, steps string, within_seconds double")
+    model = pd.DataFrame({"word_id": [1, 2], "p": [0.5, 0.5]})
+    params = small_params()
     return {
         "timeout": lambda: cep.streaming_match_timeout(
-            stream, "A", "B", 60.0, unless="C"),
+            events, "A", "B", 60.0, unless="C"),
         "timeout_rules": lambda: cep.streaming_match_timeout_rules(
-            stream, timeout_rules),
+            events, timeout_rules),
         "absence": lambda: cep.streaming_match_absence(
-            stream, "A", "B", "C", 60.0),
+            events, "A", "B", "C", 60.0),
         "absence_rules": lambda: cep.streaming_match_absence_rules(
-            stream, absence_rules),
-        "runs": lambda: cep.streaming_match_runs(stream, "A"),
+            events, absence_rules),
+        "runs": lambda: cep.streaming_match_runs(events, "A"),
         "seq": lambda: cep.streaming_match_seq(
-            stream, [("a", "A", "1"), ("b", "B", "+")], 60.0),
+            events, [("a", "A", "1"), ("b", "B", "+")], 60.0),
         "seq_rules": lambda: cep.streaming_match_seq_rules(
-            stream, seq_rules),
+            events, seq_rules),
+        "detect_events": lambda: engine.streaming_detect_events(
+            seqs, model, params),
+        "detect_events_sessions":
+            lambda: engine.streaming_detect_events_sessions(
+                seqs, model, params),
+        "window_themes": lambda: evolution.streaming_window_themes(
+            seqs, model, params),
+        "burst": lambda: burst.streaming_burst_windows(events),
+        "cusum": lambda: changepoint.streaming_cusum_changepoints(events),
     }
 
 
 @pytest.mark.parametrize("twin", [
     "timeout", "timeout_rules", "absence", "absence_rules", "runs", "seq",
-    "seq_rules"])
+    "seq_rules", "detect_events", "detect_events_sessions",
+    "window_themes", "burst", "cusum"])
 def test_streaming_cep_twin_scans_once(spark, tmp_path, twin):
-    """Every streaming CEP twin reads its stream ONCE (role fan-out is a
-    single broadcast join, never a union of per-role scans) and runs
-    ONE grouped-state operator."""
+    """Every streaming state operator — the CEP twins, the window and
+    session detectors, the window-theme emitter, burst and CUSUM —
+    reads its stream ONCE (role fan-out is a single broadcast join,
+    never a union of per-role scans) and runs ONE grouped-state
+    operator."""
     import pandas as pd
 
+    from bigdata_event_stream_detection_spark.streaming.engine import (
+        read_sequence_stream,
+    )
+
+    (tmp_path / "ev").mkdir()
+    (tmp_path / "seq").mkdir()
     pd.DataFrame({"user_id": [1], "event_id": [1],
                   "ts": [pd.Timestamp("2024-06-01")],
-                  "event_type": ["A"]}).to_parquet(tmp_path / "ev.parquet")
-    stream = (spark.readStream
+                  "event_type": ["A"]}).to_parquet(
+                      tmp_path / "ev" / "ev.parquet")
+    events = (spark.readStream
               .schema("user_id long, event_id long, ts timestamp,"
                       " event_type string")
-              .parquet(str(tmp_path)))
-    plan = _formatted_plan(_cep_twins(spark, stream)[twin]())
+              .parquet(str(tmp_path / "ev")))
+    seqs = read_sequence_stream(spark, str(tmp_path / "seq"))
+    plan = _formatted_plan(_state_operators(spark, events, seqs)[twin]())
     ops = [op for _d, op, _n in _tree_nodes(plan)]
     assert ops.count("StreamingRelation") == 1, plan
     assert ops.count("FlatMapGroupsInPandasWithState") == 1, plan

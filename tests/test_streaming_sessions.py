@@ -1,5 +1,6 @@
-"""Stateful session-window detection: gap merge, close-on-timeout,
-close-on-gap-exceeded, and agreement with the batch session analog."""
+"""Stateful session-window detection: gap merge, close on the
+watermark, out-of-order docs, the per-source buffer cap, and agreement
+with the batch session analog."""
 
 from __future__ import annotations
 
@@ -15,6 +16,9 @@ from pyspark.sql import functions as F
 
 from bigdata_event_stream_detection_spark.operators import background as bg
 from bigdata_event_stream_detection_spark.operators import em as em_ops
+from bigdata_event_stream_detection_spark.operators.windows import (
+    with_session_window_batch,
+)
 from bigdata_event_stream_detection_spark.plans.pipeline import small_params
 from bigdata_event_stream_detection_spark.streaming.engine import (
     read_sequence_stream,
@@ -117,3 +121,124 @@ def test_sessions_best_of_3_match_recompute(spark, session_input):
     assert expected
     assert got == sorted((ws.to_pydatetime(), src, tid, n)
                          for ws, src, tid, n in expected)
+
+
+def _run_sessions(spark, tmp_path, name, chunks, params, **kw):
+    """Write each chunk of (doc_id, source, event_time, words) rows as
+    one parquet file (increasing mtimes, one micro-batch each), run the
+    session detector to a memory sink, and return (the operator, its
+    rows for source A, the docs, the background arrays)."""
+    d = str(tmp_path / name)
+    os.makedirs(d)
+    pdfs = []
+    for i, chunk in enumerate(chunks):
+        pdf = pd.DataFrame([_doc(i_d, src, ts, words)
+                            for i_d, src, ts, words in chunk], columns=[
+            "doc_id", "tokens", "n_tok", "source", "event_time"])
+        f = os.path.join(d, f"c{i}.parquet")
+        pq.write_table(pa.Table.from_pandas(
+            pdf, schema=ARROW_SCHEMA, preserve_index=False), f)
+        os.utime(f, (time.time() + i, time.time() + i))
+        pdfs.append(pdf)
+    pdf = pd.concat(pdfs, ignore_index=True)
+    model = em_ops.collect_background(bg.background_model(
+        spark.createDataFrame(pdf), min_count=params.min_word_corpus_count))
+    events = streaming_detect_events_sessions(
+        read_sequence_stream(spark, d, max_files_per_trigger=1), model,
+        params, **kw)
+    q = (events.writeStream.format("memory").queryName(name)
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    rows = sorted((r["session_start"], r["session_end"], r["source"],
+                   r["theme_id"], r["strength"])
+                  for r in spark.table(name).collect() if r["source"] == "A")
+    return events, rows, pdf, em_ops._bg_arrays(model)
+
+
+def _recompute_sessions(sessions, bg_arrays, params):
+    """Expected rows: the step-by-step kernel recomputation on each
+    session's docs, seeded by the session start."""
+    gap = pd.Timedelta(params.session_gap)
+    out = []
+    for docs in sessions:
+        start = docs["event_time"].min()
+        rows, _ = recompute_window_events([(start, docs)], *bg_arrays, params)
+        out += [(ws.to_pydatetime(),
+                 (docs["event_time"].max() + gap).to_pydatetime(), src, tid, n)
+                for ws, src, tid, n in rows]
+    return sorted(out)
+
+
+def test_out_of_order_docs_join_their_session(spark, tmp_path):
+    """Docs that arrive after later ones still land in the session their
+    event time belongs to: the emitted sessions are the batch
+    sessionization's, and each one's rows are the kernel on its docs."""
+    params = replace(PARAMS, watermark_delay="1 day")
+    day = pd.Timestamp("2015-01-01")
+
+    def at(hh, mm):
+        return day + pd.Timedelta(hours=hh, minutes=mm)
+
+    chunks = [
+        [("a1000", "A", at(10, 0), [1, 2, 3, 1, 2, 3, 4]),
+         ("a1010", "A", at(10, 10), [1, 2, 5, 1, 2, 5, 6])],
+        [("a0500", "A", at(5, 0), [5, 6, 7, 5, 6, 7, 8]),
+         ("a0945", "A", at(9, 45), [1, 3, 4, 1, 3, 4, 2])],
+        [("sent", "B", day + pd.Timedelta(days=30), [1, 2, 3])],
+    ]
+    _, got, pdf, bg_arrays = _run_sessions(
+        spark, tmp_path, "sess_out_of_order", chunks, params)
+
+    docs = pdf[pdf["source"] == "A"]
+    batch = {(r["window_start"], r["window_end"])
+             for r in with_session_window_batch(
+                 spark.createDataFrame(docs), ["source"],
+                 gap="30 minutes").collect()}
+    assert batch == {(at(5, 0).to_pydatetime(), at(5, 30).to_pydatetime()),
+                     (at(9, 45).to_pydatetime(), at(10, 40).to_pydatetime())}
+    assert {(r[0], r[1]) for r in got} == batch
+    expected = _recompute_sessions(
+        [docs[docs["event_time"] < at(9, 0)],
+         docs[docs["event_time"] > at(9, 0)]], bg_arrays, params)
+    assert got == expected
+
+
+def test_session_buffer_cap_counts_drops(spark, tmp_path):
+    """``max_docs_in_state`` bounds each source's buffer: of three docs
+    of one session in one micro-batch, the earliest two are kept and
+    detected on, and the third is counted on ``dropped_docs_acc``."""
+    t0 = pd.Timestamp("2015-01-01 10:00")
+    chunks = [
+        [(f"c{i}", "A", t0 + pd.Timedelta(minutes=5 * i),
+          [1, 2, 3, 1, 2, 3, 4 + i]) for i in range(3)],
+        [("sent", "B", t0 + pd.Timedelta(days=30), [1, 2, 3])],
+    ]
+    events, got, pdf, bg_arrays = _run_sessions(
+        spark, tmp_path, "sess_capped", chunks, PARAMS, max_docs_in_state=2)
+    assert events.dropped_docs_acc.value == 1
+    expected = _recompute_sessions(
+        [pdf[pdf["doc_id"].isin(["c0", "c1"])]], bg_arrays, PARAMS)
+    assert expected
+    assert got == expected
+
+
+def test_late_session_doc_is_counted_not_emitted(spark, tmp_path):
+    """A doc whose event time is already behind the watermark when it
+    arrives is late: it is counted on ``dropped_docs_acc`` and never
+    emitted as a second session next to the one already closed."""
+    t0 = pd.Timestamp("2015-01-01 10:00")
+    chunks = [
+        [("early", "A", t0, [1, 2, 3, 1, 2, 3, 4])],
+        [("next", "A", t0 + pd.Timedelta(days=3), [5, 6, 7, 5, 6, 7, 8])],
+        [("late", "A", t0 + pd.Timedelta(minutes=5), [1, 2, 4, 1, 2, 4, 3])],
+        [("sent", "B", t0 + pd.Timedelta(days=30), [1, 2, 3])],
+    ]
+    events, got, pdf, bg_arrays = _run_sessions(
+        spark, tmp_path, "sess_late", chunks, PARAMS)
+    assert events.dropped_docs_acc.value == 1
+    assert {r[0] for r in got} == {t0.to_pydatetime(),
+                                   (t0 + pd.Timedelta(days=3)).to_pydatetime()}
+    expected = _recompute_sessions(
+        [pdf[pdf["doc_id"] == d] for d in ("early", "next")], bg_arrays,
+        PARAMS)
+    assert got == expected
