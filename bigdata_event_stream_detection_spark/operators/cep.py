@@ -1,30 +1,52 @@
-"""MATCH_RECOGNIZE-style absence patterns over keyed event tables.
+"""Batch CEP over keyed event tables: timeout/SLA ("A with no B within
+T"), absence ("A then B with no C between"), Kleene-plus runs and
+MATCH_RECOGNIZE quantified sequences. Timeout, absence and sequences
+each come as a fixed-pattern operator and a rules-as-data twin whose
+patterns live in a table.
 
-The CEP negation primitive the funnel family cannot express: "A then B
-with NO C in between" (order placed then shipped without cancel; view
-then purchase without error). One output row per A-typed event that is
-followed — strictly after it in the per-key (ts, event_id) order — by a
-B-typed event with no C-typed event between them, optionally requiring
-B within ``within_seconds`` of A.
+One roles table. A rules table becomes a ROLES table ``(rule_id, _et,
+_code, horizon_us[, steps])`` — one row per (rule, event type, role),
+deduplicated per rule — derived in SQL by :func:`_roles` after the
+driver-side checks of :func:`_check_rules` (positive horizons,
+``then_type != without_type``, parseable seq specs). The streaming
+twins in ``streaming/cep.py`` import both, so batch and stream fan
+events out to rules the same way.
 
-Greedy-earliest equals existence here: any C before the earliest
-following B also sits between A and every later B, so "the next B has
-no intervening C" is exactly "some B has no intervening C". That makes
-the semantics decidable from three forward-looking running minima —
-pure whole-stage-codegen window aggregates sharing ONE per-key sort
-(one shuffle on the key, no self-join, no per-row Python), the same
-frame DuckDB evaluates verbatim for the oracle.
+One body per pattern, over one tagged frame ``(key, rule_id, ts, id,
+_code, horizon_us)``:
 
-Scale: cost is sort-within-partition after a single hash exchange on
-the key — the minimum for any order-sensitive per-key semantics. A
+* **timeout** (0 anchor / 1 silencer: ``then`` or ``unless``): an
+  anchor alerts unless a silencer lands within the horizon strictly
+  after it — one forward minimum.
+* **absence** (0 anchor / 1 then / 2 without): greedy-earliest equals
+  existence (a without-event before the earliest following then also
+  sits between the anchor and every later then), so three forward
+  minima decide it.
+* **seq**: one ``applyInPandas`` kernel running :func:`_seq_scan`, the
+  scan the streaming twin and the single-node oracle also pin.
+
+Timeout and absence are whole-stage-codegen window aggregates on ONE
+per-(key, rule) sort: one hash exchange, no self-join, no per-row
+Python. Role copies of one event sort ``(ts, id, _code desc)``, so its
+anchor copy comes last and never matches the event's other copies
+("no repeat within T", "A then the next A").
+
+Tagging. A rules twin tags with ONE broadcast join against its roles
+table. A fixed twin tags with a column expression of role codes under
+a literal rule_id and horizon — an event playing two roles is exploded
+once per role — and drops rule_id from its output: one exchange, no
+join. Events that play no role never reach the sort.
+
+Scale: sort-within-partition after a single hash exchange on the key
+— the minimum for any order-sensitive per-key semantics. A
 pathologically hot key serializes its own sort only; salting cannot
 help (order must be global per key) but AQE splits the *exchange*
 skew, and keys are users — bounded fan-in by construction.
 
-Reference parity: the reference has no negation CEP; this extends its
-event-detection query family (SURVEY.md §2 funnel rows) with the
-standard absence pattern of CEP engines (Flink MATCH_RECOGNIZE's
-``NOT``/absence idiom), built Spark-first.
+Reference parity: the reference has no CEP beyond funnels; this
+extends its event-detection query family (SURVEY.md §2 funnel rows)
+with the timeout, absence (Flink MATCH_RECOGNIZE's ``NOT`` idiom) and
+quantified-sequence patterns of CEP engines, built Spark-first.
 """
 
 from __future__ import annotations
@@ -40,6 +62,160 @@ from ..util import pin_partitions
 from pyspark.sql.types import (
     LongType, StringType, StructField, StructType, TimestampType,
 )
+
+# (rules column, role code) pairs of the per-anchor patterns
+TIMEOUT_ROLES = (("first_type", 0), ("then_type", 1))
+ABSENCE_ROLES = (("first_type", 0), ("then_type", 1), ("without_type", 2))
+
+
+# ---------------------------------------------------------------------------
+# the roles table (shared with streaming/cep.py) and the tagged frame
+# ---------------------------------------------------------------------------
+
+def _check_rules(rules: DataFrame, *cols: str) -> None:
+    """Fail fast on a rule no pattern can honour; ``cols`` are the rule
+    columns beyond ``(rule_id, within_seconds)`` to collect (rules
+    tables are tiny). Rejects a NULL or non-positive horizon, an
+    absence rule whose ``then_type == without_type`` (the silencer
+    would tie every match), a bad seq spec, and an empty seq table."""
+    rows = rules.select("rule_id", "within_seconds", *cols).collect()
+    if not rows and "steps" in cols:
+        raise ValueError("rules table is empty")
+    for r in rows:
+        if "steps" in cols:
+            _validate_steps(_parse_steps_spec(r["steps"]))
+        if ("without_type" in cols and r["then_type"] is not None
+                and r["then_type"] == r["without_type"]):
+            raise ValueError(
+                f"rule {r['rule_id']}: then_type == without_type "
+                "can never fire (the silencer ties every match)")
+        w = r["within_seconds"]
+        if w is None or not float(w) > 0:
+            raise ValueError(
+                f"rule {r['rule_id']}: within_seconds must be positive")
+
+
+def _roles(rules: DataFrame, *roles) -> DataFrame:
+    """Rules -> the roles table ``(rule_id, [steps,] horizon_us, _et,
+    _code)``, one row per (rule, type, role), deduplicated per rule (a
+    type named twice for one role plays it once); NULL types play no
+    role. ``roles`` are ``(column, code)`` pairs; with none, ``steps``
+    holds seq specs and each distinct step type plays the role coded
+    by its first position (the codes :func:`_step_tids` assigns)."""
+    if roles:
+        keep, pairs = [], F.array(*[
+            F.struct(F.col(c).alias("_et"), F.lit(code).alias("_code"))
+            for c, code in roles])
+    else:
+        keep, pairs = ["steps"], F.transform(
+            F.array_distinct(F.transform(
+                F.split("steps", ","),
+                lambda p: F.trim(F.regexp_extract(p, r"^(.*):[^:]*$", 1)))),
+            lambda t, i: F.struct(t.alias("_et"), i.alias("_code")))
+    return (rules.select(
+        "rule_id", *keep,
+        F.round(F.col("within_seconds").cast("double") * 1e6)
+        .cast("long").alias("horizon_us"),
+        F.inline(F.array_distinct(pairs)))
+        .withColumn("_code", F.col("_code").cast("tinyint"))
+        .filter(F.col("_et").isNotNull()))
+
+
+def _tag(events: DataFrame, key_col, time_col, id_col, type_col,
+         roles: DataFrame | None = None, codes=None,
+         horizon_us=None) -> DataFrame:
+    """Events -> the tagged frame ``(key, ts, id, rule_id, horizon_us,
+    _code[, steps])``: by ONE broadcast join against a roles table, or
+    (a fixed pattern) by ``codes``, an array of per-row role codes
+    (NULL = no such role) exploded once per role under a literal
+    rule_id ``""`` and ``horizon_us``. No join on the fixed path, and
+    no lambda either: ``array_compact`` would run interpreted."""
+    if roles is not None:
+        return (events.select(key_col, time_col, id_col,
+                              F.col(type_col).alias("_et"))
+                .join(F.broadcast(roles), "_et").drop("_et"))
+    return events.select(
+        key_col, time_col, id_col, F.lit("").alias("rule_id"),
+        F.lit(horizon_us).cast("long").alias("horizon_us"),
+        F.explode(codes.cast("array<tinyint>")).alias("_code")
+    ).filter(F.col("_code").isNotNull())
+
+
+def _horizon(within_seconds) -> int:
+    """Seconds -> horizon micros; None (unbounded) -> 2**62, far beyond
+    any event-time span."""
+    return (int(round(float(within_seconds) * 1e6))
+            if within_seconds is not None else 2 ** 62)
+
+
+# ---------------------------------------------------------------------------
+# the per-anchor bodies: timeout and absence
+# ---------------------------------------------------------------------------
+
+def _role_windows(key_col, time_col, id_col):
+    """One (key, rule) partition sorted ``(ts, id, _code desc)`` — an
+    event's anchor copy after its other role copies — and its
+    strictly-after frame."""
+    w_ord = Window.partitionBy(key_col, "rule_id").orderBy(
+        F.col(time_col).asc(), F.col(id_col).asc(), F.col("_code").desc())
+    return w_ord, w_ord.rowsBetween(1, Window.unboundedFollowing)
+
+
+def _gap_us(time_col, later):
+    return F.timestamp_diff("MICROSECOND", F.col(time_col), F.col(later))
+
+
+def _timeout_plan(tagged: DataFrame, key_col, time_col, id_col):
+    """Alert ``(key, rule_id, first_event_id, first_ts, deadline_ts)``
+    per anchor with no silencer within its horizon."""
+    _, w_fwd = _role_windows(key_col, time_col, id_col)
+    fwd = tagged.select(
+        key_col, "rule_id", id_col, time_col, "_code", "horizon_us",
+        F.min(F.when(F.col("_code") == 1, F.col(time_col)))
+        .over(w_fwd).alias("_then_ts"))
+    silent = (F.col("_then_ts").isNotNull()
+              & (_gap_us(time_col, "_then_ts") <= F.col("horizon_us")))
+    return (fwd.filter((F.col("_code") == 0) & ~silent)
+            .select(
+                F.col(key_col), F.col("rule_id"),
+                F.col(id_col).alias("first_event_id"),
+                F.col(time_col).alias("first_ts"),
+                F.timestamp_add("MICROSECOND", F.col("horizon_us"),
+                                F.col(time_col)).alias("deadline_ts")))
+
+
+def _absence_plan(tagged: DataFrame, key_col, time_col, id_col):
+    """Match ``(key, rule_id, first_event_id, first_ts, then_ts,
+    gap_sec)`` per anchor whose earliest following then-event precedes
+    every following without-event and lies within the horizon."""
+    w_ord, w_fwd = _role_windows(key_col, time_col, id_col)
+    code = F.col("_code")
+    # the row_number and the three minima share one partition+order:
+    # Spark evaluates them in the SAME sorted pass
+    ranked = tagged.select(
+        key_col, "rule_id", id_col, time_col, "_code", "horizon_us",
+        F.row_number().over(w_ord).alias("_rn"))
+    fwd = ranked.select(
+        key_col, "rule_id", id_col, time_col, "_code", "horizon_us",
+        F.min(F.when(code == 1, F.col("_rn"))).over(w_fwd)
+        .alias("_then_rn"),
+        F.min(F.when(code == 1, F.col(time_col))).over(w_fwd)
+        .alias("then_ts"),
+        F.min(F.when(code == 2, F.col("_rn"))).over(w_fwd)
+        .alias("_wo_rn"))
+    gap_us = _gap_us(time_col, "then_ts")
+    matched = fwd.filter(
+        (code == 0)
+        & F.col("_then_rn").isNotNull()
+        & (F.col("_wo_rn").isNull()
+           | (F.col("_then_rn") < F.col("_wo_rn")))
+        & (gap_us <= F.col("horizon_us")))
+    return matched.select(
+        F.col(key_col), F.col("rule_id"),
+        F.col(id_col).alias("first_event_id"),
+        F.col(time_col).alias("first_ts"),
+        "then_ts",
+        F.round(gap_us / F.lit(1e6), 6).alias("gap_sec"))
 
 
 def match_timeout(
@@ -63,37 +239,17 @@ def match_timeout(
     deadline = first_ts + horizon (the earliest moment the alert is
     decidable — the streaming twin emits exactly then).
 
-    Same single-sort forward-minima plan as :func:`match_absence`:
-    one exchange on the key, no join, whole-stage codegen.
+    A one-rule :func:`match_timeout_rules` in which ``unless`` is a
+    second silencer type, tagged without a join.
     """
-    horizon_us = int(round(float(within_seconds) * 1e6))
-    w_ord = Window.partitionBy(key_col).orderBy(time_col, id_col)
-    w_fwd = w_ord.rowsBetween(1, Window.unboundedFollowing)
     typ = F.col(type_col)
-    fwd = events.select(
-        key_col, id_col, time_col, type_col,
-        F.min(F.when(typ == then, F.col(time_col))).over(w_fwd)
-        .alias("_then_ts"),
-        *([F.min(F.when(typ == unless, F.col(time_col))).over(w_fwd)
-           .alias("_unless_ts")] if unless is not None else []),
-    )
-
-    def beyond(ts_col: str):
-        return (F.col(ts_col).isNull()
-                | (F.expr(f"timestampdiff(MICROSECOND, {time_col},"
-                          f" {ts_col})") > horizon_us))
-
-    cond = (typ == first) & beyond("_then_ts")
-    if unless is not None:
-        cond = cond & beyond("_unless_ts")
-    return fwd.filter(cond).select(
-        F.col(key_col),
-        F.col(id_col).alias("first_event_id"),
-        F.col(time_col).alias("first_ts"),
-        (F.col(time_col)
-         + F.expr(f"INTERVAL {horizon_us} MICROSECOND"))
-        .alias("deadline_ts"),
-    )
+    silencers = [t for t in (then, unless) if t is not None]
+    return _timeout_plan(
+        _tag(events, key_col, time_col, id_col, type_col,
+             codes=F.array(F.when(typ == first, 0),
+                           F.when(typ.isin(silencers), 1)),
+             horizon_us=_horizon(within_seconds)),
+        key_col, time_col, id_col).drop("rule_id")
 
 
 def match_absence(
@@ -113,45 +269,17 @@ def match_absence(
 
     Output: ``(user_id, first_event_id, first_ts, then_ts, gap_sec)``
     with ``gap_sec`` = seconds from first to matched then, rounded to
-    microsecond-exact 6 dp. ``within_seconds`` bounds the gap.
+    microsecond-exact 6 dp. ``within_seconds`` bounds the gap (None:
+    unbounded). A one-rule :func:`match_absence_rules`, tagged without
+    a join.
     """
-    w_ord = Window.partitionBy(key_col).orderBy(time_col, id_col)
-    # same partition+order spec, forward-only frame: Spark evaluates
-    # all three minima in the SAME WindowExec pass as row_number —
-    # one exchange, one sort, no extra materialization
-    w_fwd = w_ord.rowsBetween(1, Window.unboundedFollowing)
     typ = F.col(type_col)
-    ranked = events.select(
-        key_col, id_col, time_col, type_col,
-        F.row_number().over(w_ord).alias("_rn"),
-    )
-    fwd = ranked.select(
-        key_col, id_col, time_col, type_col,
-        F.min(F.when(typ == then, F.col("_rn"))).over(w_fwd)
-        .alias("_then_rn"),
-        F.min(F.when(typ == then, F.col(time_col))).over(w_fwd)
-        .alias("then_ts"),
-        F.min(F.when(typ == without, F.col("_rn"))).over(w_fwd)
-        .alias("_wo_rn"),
-    )
-    matched = fwd.filter(
-        (typ == first)
-        & F.col("_then_rn").isNotNull()
-        & (F.col("_wo_rn").isNull()
-           | (F.col("_then_rn") < F.col("_wo_rn")))
-    )
-    gap_us = F.expr(
-        f"timestampdiff(MICROSECOND, {time_col}, then_ts)")
-    if within_seconds is not None:
-        matched = matched.filter(
-            gap_us <= int(round(float(within_seconds) * 1e6)))
-    return matched.select(
-        F.col(key_col),
-        F.col(id_col).alias("first_event_id"),
-        F.col(time_col).alias("first_ts"),
-        "then_ts",
-        F.round(gap_us / F.lit(1e6), 6).alias("gap_sec"),
-    )
+    return _absence_plan(
+        _tag(events, key_col, time_col, id_col, type_col,
+             codes=F.array(F.when(typ == first, 0), F.when(typ == then, 1),
+                           F.when(typ == without, 2)),
+             horizon_us=_horizon(within_seconds)),
+        key_col, time_col, id_col).drop("rule_id")
 
 
 def match_runs(
@@ -361,6 +489,58 @@ def _step_code_expr(tid_of: dict, classify: str, type_col: str):
                      f"got {classify!r}")
 
 
+def _step_tids(types):
+    """Step-type codes: index of the type among the distinct types."""
+    tid_of = {t: i for i, t in enumerate(dict.fromkeys(types))}
+    return tid_of, [tid_of[t] for t in types]
+
+
+def _spec_pattern(spec: str):
+    """A seq rule's spec string -> ``(labels, quants, step_tids)``."""
+    labels, types, quants = _validate_steps(_parse_steps_spec(spec))
+    return labels, quants, _step_tids(types)[1]
+
+
+def _seq_plan(tagged: DataFrame, pattern, skip_past, key_col, time_col,
+              id_col) -> DataFrame:
+    """The one seq kernel: :func:`_seq_scan` per (key, rule_id) group
+    of the tagged frame, ``pattern(pdf) -> (labels, quants,
+    step_tids)`` reading the group's pattern. Output ``(key, rule_id,
+    first_event_id, start_ts, end_ts, n_events, step_counts)``."""
+    out_schema = StructType([
+        StructField(key_col, tagged.schema[key_col].dataType),
+        StructField("rule_id", StringType()),
+        StructField("first_event_id", tagged.schema[id_col].dataType),
+        StructField("start_ts", TimestampType()),
+        StructField("end_ts", TimestampType()),
+        StructField("n_events", LongType()),
+        StructField("step_counts", StringType()),
+    ])
+
+    def kernel(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        labels, quants, step_tids = pattern(pdf)
+        us = (pdf[time_col].to_numpy("datetime64[ns]")
+              .astype(np.int64) // 1_000)
+        eid = pdf[id_col].to_numpy()
+        code = pdf["_code"].to_numpy(np.int8)
+        order = np.lexsort((eid, us))
+        us, eid, code = us[order], eid[order], code[order]
+        matches, _ = _seq_scan(code, us, eid, step_tids, quants,
+                               int(pdf["horizon_us"].iloc[0]), 2 ** 63,
+                               skip_past)
+        return pd.DataFrame(
+            [(*keys, eid[a], pd.Timestamp(int(us[a]), unit="us"),
+              pd.Timestamp(int(us[last]), unit="us"), int(sum(counts)),
+              ",".join(f"{lb}={c}" for lb, c in zip(labels, counts)))
+             for a, last, counts in matches],
+            columns=[f.name for f in out_schema])
+
+    # CPU-bound scan kernel: pin the shuffle's partition count so AQE
+    # byte-coalescing can't serialize the stage (CLAUDE.md invariant)
+    return (pin_partitions(tagged, key_col, "rule_id")
+            .groupBy(key_col, "rule_id").applyInPandas(kernel, out_schema))
+
+
 def match_seq(
     events: DataFrame,
     steps: Sequence[tuple[str, str, str]],
@@ -400,8 +580,8 @@ def match_seq(
     cost model as every CEP engine's NFA: one hash exchange on the
     key, a linear scan per key (quadratic only under adversarial
     anchor-retry pile-ups), perfect cross-key parallelism, and only
-    pattern-relevant event types ever reach the kernel (the type
-    filter prunes at the scan).
+    pattern-relevant event types ever reach the kernel (rows with no
+    step code are dropped at the scan).
 
     With ``classify="predicate"`` each step's second element is a SQL
     boolean expression instead of an event type — MATCH_RECOGNIZE's
@@ -413,68 +593,25 @@ def match_seq(
 
     Output: ``(key, first_event_id, start_ts, end_ts, n_events,
     step_counts)`` with ``step_counts`` like ``"view=1,click=3,
-    purchase=1"``. Reference parity: extends the reference's event
-    query family (SURVEY.md §2 funnel rows) with Flink/Trino
-    MATCH_RECOGNIZE quantified patterns, built Spark-first.
+    purchase=1"``. A one-rule :func:`match_seq_rules` whose events are
+    coded by a column expression instead of a join. Reference parity:
+    extends the reference's event query family (SURVEY.md §2 funnel
+    rows) with Flink/Trino MATCH_RECOGNIZE quantified patterns, built
+    Spark-first.
     """
     labels, types, quants = _validate_steps(steps)
     skip_past = _skip_past(after_match)
-    horizon_us = (int(round(float(within_seconds) * 1e6))
-                  if within_seconds is not None else 2 ** 62)
+    horizon_us = _horizon(within_seconds)
     if horizon_us <= 0:
         raise ValueError("within_seconds must be positive")
-    distinct_types = list(dict.fromkeys(types))
-    tid_of = {t: i for i, t in enumerate(distinct_types)}
-    step_tids = [tid_of[t] for t in types]
-
-    out_schema = StructType([
-        StructField(key_col, events.schema[key_col].dataType),
-        StructField("first_event_id", events.schema[id_col].dataType),
-        StructField("start_ts", TimestampType()),
-        StructField("end_ts", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("step_counts", StringType()),
-    ])
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        us = (pdf[time_col].to_numpy("datetime64[ns]")
-              .astype(np.int64) // 1_000)
-        eid = pdf[id_col].to_numpy()
-        tid = pdf["_tid"].to_numpy(np.int8)
-        order = np.lexsort((eid, us))
-        us, eid, tid = us[order], eid[order], tid[order]
-        matches, _ = _seq_scan(tid, us, eid, step_tids, quants,
-                               horizon_us, 2 ** 63, skip_past)
-        if not matches:
-            return pd.DataFrame({
-                key_col: pd.Series(dtype=pdf[key_col].dtype),
-                "first_event_id": pd.Series(dtype=pdf[id_col].dtype),
-                "start_ts": pd.Series(dtype="datetime64[ns]"),
-                "end_ts": pd.Series(dtype="datetime64[ns]"),
-                "n_events": pd.Series(dtype=np.int64),
-                "step_counts": pd.Series(dtype=object),
-            })
-        key_val = pdf[key_col].iloc[0]
-        rows = []
-        for a, last, counts in matches:
-            rows.append((
-                key_val, eid[a],
-                pd.Timestamp(int(us[a]), unit="us"),
-                pd.Timestamp(int(us[last]), unit="us"),
-                int(sum(counts)),
-                ",".join(f"{lb}={c}" for lb, c in zip(labels, counts)),
-            ))
-        return pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    coded = (events
-             .select(key_col, time_col, id_col,
-                     _step_code_expr(tid_of, classify, type_col)
-                     .alias("_tid"))
-             .filter(F.col("_tid").isNotNull()))
-    # CPU-bound scan kernel: pin the shuffle's partition count so AQE
-    # byte-coalescing can't serialize the stage (CLAUDE.md invariant)
-    return (pin_partitions(coded, key_col)
-            .groupBy(key_col).applyInPandas(kernel, out_schema))
+    tid_of, step_tids = _step_tids(types)
+    pattern = (labels, quants, step_tids)
+    return _seq_plan(
+        _tag(events, key_col, time_col, id_col, type_col,
+             codes=F.array(_step_code_expr(tid_of, classify, type_col)),
+             horizon_us=horizon_us),
+        lambda pdf: pattern, skip_past, key_col, time_col,
+        id_col).drop("rule_id")
 
 
 def _parse_steps_spec(spec: str) -> list[tuple[str, str, str]]:
@@ -515,104 +652,26 @@ def match_seq_rules(
     class (timeout, absence, and now general sequences). A new
     quantified pattern deploys as a row insert, not a code change.
 
-    Plan: the rules table is exploded (driver-side validation only
-    touches the tiny rules side) to distinct ``(rule_id, type)``
-    membership pairs; events broadcast-equi-join that and re-attach
-    their rule's spec + horizon, then the :func:`match_seq` scan runs
-    per ``(key, rule_id)`` group — key space |keys| x |matching rules|,
-    strictly more parallel than the single-pattern operator, event
-    duplication bounded by rules per type. The kernel parses each
-    group's spec string (one parse per Arrow group, cached per batch),
-    so the scan itself is rule-agnostic.
+    Plan: the rules become a roles table (each distinct step type of a
+    spec, coded by its first position; driver-side validation only
+    touches the tiny rules side); ONE broadcast join tags each event
+    with its code, spec and horizon per rule, then the :func:`match_seq`
+    kernel runs per ``(key, rule_id)`` group — key space |keys| x
+    |matching rules|, strictly more parallel than the single-pattern
+    operator, event duplication bounded by rules per type. The kernel
+    parses each group's spec string once, so the scan itself is
+    rule-agnostic.
 
     Output: ``(key, rule_id, first_event_id, start_ts, end_ts,
     n_events, step_counts)``.
     """
     skip_past = _skip_past(after_match)
-    rrows = rules.select("rule_id", "steps", "within_seconds").collect()
-    if not rrows:
-        raise ValueError("rules table is empty")
-    for r in rrows:                       # fail fast on bad specs
-        _validate_steps(_parse_steps_spec(r["steps"]))
-        if not (float(r["within_seconds"]) > 0):
-            raise ValueError(
-                f"rule {r['rule_id']}: within_seconds must be positive")
-
-    out_schema = StructType([
-        StructField(key_col, events.schema[key_col].dataType),
-        StructField("rule_id", StringType()),
-        StructField("first_event_id", events.schema[id_col].dataType),
-        StructField("start_ts", TimestampType()),
-        StructField("end_ts", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("step_counts", StringType()),
-    ])
-
-    def kernel(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        key_val, rule = keys
-        empty = pd.DataFrame({
-            key_col: pd.Series(dtype=pdf[key_col].dtype),
-            "rule_id": pd.Series(dtype=object),
-            "first_event_id": pd.Series(dtype=pdf[id_col].dtype),
-            "start_ts": pd.Series(dtype="datetime64[ns]"),
-            "end_ts": pd.Series(dtype="datetime64[ns]"),
-            "n_events": pd.Series(dtype=np.int64),
-            "step_counts": pd.Series(dtype=object),
-        })
-        if not len(pdf):
-            return empty
-        steps = _parse_steps_spec(pdf["_steps"].iloc[0])
-        labels, types, quants = _validate_steps(steps)
-        horizon_us = int(pdf["_horizon_us"].iloc[0])
-        tid_of = {t: i for i, t in enumerate(dict.fromkeys(types))}
-        step_tids = [tid_of[t] for t in types]
-        keep = pdf[type_col].isin(tid_of.keys()).to_numpy()
-        pdf = pdf[keep]
-        if not len(pdf):
-            return empty
-        us = (pdf[time_col].to_numpy("datetime64[ns]")
-              .astype(np.int64) // 1_000)
-        eid = pdf[id_col].to_numpy()
-        tid = pdf[type_col].map(tid_of).to_numpy(np.int8)
-        order = np.lexsort((eid, us))
-        us, eid, tid = us[order], eid[order], tid[order]
-        matches, _ = _seq_scan(tid, us, eid, step_tids, quants,
-                               horizon_us, 2 ** 63, skip_past)
-        if not matches:
-            return empty
-        rows = []
-        for a, last, counts in matches:
-            rows.append((
-                key_val, rule, eid[a],
-                pd.Timestamp(int(us[a]), unit="us"),
-                pd.Timestamp(int(us[last]), unit="us"),
-                int(sum(counts)),
-                ",".join(f"{lb}={c}" for lb, c in zip(labels, counts)),
-            ))
-        return pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    r = rules.select(
-        "rule_id", F.col("steps").alias("_steps"),
-        F.round(F.col("within_seconds").cast("double") * 1e6)
-        .cast("long").alias("_horizon_us"))
-    membership = (r.select(
-        "rule_id",
-        F.explode(F.transform(
-            F.split("_steps", ","),
-            lambda p: F.trim(F.regexp_extract(p, r"^(.*):[^:]*$", 1))))
-        .alias("_et"))
-        .distinct())
-    tagged = (events.select(key_col, time_col, id_col, type_col)
-              .join(F.broadcast(membership),
-                    F.col(type_col) == F.col("_et"))
-              .join(F.broadcast(r), "rule_id")
-              .select(key_col, "rule_id", time_col, id_col, type_col,
-                      "_steps", "_horizon_us"))
-    # CPU-bound scan kernel: pin the shuffle's partition count so AQE
-    # byte-coalescing can't serialize the stage (CLAUDE.md invariant)
-    return (pin_partitions(tagged, key_col, "rule_id")
-            .groupBy(key_col, "rule_id").applyInPandas(
-                kernel, out_schema))
+    _check_rules(rules, "steps")
+    return _seq_plan(
+        _tag(events, key_col, time_col, id_col, type_col,
+             roles=_roles(rules)),
+        lambda pdf: _spec_pattern(pdf["steps"].iloc[0]), skip_past,
+        key_col, time_col, id_col)
 
 
 def match_timeout_rules(
@@ -628,62 +687,33 @@ def match_timeout_rules(
     within_seconds)`` — instead of code. New alert rules deploy as a
     row insert, not a code change (the broadcast-state idiom of CEP
     engines; the streaming twin re-reads the static rules side every
-    micro-batch).
+    micro-batch). Every ``within_seconds`` must be positive.
 
     One alert row per (rule, anchor event of that rule's
     ``first_type``) with no ``then_type`` event inside the rule's own
     horizon. A rule may have ``first_type == then_type`` ("no repeat
-    within T"): the anchor never silences itself — the tagged union
-    orders the silencer copy of an event BEFORE its anchor copy at the
-    same (ts, id), so only genuinely later events fall in the forward
-    frame.
+    within T"): the event's silencer copy sorts BEFORE its anchor copy
+    at the same (ts, id), so only genuinely later events fall in the
+    anchor's forward frame.
 
-    Plan: two broadcast joins of the (tiny) rules table fan each event
-    out to the rules it participates in, then the match_timeout
-    forward-minimum runs per (key, rule_id) — ONE exchange+sort whose
+    Plan: ONE broadcast join of the (tiny) roles table fans each event
+    out to the (rule, role) pairs it plays, then the match_timeout
+    forward minimum runs per (key, rule_id) — ONE exchange+sort whose
     key space is |keys| x |matching rules| (MORE parallel than the
-    static operator, never less), event duplication bounded by rules
+    static operator, never less), event duplication bounded by roles
     per type, no per-row Python.
 
     Output: ``(user_id, rule_id, first_event_id, first_ts,
     deadline_ts)``.
     """
-    r = rules.select(
-        "rule_id", "first_type", "then_type",
-        F.round(F.col("within_seconds").cast("double") * 1e6)
-        .cast("long").alias("_horizon_us"))
-    base = events.select(key_col, id_col, time_col, type_col)
-    anchors = base.join(
-        F.broadcast(r), F.col(type_col) == F.col("first_type")) \
-        .withColumn("_role", F.lit(0))
-    silencers = base.join(
-        F.broadcast(r), F.col(type_col) == F.col("then_type")) \
-        .withColumn("_role", F.lit(1))
-    tagged = anchors.unionByName(silencers)
-    # silencer copy sorts BEFORE the anchor copy of the same event
-    # (role desc), so an event can never silence itself; any distinct
-    # later event still lands in the anchor's forward frame
-    w_ord = Window.partitionBy(key_col, "rule_id").orderBy(
-        F.col(time_col).asc(), F.col(id_col).asc(),
-        F.col("_role").desc())
-    w_fwd = w_ord.rowsBetween(1, Window.unboundedFollowing)
-    fwd = tagged.select(
-        key_col, "rule_id", id_col, time_col, "_role", "_horizon_us",
-        F.min(F.when(F.col("_role") == 1, F.col(time_col)))
-        .over(w_fwd).alias("_then_ts"),
-    )
-    silent = (F.col("_then_ts").isNotNull()
-              & (F.expr(f"timestampdiff(MICROSECOND, {time_col},"
-                        " _then_ts)") <= F.col("_horizon_us")))
-    return (fwd.filter((F.col("_role") == 0) & ~silent)
-            .select(
-                F.col(key_col),
-                F.col("rule_id"),
-                F.col(id_col).alias("first_event_id"),
-                F.col(time_col).alias("first_ts"),
-                F.timestamp_micros(
-                    F.unix_micros(F.col(time_col).cast("timestamp"))
-                    + F.col("_horizon_us")).alias("deadline_ts")))
+    _check_rules(rules)
+    out = _timeout_plan(
+        _tag(events, key_col, time_col, id_col, type_col,
+             roles=_roles(rules, *TIMEOUT_ROLES)),
+        key_col, time_col, id_col)
+    # deadline_ts is a session-zone timestamp whatever the event-time type
+    return out.withColumn("deadline_ts",
+                          F.col("deadline_ts").cast("timestamp"))
 
 
 def match_absence_rules(
@@ -699,71 +729,23 @@ def match_absence_rules(
     without_type, within_seconds)`` — completing the rules-as-data
     story begun by :func:`match_timeout_rules`.
 
-    Unlike the timeout twin's role-tagged union, the fan-out here is a
-    MEMBERSHIP join: the rules table is exploded (driver-side, it is
-    tiny) to distinct ``(rule_id, participating_type)`` pairs, events
-    equi-join that, and the full rule row re-attaches by rule_id — two
-    broadcast hash joins, one row per (event, rule), NO nested loop
-    and no role bookkeeping. Each row carries its rule's type columns,
-    so the single-pattern forward-minima logic runs verbatim per
-    (key, rule_id) partition; the strictly-after frame excludes
-    self-matches naturally, which makes ``first_type == then_type``
-    ("A then the next A") work with no tie tricks.
+    Same plan as the timeout twin: ONE broadcast join against the roles
+    table tags each event once per (rule, role) it plays, then the
+    match_absence forward minima run per (key, rule_id) partition. The
+    ``(ts, id, _code desc)`` order keeps an anchor from matching its
+    own copy, which makes ``first_type == then_type`` ("A then the next
+    A") work.
 
-    ``then_type == without_type`` is rejected: the silencer would
-    always tie its own match and the rule could never fire.
+    ``then_type == without_type`` is rejected (the silencer would
+    always tie its own match and the rule could never fire), and so is
+    a NULL or non-positive ``within_seconds``.
 
     Output: ``(user_id, rule_id, first_event_id, first_ts, then_ts,
     gap_sec)`` — the batch twin of the streaming form, row-identical
     on drained input.
     """
-    bad = rules.filter(
-        F.col("then_type") == F.col("without_type")).limit(1).collect()
-    if bad:
-        raise ValueError(
-            f"rule {bad[0]['rule_id']}: then_type == without_type "
-            "can never fire (the silencer ties every match)")
-    r = rules.select(
-        "rule_id", "first_type", "then_type", "without_type",
-        F.round(F.col("within_seconds").cast("double") * 1e6)
-        .cast("long").alias("_horizon_us"))
-    membership = (r.select(
-        "rule_id", F.explode(F.array(
-            "first_type", "then_type", "without_type")).alias("_et"))
-        .distinct())
-    tagged = (events.select(key_col, id_col, time_col, type_col)
-              .join(F.broadcast(membership),
-                    F.col(type_col) == F.col("_et"))
-              .join(F.broadcast(r), "rule_id"))
-    w_ord = Window.partitionBy(key_col, "rule_id").orderBy(
-        time_col, id_col)
-    w_fwd = w_ord.rowsBetween(1, Window.unboundedFollowing)
-    typ = F.col(type_col)
-    ranked = tagged.select(
-        key_col, "rule_id", id_col, time_col, type_col,
-        "first_type", "then_type", "without_type", "_horizon_us",
-        F.row_number().over(w_ord).alias("_rn"))
-    fwd = ranked.select(
-        key_col, "rule_id", id_col, time_col, type_col,
-        "first_type", "_horizon_us",
-        F.min(F.when(typ == F.col("then_type"), F.col("_rn")))
-        .over(w_fwd).alias("_then_rn"),
-        F.min(F.when(typ == F.col("then_type"), F.col(time_col)))
-        .over(w_fwd).alias("then_ts"),
-        F.min(F.when(typ == F.col("without_type"), F.col("_rn")))
-        .over(w_fwd).alias("_wo_rn"))
-    gap_us = F.expr(
-        f"timestampdiff(MICROSECOND, {time_col}, then_ts)")
-    matched = fwd.filter(
-        (typ == F.col("first_type"))
-        & F.col("_then_rn").isNotNull()
-        & (F.col("_wo_rn").isNull()
-           | (F.col("_then_rn") < F.col("_wo_rn")))
-        & (gap_us <= F.col("_horizon_us")))
-    return matched.select(
-        F.col(key_col),
-        F.col("rule_id"),
-        F.col(id_col).alias("first_event_id"),
-        F.col(time_col).alias("first_ts"),
-        "then_ts",
-        F.round(gap_us / F.lit(1e6), 6).alias("gap_sec"))
+    _check_rules(rules, "then_type", "without_type")
+    return _absence_plan(
+        _tag(events, key_col, time_col, id_col, type_col,
+             roles=_roles(rules, *ABSENCE_ROLES)),
+        key_col, time_col, id_col)

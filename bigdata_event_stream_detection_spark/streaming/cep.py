@@ -40,15 +40,16 @@ For timeout and absence, non-anchor events older than ``watermark -
 horizon`` are pruned: future anchors have ts >= watermark, so nothing
 can ever reach them.
 
-Keying. Rules tables become ROLES tables ``(rule_id, event_type, code,
-horizon_us[, steps])``, derived in SQL (so rules are re-read every
-micro-batch), deduplicated per rule, and attached with one broadcast
-join, so the stream is scanned once; state is keyed by (user, rule). An event playing two roles ("no repeat within
-T", "A then the next A") fans out one copy per role, and the
-strictly-after (ts, event_id) comparison keeps an anchor from matching
-its own copy. The fixed timeout and absence twins are one-rule tables
-on the same path. Fixed seq and runs classify with a column expression
-and stay keyed by user.
+Keying. Rules tables become ROLES tables ``(rule_id, _et, _code,
+horizon_us[, steps])`` by ``operators.cep._roles``, the derivation (and
+``_check_rules`` the validation) batch uses too: derived in SQL (so
+rules are re-read every micro-batch) and attached with one broadcast
+join, so the stream is scanned once; state is keyed by (user, rule).
+An event playing two roles ("no repeat within T", "A then the next A")
+fans out one copy per role, and the strictly-after (ts, event_id)
+comparison keeps an anchor from matching its own copy. The fixed
+timeout and absence twins are one-rule tables on the same path. Fixed
+seq and runs classify with a column expression and stay keyed by user.
 
 Watermark rule, identical for all seven: every event of the input
 stream advances the watermark, not only pattern events (a stream of
@@ -68,7 +69,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.cep import (
-    _parse_steps_spec, _seq_scan, _skip_past, _step_code_expr,
+    ABSENCE_ROLES, TIMEOUT_ROLES, _check_rules, _parse_steps_spec, _roles,
+    _seq_scan, _skip_past, _spec_pattern, _step_code_expr, _step_tids,
     _validate_steps,
 )
 
@@ -187,24 +189,6 @@ def _keyed(stream: DataFrame, time_col, key_col, type_col, id_col,
         return ev.join(F.broadcast(roles), "_et").drop("_et")
     return ev.filter(
         F.when(F.col("_code").isNotNull(), F.col("_ts")).isNotNull())
-
-
-def _horizon_us():
-    return (F.round(F.col("within_seconds").cast("double") * 1e6)
-            .cast("long").alias("horizon_us"))
-
-
-def _roles(rules: DataFrame, *roles) -> DataFrame:
-    """Rules with one type column per role -> the roles table
-    ``(rule_id, _et, _code, horizon_us)``, deduplicated per rule (a
-    type named twice for one role plays it once); ``roles`` are
-    ``(column, code)`` pairs and NULL types play no role."""
-    return (rules.select("rule_id", _horizon_us(), F.inline(
-        F.array_distinct(F.array(*[
-            F.struct(F.col(c).alias("_et"),
-                     F.lit(code).cast("tinyint").alias("_code"))
-            for c, code in roles]))))
-        .filter(F.col("_et").isNotNull()))
 
 
 def _one_rule(stream: DataFrame, within_seconds, **types) -> DataFrame:
@@ -328,17 +312,6 @@ def _runs_decision(min_run, gap_us):
     return decide
 
 
-def _step_tids(types):
-    """Step-type codes: index of the type among the distinct types."""
-    tid_of = {t: i for i, t in enumerate(dict.fromkeys(types))}
-    return tid_of, [tid_of[t] for t in types]
-
-
-def _spec_pattern(spec: str):
-    labels, types, quants = _validate_steps(_parse_steps_spec(spec))
-    return labels, quants, _step_tids(types)[1]
-
-
 def _seq_rebase(code, old, new):
     """A rule's spec string changed: re-encode its buffered codes under
     the new spec; types absent from it leave the buffer (-1)."""
@@ -406,8 +379,7 @@ def streaming_match_timeout(
     return _without_rule_id(_timeout_stream(
         _keyed(stream, time_col, key_col, type_col, id_col,
                watermark_delay,
-               roles=_roles(rules, ("first_type", 0), ("then_type", 1),
-                            ("unless_type", 1))),
+               roles=_roles(rules, *TIMEOUT_ROLES, ("unless_type", 1))),
         max_events_in_state))
 
 
@@ -436,11 +408,12 @@ def streaming_match_timeout_rules(
     applies to a group the next time data for it arrives. State is
     keyed by (user, rule) and stores the rule's own horizon, so a group
     stays decidable on a pure timeout wake-up with no rules lookup.
+    Every ``within_seconds`` must be positive.
     """
+    _check_rules(rules)
     return _timeout_stream(
         _keyed(stream, time_col, key_col, type_col, id_col,
-               watermark_delay,
-               roles=_roles(rules, ("first_type", 0), ("then_type", 1))),
+               watermark_delay, roles=_roles(rules, *TIMEOUT_ROLES)),
         max_events_in_state)
 
 
@@ -470,9 +443,10 @@ def streaming_match_absence(
     """
     rules = _one_rule(stream, within_seconds, first_type=first,
                       then_type=then, without_type=without)
+    _check_rules(rules, "then_type", "without_type")
     return _without_rule_id(_absence_stream(
         _keyed(stream, time_col, key_col, type_col, id_col,
-               watermark_delay, roles=_absence_roles(rules)),
+               watermark_delay, roles=_roles(rules, *ABSENCE_ROLES)),
         max_events_in_state))
 
 
@@ -495,23 +469,14 @@ def streaming_match_absence_rules(
     ``(rule_id, first_type, then_type, without_type, within_seconds)``
     are the static side of a per-micro-batch join, state is keyed by
     (user, rule) and stores the rule's horizon. ``then_type ==
-    without_type`` is rejected: the silencer would tie every match.
+    without_type`` is rejected (the silencer would tie every match), and
+    so is a NULL or non-positive ``within_seconds``.
     """
+    _check_rules(rules, "then_type", "without_type")
     return _absence_stream(
         _keyed(stream, time_col, key_col, type_col, id_col,
-               watermark_delay, roles=_absence_roles(rules)),
+               watermark_delay, roles=_roles(rules, *ABSENCE_ROLES)),
         max_events_in_state)
-
-
-def _absence_roles(rules):
-    bad = rules.filter(
-        F.col("then_type") == F.col("without_type")).limit(1).collect()
-    if bad:
-        raise ValueError(
-            f"rule {bad[0]['rule_id']}: then_type == without_type "
-            "can never fire (the silencer ties every match)")
-    return _roles(rules, ("first_type", 0), ("then_type", 1),
-                  ("without_type", 2))
 
 
 def _absence_stream(keyed, max_events_in_state):
@@ -636,25 +601,10 @@ def streaming_match_seq_rules(
     data for it arrives (buffered types absent from the new spec are
     dropped); already-emitted matches are never retracted.
     """
-    rrows = rules.select("rule_id", "steps", "within_seconds").collect()
-    if not rrows:
-        raise ValueError("rules table is empty")
-    for r in rrows:
-        _validate_steps(_parse_steps_spec(r["steps"]))
-        if not (float(r["within_seconds"]) > 0):
-            raise ValueError(
-                f"rule {r['rule_id']}: within_seconds must be positive")
-    # the spec's distinct step types in first-appearance order, each
-    # coded by its position — the same codes _step_tids assigns
-    types = F.array_distinct(F.transform(
-        F.split("steps", ","),
-        lambda p: F.trim(F.regexp_extract(p, r"^(.*):[^:]*$", 1))))
-    roles = (rules.select("rule_id", "steps", _horizon_us(),
-                          F.posexplode(types).alias("_code", "_et"))
-             .withColumn("_code", F.col("_code").cast("tinyint")))
+    _check_rules(rules, "steps")
     return _cep_state_stream(
         _keyed(stream, time_col, key_col, type_col, id_col,
-               watermark_delay, roles=roles),
+               watermark_delay, roles=_roles(rules)),
         _seq_decision(lambda extra: (*_spec_pattern(extra[0]), extra[1])),
         SEQ_RULES_OUT_SCHEMA, [("steps", "string"), ("horizon_us", "long")],
         max_events_in_state, rebase=_seq_rebase)

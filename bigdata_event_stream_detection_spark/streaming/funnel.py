@@ -162,9 +162,13 @@ def streaming_funnel_completions(
 
     step_of = F.create_map(*[
         x for i, s in enumerate(steps) for x in (F.lit(s), F.lit(i))])
+    # every event advances the watermark, funnel step or not: the step
+    # filter reads the event-time column, or Catalyst pushes it below
+    # withWatermark
     keyed = (
         stream.withWatermark(time_col, watermark_delay)
-        .filter(F.col(type_col).isin(list(steps)))
+        .filter(F.when(F.col(type_col).isin(list(steps)),
+                       F.col(time_col)).isNotNull())
         .select(F.col(user_col).alias("user_id"), time_col,
                 step_of[F.col(type_col)].cast("int").alias("_step"))
     )

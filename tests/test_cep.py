@@ -11,6 +11,7 @@ import random
 from datetime import datetime, timedelta
 
 import pandas as pd
+import pytest
 
 from bigdata_event_stream_detection_spark.operators.cep import (
     match_absence,
@@ -98,22 +99,61 @@ def test_match_absence_matches_bruteforce_random(spark):
                 T0 + timedelta(seconds=rng.randint(0, 7200)),
                 rng.choice(["A", "B", "C", "noise"])))
             eid += 1
-    for within in (None, 1800):
-        got = _collect(match_absence(
-            _df(spark, rows), "A", "B", "C", within_seconds=within))
-        assert got == _brute(rows, "A", "B", "C", within)
+    # role-sharing patterns: an event that is both anchor and then
+    # ("A then the next A") or both anchor and without
+    for pattern in (("A", "B", "C"), ("A", "A", "C"), ("A", "B", "A")):
+        for within in (None, 1800):
+            got = _collect(match_absence(
+                _df(spark, rows), *pattern, within_seconds=within))
+            assert got == _brute(rows, *pattern, within), pattern
 
 
-def test_match_absence_single_sort_plan(spark):
-    """All three forward minima and the row_number share one window
-    spec: the physical plan must contain exactly one exchange on the
-    key and no join."""
-    rows = [(1, 10, T0, "A"), (1, 11, T0 + timedelta(minutes=5), "B")]
-    plan = match_absence(
-        _df(spark, rows), "A", "B", "C")._jdf.queryExecution() \
+def _batch_twins(spark):
+    """Each batch CEP twin -> its plan over a tiny input."""
+    from bigdata_event_stream_detection_spark.operators import cep
+
+    ev = _df(spark, [(1, 10, T0, "A"),
+                     (1, 11, T0 + timedelta(minutes=5), "B")])
+    timeout_rules = spark.createDataFrame(
+        [("r1", "A", "B", 60.0)],
+        "rule_id string, first_type string, then_type string,"
+        " within_seconds double")
+    absence_rules = spark.createDataFrame(
+        [("r1", "A", "B", "C", 60.0)],
+        "rule_id string, first_type string, then_type string,"
+        " without_type string, within_seconds double")
+    seq_rules = spark.createDataFrame(
+        [("r1", "A:1,B:+", 60.0)],
+        "rule_id string, steps string, within_seconds double")
+    return {
+        "timeout": lambda: cep.match_timeout(ev, "A", "B", 60.0,
+                                             unless="C"),
+        "absence": lambda: cep.match_absence(ev, "A", "B", "C"),
+        "seq": lambda: cep.match_seq(
+            ev, [("a", "A", "1"), ("b", "B", "+")], 60.0),
+        "timeout_rules": lambda: cep.match_timeout_rules(ev, timeout_rules),
+        "absence_rules": lambda: cep.match_absence_rules(ev, absence_rules),
+        "seq_rules": lambda: cep.match_seq_rules(ev, seq_rules),
+    }
+
+
+@pytest.mark.parametrize("twin", [
+    "absence", "timeout", "seq", "absence_rules", "timeout_rules",
+    "seq_rules"])
+def test_match_absence_single_sort_plan(spark, twin):
+    """One plan per pattern: every batch twin runs on one hash exchange
+    on (key, rule). A fixed twin tags its events with a column
+    expression (no join at all); a rules twin with exactly one
+    broadcast hash join against its roles table."""
+    plan = _batch_twins(spark)[twin]()._jdf.queryExecution() \
         .executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Join" not in plan and "CartesianProduct" not in plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "CartesianProduct" not in plan, plan
+    if twin.endswith("_rules"):
+        assert plan.count("BroadcastHashJoin") == 1, plan
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+    else:
+        assert "Join" not in plan, plan
 
 
 def _brute_timeout(rows, first, then, within, unless=None):
@@ -175,11 +215,14 @@ def test_match_timeout_matches_bruteforce_random(spark):
                 T0 + timedelta(seconds=rng.randint(0, 7200)),
                 rng.choice(["A", "B", "C", "noise"])))
             eid += 1
-    for unless in (None, "C"):
-        got = _collect_timeout(match_timeout(
-            _df(spark, rows), "A", "B", within_seconds=1800,
-            unless=unless))
-        assert got == _brute_timeout(rows, "A", "B", 1800, unless)
+    # ("A", "A"): "no repeat within T" — each event is anchor and
+    # silencer, and must never silence itself
+    for first, then in (("A", "B"), ("A", "A")):
+        for unless in (None, "C"):
+            got = _collect_timeout(match_timeout(
+                _df(spark, rows), first, then, within_seconds=1800,
+                unless=unless))
+            assert got == _brute_timeout(rows, first, then, 1800, unless)
 
 
 def _brute_runs(rows, run_type, min_run, gap=None):
@@ -424,7 +467,7 @@ def test_match_absence_rules_plan_broadcasts_rules(spark):
         .executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastHashJoin") == 2
+    assert plan.count("BroadcastHashJoin") == 1
 
 
 # ---------------------------------------------------------------------------
@@ -663,6 +706,46 @@ def test_match_seq_rules_validation(spark):
         match_seq_rules(df, rdf([("r", "A:1", 0.0)]))
     with pytest.raises(ValueError, match="bad step"):
         match_seq_rules(df, rdf([("r", "A", 60.0)]))
+
+
+@pytest.mark.parametrize("within", [None, 0.0, -60.0])
+def test_match_rules_reject_non_positive_horizons(spark, within):
+    """Every rules twin, batch and streaming, rejects a NULL, zero or
+    negative horizon up front (the rules validation is shared) — a
+    NULL horizon would otherwise alert with a NULL deadline, a negative
+    one before the anchor, and an absence rule would silently never
+    match."""
+    from bigdata_event_stream_detection_spark.operators.cep import (
+        match_absence_rules,
+        match_timeout_rules,
+    )
+    from bigdata_event_stream_detection_spark.streaming.cep import (
+        streaming_match_absence_rules,
+        streaming_match_timeout_rules,
+    )
+
+    df = _df(spark, [(1, 10, T0, "A"), (1, 11, T0, "noise")])
+    timeout = spark.createDataFrame(
+        [("ok", "A", "B", 60.0), ("bad", "A", "B", within)],
+        "rule_id string, first_type string, then_type string,"
+        " within_seconds double")
+    absence = spark.createDataFrame(
+        [("ok", "A", "B", "C", 60.0), ("bad", "A", "B", "C", within)],
+        "rule_id string, first_type string, then_type string,"
+        " without_type string, within_seconds double")
+    stream = (spark.readStream.format("rate").load()
+              .selectExpr("value AS user_id", "value AS event_id",
+                          "timestamp AS ts", "'A' AS event_type"))
+    for twin, rules in ((match_timeout_rules, timeout),
+                        (match_absence_rules, absence)):
+        with pytest.raises(ValueError, match="rule bad: within_seconds "
+                                             "must be positive"):
+            twin(df, rules)
+    for twin, rules in ((streaming_match_timeout_rules, timeout),
+                        (streaming_match_absence_rules, absence)):
+        with pytest.raises(ValueError, match="rule bad: within_seconds "
+                                             "must be positive"):
+            twin(stream, rules)
 
 
 def test_parse_steps_spec_labels(spark):

@@ -86,6 +86,34 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
     assert out.dropped_events_acc.value == 0
 
 
+def test_streaming_funnel_flushes_on_non_step_sentinel(spark, tmp_path):
+    """Every event advances the watermark, funnel step or not: a stream
+    that ends in a far-future ``noise`` event resolves every pending
+    chain, with the batch completions."""
+    pdf = _make_events().sort_values("ts").reset_index(drop=True)
+    d = str(tmp_path / "in")
+    os.makedirs(d)
+    _write_chunk(d, "c0.parquet", pdf, 0)
+    _write_chunk(d, "zz.parquet", pd.DataFrame(
+        {"user_id": [99], "event_type": ["noise"],
+         "ts": [pdf["ts"].max() + pd.Timedelta(days=30)]}), 9)
+
+    stream = (spark.readStream
+              .schema("user_id long, event_type string, ts timestamp")
+              .option("maxFilesPerTrigger", "1").parquet(d))
+    q = (streaming_funnel_completions(stream, STEPS, WITHIN)
+         .writeStream.format("memory").queryName("funnel_noise")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = {r["user_id"]: (r["t0"], r["t1"], r["t2"])
+           for r in spark.table("funnel_noise").collect()}
+    batch = funnel_times(
+        spark.createDataFrame(pdf), STEPS, within_seconds=WITHIN)
+    truth = {r["user_id"]: (r["t0"], r["t1"], r["t2"])
+             for r in batch.filter(F.col("t2").isNotNull()).collect()}
+    assert got == truth and set(got) == {1, 4}
+
+
 def _write_chunk(path: str, name: str, pdf: pd.DataFrame,
                  mtime_offset: int) -> None:
     f = os.path.join(path, name)
