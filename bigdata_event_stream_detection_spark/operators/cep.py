@@ -143,9 +143,14 @@ def _tag(events: DataFrame, key_col, time_col, id_col, type_col,
 
 def _horizon(within_seconds) -> int:
     """Seconds -> horizon micros; None (unbounded) -> 2**62, far beyond
-    any event-time span."""
-    return (int(round(float(within_seconds) * 1e6))
-            if within_seconds is not None else 2 ** 62)
+    any event-time span. A bounded horizon must be positive, as every
+    rules table's is (:func:`_check_rules`)."""
+    if within_seconds is None:
+        return 2 ** 62
+    horizon_us = int(round(float(within_seconds) * 1e6))
+    if horizon_us <= 0:
+        raise ValueError("within_seconds must be positive")
+    return horizon_us
 
 
 # ---------------------------------------------------------------------------
@@ -602,8 +607,6 @@ def match_seq(
     labels, types, quants = _validate_steps(steps)
     skip_past = _skip_past(after_match)
     horizon_us = _horizon(within_seconds)
-    if horizon_us <= 0:
-        raise ValueError("within_seconds must be positive")
     tid_of, step_tids = _step_tids(types)
     pattern = (labels, quants, step_tids)
     return _seq_plan(

@@ -63,12 +63,11 @@ def get_spark(
                 "RocksDBStateStoreProvider")
         .config("spark.sql.streaming.stateStore.rocksdb."
                 "changelogCheckpointing.enabled", "true")
-        # fork-server preload: stock pyspark.daemon forks a fresh worker
-        # per task and each one re-imports pandas/pyarrow (~5 s CPU of
-        # page faults, a FIXED per-task cost that anti-scales with
-        # partition count — measured 35% of executor CPU at 96
-        # partitions). daemon.py imports everything once pre-fork so
-        # workers inherit the modules copy-on-write.
+        # fork server for every Python worker: daemon.py imports
+        # pandas/pyarrow once pre-fork (~5 s CPU of page faults per
+        # fresh worker otherwise) and stat-guards the pyspark.zip
+        # re-read that Spark's per-task importlib.invalidate_caches()
+        # triggers (~0.4 s per task otherwise)
         .config("spark.python.daemon.module",
                 "bigdata_event_stream_detection_spark.daemon")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

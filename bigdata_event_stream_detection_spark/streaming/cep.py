@@ -69,8 +69,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.cep import (
-    ABSENCE_ROLES, TIMEOUT_ROLES, _check_rules, _parse_steps_spec, _roles,
-    _seq_scan, _skip_past, _spec_pattern, _step_code_expr, _step_tids,
+    ABSENCE_ROLES, TIMEOUT_ROLES, _check_rules, _horizon, _parse_steps_spec,
+    _roles, _seq_scan, _skip_past, _spec_pattern, _step_code_expr, _step_tids,
     _validate_steps,
 )
 
@@ -193,7 +193,9 @@ def _keyed(stream: DataFrame, time_col, key_col, type_col, id_col,
 
 def _one_rule(stream: DataFrame, within_seconds, **types) -> DataFrame:
     """A fixed pattern as a one-row rules table (rule_id ""), built in
-    the JVM so the per-micro-batch re-read starts no Python worker."""
+    the JVM so the per-micro-batch re-read starts no Python worker. Its
+    horizon must be positive, as in the batch fixed twins."""
+    _horizon(within_seconds)
     return stream.sparkSession.range(1).select(
         F.lit("").alias("rule_id"),
         F.lit(float(within_seconds)).alias("within_seconds"),

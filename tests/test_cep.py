@@ -748,6 +748,37 @@ def test_match_rules_reject_non_positive_horizons(spark, within):
             twin(stream, rules)
 
 
+@pytest.mark.parametrize("within", [0.0, -60.0])
+def test_fixed_twins_reject_non_positive_horizons(spark, within):
+    """The fixed twins validate their horizon like the rules twins: a
+    zero horizon would alert although the ``then`` event follows, a
+    negative one with a deadline before the anchor. ``None`` still
+    means unbounded for the batch absence twin."""
+    from bigdata_event_stream_detection_spark.operators.cep import (
+        match_absence,
+        match_timeout,
+    )
+    from bigdata_event_stream_detection_spark.streaming.cep import (
+        streaming_match_absence,
+        streaming_match_timeout,
+    )
+
+    df = _df(spark, [(1, 10, T0, "A"), (1, 11, T0 + timedelta(minutes=1),
+                                         "B")])
+    stream = (spark.readStream.format("rate").load()
+              .selectExpr("value AS user_id", "value AS event_id",
+                          "timestamp AS ts", "'A' AS event_type"))
+    for build in (lambda: match_timeout(df, "A", "B", within),
+                  lambda: match_absence(df, "A", "B", "C", within),
+                  lambda: streaming_match_timeout(stream, "A", "B", within),
+                  lambda: streaming_match_absence(stream, "A", "B", "C",
+                                                  within)):
+        with pytest.raises(ValueError,
+                           match="within_seconds must be positive"):
+            build()
+    assert match_absence(df, "A", "B", "C", None).count() == 1
+
+
 def test_parse_steps_spec_labels(spark):
     from bigdata_event_stream_detection_spark.operators.cep import (
         _parse_steps_spec,
