@@ -24,8 +24,10 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     ``cores=None`` uses ``SPARK_GRAFT_CPUS`` (default ``local[*]``).
-    ``shuffle_partitions`` defaults to the core count — at cluster scale
-    set it to 2-3x total executor cores instead.
+    ``shuffle_partitions`` defaults to the core count, so each stateful
+    stage runs one wave of tasks (each state partition pays a fixed
+    state-store commit and Python pass per micro-batch) — at cluster
+    scale set it to 2-3x total executor cores instead.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -35,7 +37,7 @@ def get_spark(
         master = f"local[{cores}]"
         ncores = cores
     if shuffle_partitions is None:
-        shuffle_partitions = max(ncores, 8)
+        shuffle_partitions = ncores
 
     # make the package importable by the worker daemon regardless of how
     # the driver was launched (spark-submit --py-files covers clusters;

@@ -3,42 +3,66 @@
 The batch pipeline (plans/pipeline.py) is a pure DataFrame->DataFrame
 composition; this module runs the same operators continuously:
 
-    readStream(sequences) -> withWatermark -> state key
+    readStream(sequences) -> state key -> withWatermark
       -> grouped pandas state per key: buffer docs, close a window or
-         session once the event-time watermark passes its end, run EM
-         theme extraction + HMM train/decode in one numpy kernel, emit
-         the detected-event strength rows
+         session once the key's close threshold passes its end, emit
+         its docs as one packed row
+      -> hash shuffle by closed group -> EM theme extraction + HMM
+         train/decode in one numpy kernel, emit the detected-event
+         strength rows
       -> (optionally) stream-stream join correlating events across
          sources inside the same window
       -> exactly-once file sink + checkpoint
 
 Every detector rides ONE doc buffer, ``_windowed_state_stream``, and
 ONE kernel call, ``_window_kernel``; a detector only picks its state
-key and close rule. ``_tumbling`` keys by (window, chunk) and closes a
-window once the watermark passes its end (the window detector and
+key and close rule. Both rules close against one threshold per key
+and call: max(watermark, the key's latest buffered event time −
+watermark delay). ``_tumbling`` keys by (window index mod
+``WINDOW_BUCKETS``, chunk) and closes each buffered window whose end
+is behind the threshold (the window detector and
 ``streaming/evolution.streaming_window_themes``); the session detector
-keys by source and closes each gap-separated session once its last
-doc + gap is behind the watermark.
+keys by source and closes each gap-separated session whose last doc +
+gap is behind it.
 
 Reference mapping: the reference is pure batch (SURVEY.md §1.4); the
 windowing duplication of ``EmInputFromParser.java:67-95`` becomes
 ``window()``, its out-of-period scan filter (``RawArticleInputStream.
 java:141-142``) becomes the watermark, and the whole EM/HMM payload
 (``EmAlgo.java``, ``Hmm2.java``, ``LifeCycleAnalyserSpark.java``) runs
-inside grouped state instead of driver-mediated block scans.
+on the windows grouped state closes, instead of driver-mediated block
+scans.
 
 Scale notes (the part that must survive 1000 executors):
-* The only wide exchange before the stateful operator is the hash
-  shuffle on the state key — (window, chunk) for the tumbling
-  detector, (source,) for sessions. A hot window (an event burst)
-  fans out over ``state_chunks`` deterministic doc-hash sub-keys,
-  trading exact window pooling for the reference's own
-  split-large-window (M4) semantics — N state partitions and N kernel
-  tasks per window instead of one.
-* State per key is bounded: at most ``max_docs_in_state`` buffered
-  docs; overflow and late drops are COUNTED into the
-  ``dropped_docs_acc`` accumulator on the returned DataFrame, never
-  silent.
+* Two wide exchanges: the hash shuffle on the state key — (window
+  bucket, chunk) for the tumbling detector, (source,) for sessions —
+  before the stateful operator, and a hash shuffle of the closed
+  groups (one packed row each) after it. The kernel runs after the
+  second, so its parallelism is the number of windows (or sessions)
+  closing in the batch, not the number of state keys. A hot window
+  (an event burst) fans out over ``state_chunks`` deterministic
+  doc-hash sub-keys, trading exact window pooling for the reference's
+  own split-large-window (M4) semantics — N kernel tasks per window
+  instead of one.
+* At most ``WINDOW_BUCKETS`` (B = 8) × ``state_chunks`` tumbling keys
+  exist at once, each holding its bucket's open windows (windows B
+  apart). The bucket key's own latest event time − delay is a lower
+  bound of the watermark Spark applies in the next batch, so a window
+  closes in the micro-batch that carries its closing data instead of
+  one trigger later, and every doc the next watermark accepts still
+  finds its window open. This needs a later window of the same bucket
+  in the batch, that is more than B windows per batch; otherwise the
+  window closes when the watermark passes it, as before. The one-batch
+  grace that Spark's previous-watermark late filter gave a
+  still-buffered window is gone for a window closed this way: its late
+  doc is dropped and counted. The price: a bucket key rewrites the
+  docs of all its open windows whenever one of them gets docs, so
+  state I/O per batch grows with the open windows per bucket (a delay
+  many windows long).
+* State is bounded: at most ``max_docs_in_state`` docs per window (per
+  source for sessions), the first arrived kept; overflow and late
+  drops are COUNTED into the ``dropped_docs_acc`` accumulator on the
+  returned DataFrame, never silent.
 * The background model is a small static side input (vocab-sized),
   broadcast once — never a per-batch join.
 """
@@ -74,7 +98,14 @@ EVENT_SCHEMA = StructType([
     StructField("strength", LongType()),
 ])
 
-# Buffered window state: per-doc metadata + ONE flattened token stream
+# Windows per tumbling/sliding doc-buffer key: the buffer is keyed by
+# (window index mod WINDOW_BUCKETS, chunk), so one key holds windows
+# WINDOW_BUCKETS apart and sees its later windows' event time, which is
+# what lets a window close in the micro-batch that carries its closing
+# data instead of one trigger later (``_windowed_state_stream``).
+WINDOW_BUCKETS = 8
+
+# Buffered state per key: per-doc metadata + ONE flattened token stream
 # with per-doc lengths. Numeric columns are BINARY-packed raw little-
 # endian buffers (`ndarray.tobytes()` <-> `np.frombuffer`), NOT
 # ArrayType: a window's multi-million-token stream round-trips the
@@ -83,17 +114,18 @@ EVENT_SCHEMA = StructType([
 # (UnsafeArrayData) — this is the difference between a state commit
 # that is bandwidth-priced and one that is object-churn-priced.
 # Sources are dictionary-encoded (small vocab + int32 code per doc).
+# Event times are epoch microseconds, Spark's own timestamp precision,
+# so docs under a millisecond apart keep the batch plan's order.
 STATE_SCHEMA = StructType([
     StructField("doc_ids", ArrayType(StringType())),
     StructField("src_vocab", ArrayType(StringType())),
     StructField("src_codes", BinaryType()),    # int32, one per doc
-    StructField("event_ms", BinaryType()),     # int64, one per doc
+    StructField("event_us", BinaryType()),     # int64, one per doc
+    StructField("window_us", BinaryType()),    # int64 window start, 0 if none
     StructField("doc_lens", BinaryType()),     # int32, one per doc
     StructField("flat_tokens", BinaryType()),  # int32 token stream
-    # the rule's next close time: the window end, or the end of the
-    # source's first open session
-    StructField("window_end_ms", LongType()),
 ])
+_BUF_DTYPES = (np.int32, np.int64, np.int64, np.int32, np.int32)
 
 
 def read_sequence_stream(
@@ -167,6 +199,7 @@ def _windowed_state_stream(
     close,
     out_schema: StructType,
     *,
+    watermark_delay: str,
     min_tokens: int,
     max_docs_in_state: int,
 ) -> DataFrame:
@@ -174,79 +207,139 @@ def _windowed_state_stream(
     packed doc buffering across micro-batches, bounded state with
     counted drops, and an event-time wake-up clamped past the watermark.
 
-    ``rule(key, event_ms, doc_ids, n_old, wm_ms) -> (closed, kept,
-    fire_ms)`` decides over the buffer, whose first ``n_old`` docs were
-    buffered before this call: ``closed`` lists the index arrays of the
-    groups to close now, ``kept`` the docs to keep buffered (at most
-    ``max_docs_in_state`` of them, in ``kept`` order), ``fire_ms`` when
-    to wake next. Docs in neither are late; they and the cap overflow
-    count on ``dropped_docs_acc``. ``close(key, seq_pdf) -> rows`` runs
-    the payload on one closed group (``_doc_frame`` columns)."""
+    The buffer applies the watermark (``watermark_delay`` on
+    ``event_time``) itself, so the delay Spark filters with and the
+    delay of the close threshold are one value.
+    ``rule(event_us, window_us, doc_ids, n_old, wm_ms, close_ms) ->
+    (closed, kept, fire_us)`` decides over the buffer, whose first
+    ``n_old`` docs were buffered before this call: ``closed`` lists the
+    index arrays of the groups to close now, ``kept`` the docs to keep
+    buffered, ``fire_us`` when to wake next. Docs in neither are late.
+    A group closes once its end is behind ``close_ms``, the key's own
+    close threshold: max(watermark, max buffered event time − delay).
+    The watermark Spark applies in the next batch is at least that, so
+    every doc it still accepts lies past a closed group's end. Event
+    times reach pandas as session-local wall-clock µs and the watermark
+    is UTC epoch ms, so the two compare only under a UTC session time
+    zone (``session.get_spark`` sets it). Each closed group and the
+    kept docs hold at most ``max_docs_in_state`` docs per window (the
+    first in rule order); late docs and the cap overflow count on
+    ``dropped_docs_acc``.
+
+    The state stage emits each closed group as one packed row; a
+    second stage, hashed by group, runs ``close(key, window_start,
+    seq_pdf) -> rows`` on it (``_doc_frame`` columns; ``window_start``
+    is the group's first doc's window). The kernel's parallelism is
+    thus the number of groups closing, not the number of state keys."""
     dropped_acc = keyed.sparkSession.sparkContext.accumulator(0)
+    delay_ms = pd.Timedelta(watermark_delay) // pd.Timedelta(milliseconds=1)
+    closed_schema = StructType([keyed.schema[k] for k in keys]
+                               + STATE_SCHEMA.fields)
 
     def fn(key, pdf_iter, state: GroupState):
         wm_ms = state.getCurrentWatermarkMs()
         if state.exists:
-            doc_ids, vocab, codes, ms, lens, flat, _ = state.get
-            doc_ids, vocab = list(doc_ids), list(vocab)
-            buf = (doc_ids, np.frombuffer(codes, dtype=np.int32),
-                   np.frombuffer(ms, dtype=np.int64),
-                   np.frombuffer(lens, dtype=np.int32),
-                   np.frombuffer(flat, dtype=np.int32))
+            vocab, buf = _unpack(*state.get)
         else:
             vocab = []
-            buf = ([], np.empty(0, np.int32), np.empty(0, np.int64),
-                   np.empty(0, np.int32), np.empty(0, np.int32))
+            buf = ([], *(np.empty(0, t) for t in _BUF_DTYPES))
         n_old = len(buf[0])
         if not state.hasTimedOut:
             buf = _append_docs(buf, vocab, pdf_iter, min_tokens)
         n = len(buf[0])
         if not n:
             return
-        closed, kept, fire_ms = rule(key, buf[2], buf[0], n_old, wm_ms)
-        kept = kept[:max_docs_in_state]  # bounded state, accounted drop
+        doc_ids, _, event_us, window_us = buf[:4]
+        close_ms = max(wm_ms, int(event_us.max()) // 1000 - delay_ms)
+        closed, kept, fire_us = rule(event_us, window_us, doc_ids, n_old,
+                                     wm_ms, close_ms)
+        closed = [c for c in (_cap(c, window_us, max_docs_in_state)
+                              for c in closed) if c.size]
+        kept = _cap(kept, window_us, max_docs_in_state)
         lost = n - kept.size - sum(c.size for c in closed)
         if lost:
             dropped_acc.add(lost)
-        rows = []
-        for idx in closed:
-            rows += close(key, _doc_frame(vocab, *_take(buf, idx)))
+        rows = [(*key, *_pack(vocab, _take(buf, idx))) for idx in closed]
         if kept.size:
-            doc_ids, codes, ms, lens, flat = _take(buf, kept)
-            state.update((doc_ids, vocab, codes.tobytes(), ms.tobytes(),
-                          lens.tobytes(), flat.tobytes(), fire_ms))
-            state.setTimeoutTimestamp(max(fire_ms, wm_ms + 1))
+            state.update(_pack(vocab, _take(buf, kept)))
+            state.setTimeoutTimestamp(max(-(-fire_us // 1000), wm_ms + 1))
         elif state.exists:
             state.remove()
         if rows:
-            yield pd.DataFrame(rows, columns=out_schema.fieldNames())
+            yield pd.DataFrame(rows, columns=closed_schema.fieldNames())
 
-    out = keyed.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    def run_close(pdf_iter):
+        for pdf in pdf_iter:
+            rows = []
+            for r in pdf.itertuples(index=False):
+                vocab, buf = _unpack(*r[len(keys):])
+                rows += close(tuple(r[:len(keys)]),
+                              pd.Timestamp(int(buf[3][0]), unit="us"),
+                              _doc_frame(vocab, *buf))
+            if rows:
+                yield pd.DataFrame(rows, columns=out_schema.fieldNames())
+
+    groups = (keyed.withWatermark("event_time", watermark_delay)
+              .groupBy(*keys).applyInPandasWithState(
+                  fn,
+                  outputStructType=closed_schema,
+                  stateStructType=STATE_SCHEMA,
+                  outputMode="append",
+                  timeoutConf=GroupStateTimeout.EventTimeTimeout))
+    # a group's first doc id names it: hashing by it spreads the closed
+    # windows (and chunks) of one bucket key over all partitions. The
+    # column is computed, not a bare reference, because the projection
+    # that computes it also turns the state operator's columnar rows
+    # into the unsafe rows the shuffle writer requires.
+    out = (groups.withColumn("_group", F.col("doc_ids")[0])
+           .repartition("_group").drop("_group")
+           .mapInPandas(run_close, out_schema))
     out.dropped_docs_acc = dropped_acc
     return out
 
 
+def _pack(vocab: list, buf) -> tuple:
+    """A buffer as a ``STATE_SCHEMA`` row."""
+    doc_ids, *arrays = buf
+    return (doc_ids, vocab, *(a.tobytes() for a in arrays))
+
+
+def _unpack(doc_ids, vocab, *packed):
+    """A ``STATE_SCHEMA`` row as (vocab, buffer)."""
+    return list(vocab), (list(doc_ids), *(
+        np.frombuffer(b, dtype=t) for b, t in zip(packed, _BUF_DTYPES)))
+
+
+def _cap(idx: np.ndarray, window_us: np.ndarray, limit: int) -> np.ndarray:
+    """The first ``limit`` docs of ``idx`` per window, in ``idx`` order."""
+    if idx.size <= limit:
+        return idx
+    w = pd.Series(window_us[idx])
+    return idx[w.groupby(w).cumcount().to_numpy() < limit]
+
+
 def _append_docs(buf, vocab: list, pdf_iter, min_tokens: int):
     """Append one micro-batch to a buffer, vectorized: no per-row Python
-    in the hot path (timestamps and lengths stay numpy end to end)."""
-    doc_ids, codes, ms, lens, flat = buf
+    in the hot path (timestamps and lengths stay numpy end to end). A
+    ``_window_start`` column, if the stream has one, is each row's window
+    start, converted like ``event_time`` so the two compare."""
+    doc_ids, codes, event_us, window_us, lens, flat = buf
     new_ids: list[str] = []
     new_src: list[str] = []
-    ms_parts, len_parts, flat_parts = [ms], [lens], [flat]
+    us_parts, win_parts = [event_us], [window_us]
+    len_parts, flat_parts = [lens], [flat]
     for pdf in pdf_iter:
         pdf = pdf[pdf["n_tok"] >= min_tokens]
         if not len(pdf):
             continue
         new_ids.extend(pdf["doc_id"].tolist())
         new_src.extend(pdf["source"].tolist())
-        ms_parts.append(pdf["event_time"].to_numpy("datetime64[ns]")
-                        .astype(np.int64) // 1_000_000)
+        us_parts.append(pdf["event_time"].to_numpy("datetime64[us]")
+                        .astype(np.int64))
+        win_parts.append(pdf["_window_start"].to_numpy("datetime64[us]")
+                         .astype(np.int64)
+                         if "_window_start" in pdf
+                         else np.zeros(len(pdf), np.int64))
         toks = [np.asarray(t, dtype=np.int32) for t in pdf["tokens"]]
         len_parts.append(np.fromiter(
             (t.size for t in toks), dtype=np.int32, count=len(toks)))
@@ -257,65 +350,77 @@ def _append_docs(buf, vocab: list, pdf_iter, min_tokens: int):
     code_of = {s: i for i, s in enumerate(vocab)}
     return (doc_ids + new_ids,
             np.concatenate([codes, _encode_sources(new_src, vocab, code_of)]),
-            np.concatenate(ms_parts), np.concatenate(len_parts),
-            np.concatenate(flat_parts))
+            np.concatenate(us_parts), np.concatenate(win_parts),
+            np.concatenate(len_parts), np.concatenate(flat_parts))
 
 
 def _take(buf, idx: np.ndarray):
-    """Docs ``idx`` of a buffer (doc_ids, codes, ms, lens, flat): the
-    buffer itself when ``idx`` is all of it in order, else one
-    vectorized token gather."""
-    doc_ids, codes, ms, lens, flat = buf
+    """Docs ``idx`` of a buffer (doc_ids, codes, event_us, window_us,
+    lens, flat): the buffer itself when ``idx`` is all of it in order,
+    else one vectorized token gather."""
+    doc_ids, codes, event_us, window_us, lens, flat = buf
     if idx.size == len(doc_ids) and np.array_equal(idx, np.arange(idx.size)):
         return buf
     offs = np.concatenate([[0], np.cumsum(lens, dtype=np.int64)])
     sel = lens[idx]
     out_offs = np.concatenate([[0], np.cumsum(sel, dtype=np.int64)[:-1]])
     pos = np.repeat(offs[idx] - out_offs, sel) + np.arange(sel.sum())
-    return [doc_ids[i] for i in idx], codes[idx], ms[idx], sel, flat[pos]
+    return ([doc_ids[i] for i in idx], codes[idx], event_us[idx],
+            window_us[idx], sel, flat[pos])
 
 
-def _doc_frame(vocab, doc_ids, codes, ms, lens, flat) -> pd.DataFrame:
+def _doc_frame(vocab, doc_ids, codes, event_us, _window_us, lens,
+               flat) -> pd.DataFrame:
     """A buffer as the kernel's input frame (source, doc_id, event_time
-    in epoch ms, tokens)."""
+    in epoch µs, tokens)."""
     offs = np.concatenate([[0], np.cumsum(lens, dtype=np.int64)])
     return pd.DataFrame({
         "source": np.asarray(vocab, dtype=object)[codes],
-        "doc_id": doc_ids, "event_time": ms,
+        "doc_id": doc_ids, "event_time": event_us,
         "tokens": [flat[offs[i]:offs[i + 1]] for i in range(len(doc_ids))],
     })
 
 
 def _tumbling(stream: DataFrame, params: Params, state_chunks: int = 1):
-    """Window keying and close rule for the skeleton: state key
-    (window_start, window_end, chunk); the window closes once the
-    watermark passes its end. A new key whose window the watermark has
-    already finalized is late data (file sources can deliver batches
-    out of event-time order): its docs are dropped, never resurrecting
-    a closed window (append-mode exactly-once)."""
-    length = params.window_length
+    """Window keying and close rule for the skeleton: state key (window
+    index mod ``WINDOW_BUCKETS``, chunk), each row carrying its window
+    start (a sliding window's rows are not derivable from the event
+    time). A buffered window closes once its end is behind the key's
+    close threshold. A new doc whose window is not buffered in the key
+    and already ended at the watermark is late data (file sources can
+    deliver batches out of event-time order; a window may have closed
+    early): it is dropped, never resurrecting a closed window
+    (append-mode exactly-once)."""
+    length_us = _window_seconds(params.window_length) * 1_000_000
+    step_us = (_window_seconds(params.window_slide) * 1_000_000
+               if params.window_slide else length_us)
     keyed = (
-        stream.withWatermark("event_time", params.watermark_delay)
-        .withColumn("_w", F.window("event_time", length, params.window_slide)
-                    if params.window_slide else F.window("event_time", length))
-        .select(F.col("_w.start").alias("window_start"),
-                F.col("_w.end").alias("window_end"),
+        stream.withColumn("_w", F.window("event_time", params.window_length,
+                                         params.window_slide)
+                          if params.window_slide
+                          else F.window("event_time", params.window_length))
+        .select(F.expr(f"pmod(unix_micros(_w.start) div {step_us}, "
+                       f"{WINDOW_BUCKETS})").cast("int").alias("_bucket"),
                 # deterministic doc-hash chunk: replay/retry-stable
                 F.pmod(F.xxhash64("doc_id"), F.lit(state_chunks))
                 .cast("int").alias("_chunk"),
+                F.col("_w.start").alias("_window_start"),
                 "source", "doc_id", "n_tok", "tokens", "event_time")
     )
 
-    def rule(key, event_ms, doc_ids, n_old, wm_ms):
-        we_ms = int(pd.Timestamp(key[1]).value // 1_000_000)
-        every = np.arange(event_ms.size)
-        if not n_old and we_ms <= wm_ms:
-            return [], every[:0], None
-        if we_ms < wm_ms:
-            return [every], every[:0], None
-        return [], every, we_ms
+    def rule(event_us, window_us, doc_ids, n_old, wm_ms, close_ms):
+        end_us = window_us + length_us
+        late = ((np.arange(event_us.size) >= n_old)
+                & ~np.isin(window_us, window_us[:n_old])
+                & (end_us <= wm_ms * 1000))
+        live = np.flatnonzero(~late)
+        done = end_us[live] < close_ms * 1000
+        closed = [live[done & (window_us[live] == w)]
+                  for w in np.unique(window_us[live[done]])]
+        kept = live[~done]
+        return closed, kept, int(end_us[kept].min()) if kept.size else None
 
-    return keyed, ["window_start", "window_end", "_chunk"], rule
+    return keyed, ["_bucket", "_chunk"], rule
 
 
 def _window_kernel(stream: DataFrame, background_pdf: pd.DataFrame,
@@ -360,25 +465,28 @@ def streaming_detect_events(
 ) -> DataFrame:
     """Continuous event detection: grouped state per event-time window.
 
-    Each window key buffers its docs across micro-batches; when the
-    event-time watermark passes the window end, the state times out and
-    the full EM -> theme filter -> HMM assemble/train -> Viterbi ->
-    strength-count kernel runs on the buffered window. The kernel IS
-    the batch code (``operators.hmm.detect_window_events``, best of
-    ``params.em_runs`` EM fits) — same seeds, same doc order — so the
-    emitted rows are identical to the batch pipeline for the same
-    input and watermark (the north-rule invariant).
+    Each window's docs are buffered across micro-batches under its
+    bucket key (window index mod ``WINDOW_BUCKETS``, chunk); once the
+    key's close threshold — max(watermark, the key's latest event time
+    − watermark delay) — passes the window end, the full EM -> theme
+    filter -> HMM assemble/train -> Viterbi -> strength-count kernel
+    runs on the buffered window. The kernel IS the batch code
+    (``operators.hmm.detect_window_events``, best of ``params.em_runs``
+    EM fits) — same seeds, same doc order — so the emitted rows are
+    identical to the batch pipeline for the same input and watermark
+    (the north-rule invariant).
 
-    ``state_chunks=1`` (default) keys state by window: EM pools all
-    sources per window, exactly like the reference's TimePartition, and
-    parallelism comes from the many concurrently-open windows. For a
-    HOT window (an event burst — the case this engine exists for) that
-    single key pins one state partition, so ``state_chunks=N`` fans the
-    window out over N deterministic doc-hash chunks — each chunk
-    buffers, trains, and decodes independently, which is exactly the
-    reference's split-large-window semantics (M4,
+    ``state_chunks=1`` (default) buffers each window whole: EM pools
+    all sources per window, exactly like the reference's TimePartition,
+    and parallelism comes from the many windows closing in a batch (the
+    kernel runs in a stage hashed by closed window, after the state
+    stage). A HOT window (an event burst — the case this engine exists
+    for) is then one kernel task, so ``state_chunks=N`` fans the window
+    out over N deterministic doc-hash chunks — each chunk buffers,
+    trains, and decodes independently, which is exactly the reference's
+    split-large-window semantics (M4,
     ``ThemeFromLargeTimePeriod.java:50-98``) applied to state: N tasks
-    per window, state per key bounded by window_size/N. Chunking
+    per window, state per window and chunk bounded by window_size/N. Chunking
     changes which docs pool together (as M4 does in batch), so the
     byte-parity invariant vs the batch pipeline holds for
     ``state_chunks=1``; for N>1 the invariant is vs the chunked batch
@@ -386,10 +494,11 @@ def streaming_detect_events(
     num_themes + em_theme_id`` so (window, source, theme_id) stays a
     unique exactly-once sink key across chunks.
 
-    Docs beyond ``max_docs_in_state`` per key are dropped (the
-    reference's per-window doc cap) — COUNTED, never silent: the
-    returned DataFrame carries a ``dropped_docs_acc`` attribute (a
-    SparkContext accumulator) that sinks/monitoring should report.
+    Docs beyond ``max_docs_in_state`` per window and chunk are dropped
+    (the reference's per-window doc cap, first arrived kept) — COUNTED,
+    never silent: the returned DataFrame carries a ``dropped_docs_acc``
+    attribute (a SparkContext accumulator) that sinks/monitoring should
+    report.
 
     Output mode is append: rows are emitted exactly once per closed
     window, keyed (window_start, source, theme_id) — the sink's
@@ -398,11 +507,12 @@ def streaming_detect_events(
     kernel = _window_kernel(stream, background_pdf, params)
     k = params.num_themes
 
-    def close(key, seq_pdf):
-        return kernel(key[0], seq_pdf, theme_id_offset=int(key[2]) * k)
+    def close(key, window_start, seq_pdf):
+        return kernel(window_start, seq_pdf, theme_id_offset=int(key[1]) * k)
 
     return _windowed_state_stream(
         *_tumbling(stream, params, state_chunks), close, EVENT_SCHEMA,
+        watermark_delay=params.watermark_delay,
         min_tokens=params.min_doc_tokens,
         max_docs_in_state=max_docs_in_state)
 
@@ -430,9 +540,11 @@ def streaming_detect_events_sessions(
     Each call sorts the source's buffered docs by (event_time, doc_id)
     and splits them wherever two docs lie more than ``session_gap``
     apart, as ``windows.with_session_window_batch`` does. A session
-    closes once its last doc + gap is strictly behind the watermark and
-    emits (session_start, last doc + gap, source, theme_id, strength)
-    from the detector's kernel, seeded by the session start; later
+    closes once its last doc + gap is strictly behind the close
+    threshold, max(watermark, the source's latest event time − watermark
+    delay), and emits (session_start, last doc + gap, source, theme_id,
+    strength), to the microsecond, from the detector's kernel, seeded
+    by the session start; later
     sessions stay buffered, so a doc that arrives out of order still
     joins the session its event time belongs to. A doc that arrives
     with its event time already behind the watermark is late, as for
@@ -440,34 +552,34 @@ def streaming_detect_events_sessions(
     like docs past ``max_docs_in_state`` per source.
     """
     kernel = _window_kernel(stream, background_pdf, params)
-    gap_ms = _window_seconds(params.session_gap) * 1000
-    keyed = stream.withWatermark("event_time", params.watermark_delay).select(
-        "source", "doc_id", "n_tok", "tokens", "event_time")
+    gap_us = _window_seconds(params.session_gap) * 1_000_000
+    keyed = stream.select("source", "doc_id", "n_tok", "tokens", "event_time")
 
-    def rule(key, event_ms, doc_ids, n_old, wm_ms):
-        live = np.flatnonzero((event_ms >= wm_ms)
-                              | (np.arange(event_ms.size) < n_old))
+    def rule(event_us, _window_us, doc_ids, n_old, wm_ms, close_ms):
+        live = np.flatnonzero((event_us >= wm_ms * 1000)
+                              | (np.arange(event_us.size) < n_old))
         order = live[np.lexsort((np.asarray(doc_ids, dtype=str)[live],
-                                 event_ms[live]))]
+                                 event_us[live]))]
         if not order.size:
             return [], order, None
         sessions = np.split(
-            order, np.flatnonzero(np.diff(event_ms[order]) > gap_ms) + 1)
-        ends = [int(event_ms[s[-1]]) + gap_ms for s in sessions]
-        n_closed = sum(e < wm_ms for e in ends)
+            order, np.flatnonzero(np.diff(event_us[order]) > gap_us) + 1)
+        ends = [int(event_us[s[-1]]) + gap_us for s in sessions]
+        n_closed = sum(e < close_ms * 1000 for e in ends)
         if n_closed == len(ends):
             return sessions[:n_closed], order[:0], None
         return (sessions[:n_closed], np.concatenate(sessions[n_closed:]),
                 ends[n_closed])
 
-    def close(key, seq_pdf):
-        ms = seq_pdf["event_time"]
-        end = pd.Timestamp(int(ms.max()) + gap_ms, unit="ms")
+    def close(key, _window_start, seq_pdf):
+        us = seq_pdf["event_time"]
+        end = pd.Timestamp(int(us.max()) + gap_us, unit="us")
         return [(start, end, src, tid, n) for start, src, tid, n in kernel(
-            pd.Timestamp(int(ms.min()), unit="ms"), seq_pdf)]
+            pd.Timestamp(int(us.min()), unit="us"), seq_pdf)]
 
     return _windowed_state_stream(
         keyed, ["source"], rule, close, SESSION_EVENT_SCHEMA,
+        watermark_delay=params.watermark_delay,
         min_tokens=params.min_doc_tokens,
         max_docs_in_state=max_docs_in_state)
 
@@ -605,8 +717,8 @@ def start_event_sink(
     source offsets live in the checkpoint — a restart replays only
     uncommitted batches and readers see each batch's files exactly once.
     Event rows carry their natural idempotency key
-    (window_start, source, theme_id); windows are emitted only on state
-    timeout, so a key appears in at most one batch.
+    (window_start, source, theme_id); a window emits once, in the batch
+    that closes it, so a key appears in at most one batch.
     """
     writer = (
         events.writeStream

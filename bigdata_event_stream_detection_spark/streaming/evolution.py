@@ -6,7 +6,7 @@ Two stages:
 
 1. ``streaming_window_themes`` — the SAME grouped-state machine as the
    event detector (`engine._windowed_state_stream`) with a different
-   close payload: when the watermark closes a window, run the batch
+   close payload: when the detector closes a window, run the batch
    best-of-R EM kernel (``em_window_best``, the one ``em_themes``
    runs), apply the score floor (``filter_themes``), then emit the
    surviving theme rows (window_start, theme_id, loglik, score,
@@ -69,20 +69,20 @@ def streaming_window_themes(
     params: Params = DEFAULTS,
     max_docs_in_state: int = 100_000,
 ) -> DataFrame:
-    """Per-window filtered theme rows, emitted once when the event-time
-    watermark closes the window. State machine and buffering are shared
-    with the event detector; only the close payload differs. State is
-    keyed by window alone (no doc-hash chunking): chunked EM changes
-    which docs pool together, and the evolution graph's KL edges are
-    defined on whole-window themes."""
+    """Per-window filtered theme rows, emitted once when the window
+    detector's close rule closes the window. State machine and
+    buffering are shared with the event detector; only the close
+    payload differs. Windows are buffered whole (no doc-hash
+    chunking): chunked EM changes which docs pool together, and the
+    evolution graph's KL edges are defined on whole-window themes."""
     from .engine import _tumbling, _window_kernel, _windowed_state_stream
 
     kernel = _window_kernel(stream, background_pdf, params)
 
-    def close(key, seq_pdf):
-        best = kernel(key[0], seq_pdf, decode=False)
+    def close(key, window_start, seq_pdf):
+        best = kernel(window_start, seq_pdf, decode=False)
         return [
-            (key[0], int(r.theme_id), float(r.loglik),
+            (window_start, int(r.theme_id), float(r.loglik),
              float(r.score), int(r.n_docs),
              [int(w) for w in r.word_ids], [float(p) for p in r.probs])
             for r in best.itertuples()
@@ -90,6 +90,7 @@ def streaming_window_themes(
 
     return _windowed_state_stream(
         *_tumbling(stream, params), close, THEMES_SCHEMA,
+        watermark_delay=params.watermark_delay,
         min_tokens=params.min_doc_tokens,
         max_docs_in_state=max_docs_in_state)
 

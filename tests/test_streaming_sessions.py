@@ -242,3 +242,33 @@ def test_late_session_doc_is_counted_not_emitted(spark, tmp_path):
         [pdf[pdf["doc_id"] == d] for d in ("early", "next")], bg_arrays,
         PARAMS)
     assert got == expected
+
+
+def test_sub_millisecond_docs_keep_batch_bounds_and_order(spark, tmp_path):
+    """The buffer keeps Spark's microsecond event times: a session's
+    bounds equal the batch sessionization's, and two docs under a
+    millisecond apart decode in event-time order, as the batch plan
+    sorts them (not in doc_id order)."""
+    t0 = pd.Timestamp("2015-01-01 10:00")
+    us = pd.Timedelta(microseconds=1)
+    chunks = [
+        [("z", "A", t0 + 100 * us, [1, 2, 3, 1, 2, 3, 4]),
+         ("a", "A", t0 + 600 * us, [5, 6, 7, 5, 6, 7, 8]),
+         ("m", "A", t0 + pd.Timedelta(minutes=10) + 900 * us,
+          [1, 2, 5, 1, 2, 5, 6])],
+        [("sent", "B", t0 + pd.Timedelta(days=30), [1, 2, 3])],
+    ]
+    _, got, pdf, bg_arrays = _run_sessions(
+        spark, tmp_path, "sess_sub_ms", chunks, PARAMS)
+    docs = pdf[pdf["source"] == "A"]
+    batch = {(r["window_start"], r["window_end"])
+             for r in with_session_window_batch(
+                 spark.createDataFrame(docs), ["source"],
+                 gap="30 minutes").collect()}
+    assert batch == {(
+        (t0 + 100 * us).to_pydatetime(),
+        (t0 + pd.Timedelta(minutes=40) + 900 * us).to_pydatetime())}
+    assert {(r[0], r[1]) for r in got} == batch
+    expected = _recompute_sessions([docs], bg_arrays, PARAMS)
+    assert expected
+    assert got == expected
