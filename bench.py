@@ -9,9 +9,9 @@ JSON line::
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 The primary north-rule metric (events detected / sec) is included as
-``events_per_sec``. Use ``--cores N`` to override parallelism (the
-scaling harness in tools/scaling_bench.py runs this at two core counts
-to evidence the N→4N scaling-efficiency criterion).
+``events_per_sec``. Use ``--cores N`` to override parallelism. The
+N→4N scaling-efficiency evidence comes from tools/scaling_bench.py,
+which runs each workload family's own job at local[N] and local[4N].
 """
 
 from __future__ import annotations

@@ -223,8 +223,10 @@ def simhash_candidate_pairs(
     band, so the banding is EXACT for the hamming predicate — not a
     recall/precision trade like MinHash-LSH. False candidates are
     discarded by one codegen'd ``bit_count(xor)`` filter after the
-    join. Join fan-in is bounded by bucket collisions (2^(bits/bands)
-    buckets per band), never n².
+    join. The join emits, per band, the sum over its buckets of
+    (bucket size)²; a band has only 2^(bits/bands) buckets (16 at the
+    defaults), so on spread fingerprints that is about n²/16 rows per
+    band: the candidate join grows quadratically in n.
     """
     if bits % bands != 0:
         raise ValueError("bits must divide evenly into bands")

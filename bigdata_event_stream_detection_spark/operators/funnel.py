@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cep import _horizon
+
 
 def funnel_times(
     events: DataFrame,
@@ -35,10 +37,12 @@ def funnel_times(
     Returns one row per user who completed step 0, with columns
     ``t0..t{k-1}`` (timestamp of each step's completion; NULL from the
     first missed step onward). ``within_seconds`` additionally requires
-    every later step to land within that horizon of ``t0``.
+    every later step to land within that horizon of ``t0``; it must be
+    positive (None = unbounded).
     """
     if len(steps) < 2:
         raise ValueError("a funnel needs at least two steps")
+    horizon_us = _horizon(within_seconds)
     out = (
         events.filter(F.col(type_col) == steps[0])
         .groupBy(user_col)
@@ -55,8 +59,7 @@ def funnel_times(
             # TIMESTAMP_NTZ columns, matching the streaming form's
             # microsecond horizon arithmetic exactly
             joined = joined.filter(
-                F.expr("timestampdiff(MICROSECOND, t0, _ts)")
-                <= int(round(float(within_seconds) * 1e6)))
+                F.expr("timestampdiff(MICROSECOND, t0, _ts)") <= horizon_us)
         agg = joined.groupBy(user_col).agg(F.min("_ts").alias(f"t{i}"))
         out = out.join(agg, user_col, "left")
     return out

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.cep import _horizon
+
 FUNNEL_STATE_SCHEMA = StructType([
     StructField("steps", BinaryType()),     # int32 step idx, one per event
     StructField("ts_us", BinaryType()),     # int64 event us, one per event
@@ -58,12 +60,13 @@ def streaming_funnel_completions(
     """Emit one row per user whose full step chain completes:
     (user_id, t0..t{k-1} timestamps) — equal to the batch
     ``funnel_times(..., within_seconds=...)`` rows with every step
-    non-null, each emitted exactly once.
+    non-null, each emitted exactly once. ``within_seconds`` must be
+    positive.
     """
     if len(steps) < 2:
         raise ValueError("a funnel needs at least two steps")
     k = len(steps)
-    horizon_us = int(round(float(within_seconds) * 1e6))
+    horizon_us = _horizon(float(within_seconds))
     dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
     out_schema = StructType(
         [StructField("user_id", LongType())]

@@ -10,6 +10,7 @@ from datetime import datetime, timedelta
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_event_stream_detection_spark.operators.funnel import (
@@ -242,3 +243,21 @@ def test_streaming_funnel_state_lifecycle(spark, tmp_path):
     progress = q.lastProgress or q.recentProgress[-1]
     n_state = progress["stateOperators"][0]["numRowsTotal"]
     assert n_state == 2, f"state leak: {n_state} rows in store"
+
+
+@pytest.mark.parametrize("within", [0.0, -60.0])
+def test_funnel_rejects_non_positive_horizons(spark, within):
+    """Batch and streaming funnels validate their horizon like the CEP
+    twins: a zero horizon turned every streaming user into a tombstone
+    and cut every batch chain at ``t0``."""
+    ev = spark.createDataFrame(
+        _make_events(), "user_id long, event_type string, ts timestamp")
+    stream = (spark.readStream.format("rate").load()
+              .selectExpr("value AS user_id", "'view' AS event_type",
+                          "timestamp AS ts"))
+    for build in (lambda: funnel_times(ev, STEPS, within_seconds=within),
+                  lambda: streaming_funnel_completions(stream, STEPS,
+                                                       within)):
+        with pytest.raises(ValueError,
+                           match="within_seconds must be positive"):
+            build()

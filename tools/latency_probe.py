@@ -191,26 +191,20 @@ print("RESULT " + json.dumps({
 
 def _seq_latency(args) -> int:
     """Watermark-to-sink latency for the MATCH_RECOGNIZE sequence CEP
-    stream (north-rule metric #2 for the CEP family). Reuses the CEP
-    scaling bench's deterministic event input; `--docs` is the event
+    stream (north-rule metric #2 for the CEP family). Reuses the
+    scaling harness's deterministic cep input; `--docs` is the event
     count here."""
     import statistics
 
-    import cep_scaling_bench as cb
+    import scaling_bench as sb
 
     events, users = args.docs, max(args.docs // 10, 1)
-    in_dir = os.path.join(tempfile.gettempdir(),
-                          f"cep_input_{events}_{users}", "events")
+    in_dir = sb.input_dir("cep", events, users, files=args.files)
     env = dict(os.environ, PYTHONPATH=REPO,
                OMP_NUM_THREADS="1", OPENBLAS_NUM_THREADS="1",
                MKL_NUM_THREADS="1")
     if args.local_dir:
         env["SPARK_LOCAL_DIRS"] = args.local_dir
-    if not os.path.exists(os.path.join(in_dir, "zzz_sentinel.parquet")):
-        subprocess.run([sys.executable, "-c", cb.GEN, str(events),
-                        str(users), str(args.files), in_dir],
-                       check=True, env=env, cwd=REPO,
-                       capture_output=True, timeout=3600)
 
     probe = r"""
 import json, sys, tempfile
@@ -246,7 +240,7 @@ print("RESULT " + json.dumps({
     "events_per_sec": listener.throughput_rows_per_sec()}))
 """
     cmd = [sys.executable, "-c", probe, str(args.cores), in_dir,
-           str(cb.HORIZON_S)]
+           str(sb.HORIZON_S)]
     if os.path.exists("/usr/bin/taskset"):
         cmd = ["taskset", "-c", f"0-{args.cores - 1}"] + cmd
     p = subprocess.run(cmd, capture_output=True, text=True, env=env,
