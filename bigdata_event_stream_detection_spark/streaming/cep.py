@@ -1,28 +1,34 @@
 """Streaming CEP twins: the continuous forms of the pattern classes in
 ``operators/cep.py`` — timeout/SLA and absence (fixed or rules-table),
 Kleene-plus runs, and MATCH_RECOGNIZE quantified sequences (fixed,
-DEFINE-predicate classified, or rules-table). Every pattern instance
-resolves exactly once at watermark finality, with rows equal to the
-batch operator on the same drained input.
+DEFINE-predicate classified, or rules-table) — plus the step funnel of
+``streaming/funnel.py``. Every pattern instance resolves exactly once
+at watermark finality, with rows equal to the batch operator on the
+same drained input.
 
-All seven run on ONE keyed-buffer state machine, ``_cep_state_stream``.
+All eight run on ONE keyed-buffer state machine, ``_cep_state_stream``.
 It owns everything that is not pattern logic:
 
 * the state per key: a bounded buffer of ``(code, ts_us, event_id)``
   triples — pattern roles only, never payloads — packed as binary
   blobs like the engine's token buffers, plus the pattern's scalars (a
-  rule's horizon and spec, or the runs fold);
+  rule's horizon and spec, the runs fold, the funnel's resolved flag);
 * appending each micro-batch, and the bounded trim: past
   ``max_events_in_state`` only the earliest events by (ts, event_id)
-  stay and the overflow is counted on ``dropped_events_acc``;
-* removing a key from the store once nothing is left (no tombstones:
-  every anchor is an independent pattern instance identified by its
-  event_id, and Spark's late-row filter stops replayed anchors from
-  re-entering), and the event-time wake-up, clamped past the watermark.
+  stay; the overflow and the events a decision reports as dropped are
+  counted on ``dropped_events_acc``;
+* removing a key from the store once nothing is left, and the
+  event-time wake-up, clamped past the watermark. No pattern but the
+  funnel keeps tombstones: every anchor is an independent pattern
+  instance identified by its event_id, and Spark's late-row filter
+  stops replayed anchors from re-entering. A funnel resolves once per
+  user, so a resolved user stays in the store with no wake-up
+  (``NEVER``) and every later event for it is a drop.
 
 Each pattern is a decision ``decide(key, code, us, eid, extra, wm_us)
--> (rows, (code, us, eid), extra, fire_us)``; ``fire_us=None`` means
-nothing is left to wait for:
+-> (rows, (code, us, eid), extra, fire_us, n_dropped)``; ``fire_us=None``
+means nothing is left to wait for, ``NEVER`` keeps the key with no
+wake-up, and ``n_dropped`` counts the events it discarded as drops:
 
 * **timeout** (0 anchor / 1 silencer): an anchor alerts once the
   watermark passes ``anchor + horizon``; a silencer buffered inside the
@@ -35,6 +41,9 @@ nothing is left to wait for:
   (ts, event_id) order into an open-run accumulator and leave state.
 * **seq**: ``operators.cep._seq_scan``, the scan batch uses too, with
   the watermark as its decidability frontier.
+* **funnel** (``streaming/funnel.py``): the greedy-earliest chain from
+  the user's earliest step-0 event, resolved once the watermark passes
+  its horizon.
 
 For timeout and absence, non-anchor events older than ``watermark -
 horizon`` are pruned: future anchors have ts >= watermark, so nothing
@@ -49,9 +58,10 @@ An event playing two roles ("no repeat within T", "A then the next A")
 fans out one copy per role, and the strictly-after (ts, event_id)
 comparison keeps an anchor from matching its own copy. The fixed
 timeout and absence twins are one-rule tables on the same path. Fixed
-seq and runs classify with a column expression and stay keyed by user.
+seq, runs and the funnel classify with a column expression and stay
+keyed by user.
 
-Watermark rule, identical for all seven: every event of the input
+Watermark rule, identical for all eight: every event of the input
 stream advances the watermark, not only pattern events (a stream of
 non-pattern events flushes pending anchors). The roles join sits above
 ``withWatermark``; the expression filter reads the event-time column,
@@ -86,6 +96,10 @@ SEQ_OUT_SCHEMA = ("user_id long, first_event_id long, start_ts timestamp, "
                   "end_ts timestamp, n_events long, step_counts string")
 SEQ_RULES_OUT_SCHEMA = SEQ_OUT_SCHEMA.replace(
     "user_id long,", "user_id long, rule_id string,")
+
+
+# the fire time of a key a decision keeps with no wake-up (a tombstone)
+NEVER = float("inf")
 
 
 def _ts(us) -> pd.Timestamp:
@@ -148,16 +162,19 @@ def _cep_state_stream(keyed: DataFrame, decide, out_schema: str,
                     np.lexsort((eid, us))[:max_events_in_state])
                 code, us, eid = code[keep], us[keep], eid[keep]
 
-        rows, (code, us, eid), extra, fire_us = decide(
+        rows, (code, us, eid), extra, fire_us, n_dropped = decide(
             key, code, us, eid, extra, wm_us)
+        if n_dropped:
+            dropped_acc.add(n_dropped)
         if fire_us is None:
             if state.exists:
                 state.remove()
         else:
             state.update((code.tobytes(), us.tobytes(), eid.tobytes(),
                           *extra))
-            state.setTimeoutTimestamp(
-                max(fire_us // 1000 + 1, wm_us // 1000 + 1))
+            if fire_us != NEVER:
+                state.setTimeoutTimestamp(
+                    max(fire_us // 1000 + 1, wm_us // 1000 + 1))
         if rows:
             yield pd.DataFrame(rows, columns=columns)
 
@@ -179,10 +196,10 @@ def _keyed(stream: DataFrame, time_col, key_col, type_col, id_col,
     classified by ONE broadcast join against a roles table
     ``(rule_id, _et, _code, ...)``, or by a ``code`` expression whose
     null filter also reads the event time so that Catalyst cannot push
-    it below ``withWatermark``."""
+    it below ``withWatermark``. ``id_col=None`` buffers a constant id."""
     ev = stream.withWatermark(time_col, watermark_delay).select(
         F.col(key_col).alias("user_id"), F.col(time_col).alias("_ts"),
-        F.col(id_col).cast("long").alias("_eid"),
+        (F.col(id_col) if id_col else F.lit(0)).cast("long").alias("_eid"),
         F.col(type_col).alias("_et") if roles is not None
         else code.alias("_code"))
     if roles is not None:
@@ -191,11 +208,19 @@ def _keyed(stream: DataFrame, time_col, key_col, type_col, id_col,
         F.when(F.col("_code").isNotNull(), F.col("_ts")).isNotNull())
 
 
+def _stream_horizon(within_seconds) -> int:
+    """A streaming pattern's horizon in micros: positive, as in batch,
+    and finite — the watermark passing it is what decides an anchor."""
+    if within_seconds is None:
+        raise ValueError("a streaming pattern needs a finite horizon: "
+                         "within_seconds=None never resolves")
+    return _horizon(within_seconds)
+
+
 def _one_rule(stream: DataFrame, within_seconds, **types) -> DataFrame:
     """A fixed pattern as a one-row rules table (rule_id ""), built in
-    the JVM so the per-micro-batch re-read starts no Python worker. Its
-    horizon must be positive, as in the batch fixed twins."""
-    _horizon(within_seconds)
+    the JVM so the per-micro-batch re-read starts no Python worker."""
+    _stream_horizon(within_seconds)
     return stream.sparkSession.range(1).select(
         F.lit("").alias("rule_id"),
         F.lit(float(within_seconds)).alias("within_seconds"),
@@ -250,7 +275,7 @@ def _anchor_decision(judge):
         code, us, eid = code[keep], us[keep], eid[keep]
         fire = (min(pending) if pending
                 else int(us.min()) + h if us.size else None)
-        return rows, (code, us, eid), extra, fire
+        return rows, (code, us, eid), extra, fire, 0
     return decide
 
 
@@ -310,7 +335,7 @@ def _runs_decision(min_run, gap_us):
         cand = ([last_us + gap_us] if run_len else []) + (
             [int(us[0])] if us.size else [])
         return (rows, (code, us, eid), (run_len, start_us, last_us),
-                min(cand) if cand else None)
+                min(cand) if cand else None, 0)
     return decide
 
 
@@ -346,12 +371,12 @@ def _seq_decision(pattern, skip_past=True):
         # non-anchor suffix only waits to be pruned once final
         fire = (int(us[anchors[0]]) + h if anchors.size
                 else int(us[0]) if us.size else None)
-        return rows, (code, us, eid), extra, fire
+        return rows, (code, us, eid), extra, fire, 0
     return decide
 
 
 # ---------------------------------------------------------------------------
-# the seven twins
+# the seven CEP twins
 # ---------------------------------------------------------------------------
 
 def streaming_match_timeout(
@@ -564,10 +589,7 @@ def streaming_match_seq(
     """
     labels, types, quants = _validate_steps(steps)
     skip_past = _skip_past(after_match)
-    horizon_us = int(round(float(within_seconds) * 1e6))
-    if horizon_us <= 0:
-        raise ValueError("within_seconds must be positive — the "
-                         "horizon is what makes anchors decidable")
+    horizon_us = _stream_horizon(within_seconds)
     tid_of, step_tids = _step_tids(types)
     pattern = (labels, quants, step_tids, horizon_us)
     return _cep_state_stream(

@@ -753,14 +753,19 @@ def test_fixed_twins_reject_non_positive_horizons(spark, within):
     """The fixed twins validate their horizon like the rules twins: a
     zero horizon would alert although the ``then`` event follows, a
     negative one with a deadline before the anchor. ``None`` still
-    means unbounded for the batch absence twin."""
+    means unbounded for the batch absence twin; the streaming patterns
+    that need a horizon reject it."""
     from bigdata_event_stream_detection_spark.operators.cep import (
         match_absence,
         match_timeout,
     )
     from bigdata_event_stream_detection_spark.streaming.cep import (
         streaming_match_absence,
+        streaming_match_seq,
         streaming_match_timeout,
+    )
+    from bigdata_event_stream_detection_spark.streaming.funnel import (
+        streaming_funnel_completions,
     )
 
     df = _df(spark, [(1, 10, T0, "A"), (1, 11, T0 + timedelta(minutes=1),
@@ -777,6 +782,12 @@ def test_fixed_twins_reject_non_positive_horizons(spark, within):
                            match="within_seconds must be positive"):
             build()
     assert match_absence(df, "A", "B", "C", None).count() == 1
+    for build in (lambda: streaming_match_seq(stream, [("a", "A", "1")],
+                                              None),
+                  lambda: streaming_funnel_completions(stream, ["A", "B"],
+                                                       None)):
+        with pytest.raises(ValueError, match="needs a finite horizon"):
+            build()
 
 
 def test_parse_steps_spec_labels(spark):

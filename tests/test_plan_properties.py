@@ -176,7 +176,7 @@ def _state_operators(spark, events, seqs):
         small_params,
     )
     from bigdata_event_stream_detection_spark.streaming import (
-        burst, cep, changepoint, engine, evolution,
+        burst, cep, changepoint, engine, evolution, funnel,
     )
 
     timeout_rules = spark.createDataFrame(
@@ -206,6 +206,8 @@ def _state_operators(spark, events, seqs):
             events, [("a", "A", "1"), ("b", "B", "+")], 60.0),
         "seq_rules": lambda: cep.streaming_match_seq_rules(
             events, seq_rules),
+        "funnel": lambda: funnel.streaming_funnel_completions(
+            events, ["A", "B", "A"], 60.0),
         "detect_events": lambda: engine.streaming_detect_events(
             seqs, model, params),
         "detect_events_sessions":
@@ -220,12 +222,12 @@ def _state_operators(spark, events, seqs):
 
 @pytest.mark.parametrize("twin", [
     "timeout", "timeout_rules", "absence", "absence_rules", "runs", "seq",
-    "seq_rules", "detect_events", "detect_events_sessions",
+    "seq_rules", "funnel", "detect_events", "detect_events_sessions",
     "window_themes", "burst", "cusum"])
 def test_streaming_cep_twin_scans_once(spark, tmp_path, twin):
-    """Every streaming state operator — the CEP twins, the window and
-    session detectors, the window-theme emitter, burst and CUSUM —
-    reads its stream ONCE (role fan-out is a single broadcast join,
+    """Every streaming state operator — the CEP twins, the funnel, the
+    window and session detectors, the window-theme emitter, burst and
+    CUSUM — reads its stream ONCE (role fan-out is a single broadcast join,
     never a union of per-role scans) and runs ONE grouped-state
     operator."""
     import pandas as pd

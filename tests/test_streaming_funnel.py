@@ -245,6 +245,39 @@ def test_streaming_funnel_state_lifecycle(spark, tmp_path):
     assert n_state == 2, f"state leak: {n_state} rows in store"
 
 
+def test_streaming_funnel_repeated_step_matches_batch(spark, tmp_path):
+    """A step type may repeat ("view, view, purchase"): the second view
+    must land strictly after the first, as in batch. Steps are coded by
+    distinct type, so the repeat no longer builds a map with a
+    duplicate key."""
+    t0 = datetime(2024, 6, 1)
+    steps = ["view", "view", "purchase"]
+    pdf = pd.DataFrame(
+        [(1, "view", t0), (1, "view", t0 + timedelta(minutes=5)),
+         (1, "purchase", t0 + timedelta(minutes=9))],
+        columns=["user_id", "event_type", "ts"])
+    d = str(tmp_path / "in")
+    os.makedirs(d)
+    _write_chunk(d, "c0.parquet", pdf, 0)
+    _write_chunk(d, "zz.parquet", pd.DataFrame(
+        {"user_id": [99], "event_type": ["noise"],
+         "ts": [t0 + timedelta(days=30)]}), 9)
+
+    stream = (spark.readStream
+              .schema("user_id long, event_type string, ts timestamp")
+              .option("maxFilesPerTrigger", "1").parquet(d))
+    q = (streaming_funnel_completions(stream, steps, 3600)
+         .writeStream.format("memory").queryName("funnel_repeat")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = sorted(tuple(r) for r in spark.table("funnel_repeat").collect())
+    batch = funnel_times(spark.createDataFrame(pdf), steps,
+                         within_seconds=3600)
+    truth = sorted(tuple(r) for r in batch.collect())
+    assert got == truth == [(1, t0, t0 + timedelta(minutes=5),
+                             t0 + timedelta(minutes=9))]
+
+
 @pytest.mark.parametrize("within", [0.0, -60.0])
 def test_funnel_rejects_non_positive_horizons(spark, within):
     """Batch and streaming funnels validate their horizon like the CEP

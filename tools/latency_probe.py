@@ -22,7 +22,9 @@ from __future__ import annotations
 
 import argparse
 import glob
+import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -30,6 +32,27 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _run_probe(probe: str, argv: list, cores: int, env: dict, prefix: str):
+    """Run ``probe`` pinned to ``cores`` CPUs, with a fresh work dir for
+    its sink and checkpoint as its last argument; the dir is removed
+    when the probe ends, whatever the outcome. Returns the probe's
+    RESULT dict, or None after printing its output tail."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    cmd = [sys.executable, "-c", probe, *map(str, argv), work]
+    if shutil.which("taskset"):
+        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
+    try:
+        p = subprocess.run(cmd, capture_output=True, text=True, env=env,
+                           cwd=REPO, timeout=3600)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    for line in p.stdout.splitlines():
+        if line.startswith("RESULT "):
+            return json.loads(line[len("RESULT "):])
+    print(p.stdout[-2000:], p.stderr[-2000:])
+    return None
 
 
 def main() -> int:
@@ -82,9 +105,9 @@ df = generate_sequences(spark, {args.docs}, late_fraction=0.0, partitions={args.
         os.utime(f, (t + i, t + i))
 
     probe = r"""
-import glob, json, statistics, sys, tempfile, time
-docs, cores, in_dir, source = (int(sys.argv[1]), int(sys.argv[2]),
-                               sys.argv[3], sys.argv[4])
+import glob, json, statistics, sys, time
+docs, cores, in_dir, source, work = (int(sys.argv[1]), int(sys.argv[2]),
+                                     sys.argv[3], sys.argv[4], sys.argv[5])
 from bigdata_event_stream_detection_spark.session import get_spark
 from bigdata_event_stream_detection_spark.plans.pipeline import small_params
 from bigdata_event_stream_detection_spark.operators import background as bg
@@ -108,7 +131,6 @@ model = bg.background_model(
     min_count=params.min_word_corpus_count).toPandas()
 listener = MetricsListener()
 spark.streams.addListener(listener)
-work = tempfile.mkdtemp(prefix="latency_probe_")
 if source in ("icelite", "files-live"):
     # continuous-operation shape: the stream runs on a processing-time
     # trigger while a LIVE feeder commits one slice per trigger — an
@@ -159,18 +181,9 @@ print("RESULT " + json.dumps({
     "batches": len(listener.progress), "n_events": n_events,
     "latency_sec": lats, "docs_per_sec": tput}))
 """
-    cmd = [sys.executable, "-c", probe, str(args.docs), str(args.cores),
-           in_dir, args.source]
-    if os.path.exists("/usr/bin/taskset"):
-        cmd = ["taskset", "-c", f"0-{args.cores - 1}"] + cmd
-    p = subprocess.run(cmd, capture_output=True, text=True, env=env,
-                       cwd=REPO, timeout=3600)
-    result = None
-    for line in p.stdout.splitlines():
-        if line.startswith("RESULT "):
-            result = __import__("json").loads(line[len("RESULT "):])
+    result = _run_probe(probe, [args.docs, args.cores, in_dir, args.source],
+                        args.cores, env, "latency_probe_")
     if result is None:
-        print(p.stdout[-2000:], p.stderr[-2000:])
         return 1
     lats = [x for x in result["latency_sec"] if x > 0]
     print(f"### Watermark-to-sink latency ({args.docs} docs, "
@@ -207,8 +220,9 @@ def _seq_latency(args) -> int:
         env["SPARK_LOCAL_DIRS"] = args.local_dir
 
     probe = r"""
-import json, sys, tempfile
-cores, in_dir, horizon = int(sys.argv[1]), sys.argv[2], int(sys.argv[3])
+import json, sys
+cores, in_dir, horizon, work = (int(sys.argv[1]), sys.argv[2],
+                                int(sys.argv[3]), sys.argv[4])
 from bigdata_event_stream_detection_spark.session import get_spark
 from bigdata_event_stream_detection_spark.streaming.cep import (
     streaming_match_seq)
@@ -220,7 +234,6 @@ spark = get_spark("seq-latency", cores=cores, shuffle_partitions=96,
                       "false"})
 listener = MetricsListener()
 spark.streams.addListener(listener)
-work = tempfile.mkdtemp(prefix="seq_latency_")
 stream = (spark.readStream
           .schema("event_id long, user_id long, event_type string,"
                   " ts timestamp")
@@ -239,18 +252,9 @@ print("RESULT " + json.dumps({
     "latency_sec": listener.watermark_to_sink_latency_sec(),
     "events_per_sec": listener.throughput_rows_per_sec()}))
 """
-    cmd = [sys.executable, "-c", probe, str(args.cores), in_dir,
-           str(sb.HORIZON_S)]
-    if os.path.exists("/usr/bin/taskset"):
-        cmd = ["taskset", "-c", f"0-{args.cores - 1}"] + cmd
-    p = subprocess.run(cmd, capture_output=True, text=True, env=env,
-                       cwd=REPO, timeout=3600)
-    result = None
-    for line in p.stdout.splitlines():
-        if line.startswith("RESULT "):
-            result = __import__("json").loads(line[len("RESULT "):])
+    result = _run_probe(probe, [args.cores, in_dir, sb.HORIZON_S],
+                        args.cores, env, "seq_latency_")
     if result is None:
-        print(p.stdout[-2000:], p.stderr[-2000:])
         return 1
     lats = [x for x in result["latency_sec"] if x > 0]
     print(f"### Seq-CEP watermark-to-sink latency ({events} events, "

@@ -124,8 +124,19 @@ SHARDS = 64
 # fixture), so an input's rows do not depend on the generating session.
 # ---------------------------------------------------------------------------
 
+def _write_sentinel(path, row):
+    """Write the one-row frame ``row`` — a far-future event — as the
+    input's own, last file, so the watermark passes every real event."""
+    row.coalesce(1).write.mode("overwrite").parquet(path + "_sentinel")
+    os.replace(glob.glob(path + "_sentinel/part-*.parquet")[0],
+               path + "/zzz_sentinel.parquet")
+    shutil.rmtree(path + "_sentinel")
+
+
 def gen_sequences(spark, path, events, users, files):
-    """Planted-HMM docs, one contiguous event-time slice per file."""
+    """Planted-HMM docs, one contiguous event-time slice per file, plus
+    a far-future sentinel doc that closes every window in a stream and
+    is dropped (below ``min_doc_tokens``) in both modes."""
     df = generate_sequences(spark, events, late_fraction=0.0,
                             partitions=files)
     # repartitionByRange keeps each part-file a contiguous time slice
@@ -134,6 +145,11 @@ def gen_sequences(spark, path, events, users, files):
     (df.repartitionByRange(files, "event_time")
        .sortWithinPartitions("event_time")
        .write.mode("overwrite").parquet(path))
+    _write_sentinel(path, spark.range(1).select(
+        F.lit("zzz_sentinel").alias("doc_id"),
+        F.array().cast("array<int>").alias("tokens"),
+        F.lit(0).alias("n_tok"), F.lit("sentinel").alias("source"),
+        F.lit("2100-01-01").cast("timestamp").alias("event_time")))
 
 
 def gen_events(spark, path, events, users, files, types):
@@ -151,15 +167,11 @@ def gen_events(spark, path, events, users, files, types):
                            % SPAN_US).alias("ts"))
     (df.repartitionByRange(files, "ts").sortWithinPartitions("ts")
        .write.mode("overwrite").parquet(path))
-    (spark.range(1).select(
+    _write_sentinel(path, spark.range(1).select(
         F.lit(-1).cast("long").alias("event_id"),
         F.lit(-1).cast("long").alias("user_id"),
         F.lit("view").alias("event_type"),
-        F.timestamp_micros(F.lit(10 * SPAN_US)).alias("ts"))
-     .coalesce(1).write.mode("overwrite").parquet(path + "_sentinel"))
-    os.replace(glob.glob(path + "_sentinel/part-*.parquet")[0],
-               path + "/zzz_sentinel.parquet")
-    shutil.rmtree(path + "_sentinel")
+        F.timestamp_micros(F.lit(10 * SPAN_US)).alias("ts")))
 
 
 def gen_changelog(spark, path, events, users, files, local):
