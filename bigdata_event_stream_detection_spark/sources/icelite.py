@@ -228,6 +228,25 @@ def _commit_snapshot(path: str, snap: dict) -> int:
     return snap["snapshot_id"]
 
 
+def _commit_retrying(path: str, attempt, max_retries: int, what: str) -> int:
+    """Commit ``attempt(parent) -> (snap, manifests)`` against the
+    current snapshot, re-running it against the new one after a lost
+    race, at most ``max_retries`` times. ``manifests`` are the ones the
+    attempt wrote for its snapshot alone: the next attempt removes them
+    once it has written its own."""
+    stale: list[str] = []
+    for _ in range(max_retries):
+        snap, written = attempt(
+            _load_snapshot(path, current_snapshot_id(path)))
+        _unlink_quiet(path, *[os.path.join(_META, m) for m in stale])
+        stale = written
+        try:
+            return _commit_snapshot(path, snap)
+        except CommitConflict:
+            continue
+    raise CommitConflict(f"{what} lost {max_retries} commit races")
+
+
 def _child_snap(parent: dict, operation: str, manifests: list[str],
                 added: list[str], summary: dict, *,
                 delete_manifests: list[str] | None = None,
@@ -1055,27 +1074,21 @@ def append(df: DataFrame, path: str, max_retries: int = 10,
         df, path, parquet_block_bytes=parquet_block_bytes,
         spec=_table_spec(path), fids=_field_ids(head),
         sort_order=(head.get("properties") or {}).get("write.sort-order"))
-    prev_manifest: str | None = None
-    for _ in range(max_retries):
-        parent = _load_snapshot(path, current_snapshot_id(path))
+
+    def attempt(parent):
         # data files keep their (final) snapshot id as sequence number;
         # a lost race means a new id, so the manifest is re-stamped
         # (one small JSON rewrite — the data files are reused)
         manifest = _write_manifest(
             path, _stamped(entries, parent["snapshot_id"] + 1))
-        if prev_manifest is not None:
-            _unlink_quiet(path, os.path.join(_META, prev_manifest))
-        prev_manifest = manifest
         snap = _child_snap(parent, "append",
                            parent["manifests"] + [manifest], [manifest],
                            {"added_files": len(entries),
                             "removed_files": 0,
                             **(summary_extra or {})})
-        try:
-            return _commit_snapshot(path, snap)
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"append lost {max_retries} commit races")
+        return snap, [manifest]
+
+    return _commit_retrying(path, attempt, max_retries, "append")
 
 
 def overwrite(df: DataFrame, path: str,
@@ -1681,16 +1694,13 @@ def _merge_mor(spark: SparkSession, path: str, parent: dict,
     # a rename committed between attempts would make ``key`` unknown
     # to the newer snapshot.
     kid = _field_ids(parent).get(key)
-    prev: list[str] = []
-    for _ in range(max_retries):
-        cur = _load_snapshot(path, current_snapshot_id(path))
+
+    def attempt(cur):
         seq = cur["snapshot_id"] + 1
         data_manifest = _write_manifest(path, _stamped(data_entries, seq))
         del_manifest = _write_manifest(
             path, [{**e, "type": "eq", "key": key, "kid": kid, "seq": seq}
                    for e in del_entries])
-        _unlink_quiet(path, *[os.path.join(_META, m) for m in prev])
-        prev = [data_manifest, del_manifest]
         snap = _child_snap(
             cur, "merge-mor",
             cur["manifests"] + [data_manifest], [data_manifest],
@@ -1700,11 +1710,9 @@ def _merge_mor(spark: SparkSession, path: str, parent: dict,
             delete_manifests=(cur.get("delete_manifests") or [])
             + [del_manifest],
             properties=_merged_props(cur, properties))
-        try:
-            return _commit_snapshot(path, snap)
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"merge-on-read lost {max_retries} commit races")
+        return snap, [data_manifest, del_manifest]
+
+    return _commit_retrying(path, attempt, max_retries, "merge-on-read")
 
 
 # ---------------------------------------------------------------------------
@@ -2236,8 +2244,8 @@ def publish_staged(path: str, staged: dict, max_retries: int = 10,
     staged manifest. Pure metadata — no data file moves or rewrites —
     so concurrent appends between stage and publish are fine (the
     commit retries against the new parent like any append)."""
-    for _ in range(max_retries):
-        parent = _load_snapshot(path, current_snapshot_id(path))
+
+    def attempt(parent):
         # stamp the staged entries with the (final) sequence number;
         # the staged manifest name is reused so an abort after a lost
         # race still cleans up the right file
@@ -2251,11 +2259,9 @@ def publish_staged(path: str, staged: dict, max_retries: int = 10,
                            {"added_files": len(staged["entries"]),
                             "removed_files": 0, "wap": True,
                             **(summary_extra or {})})
-        try:
-            return _commit_snapshot(path, snap)
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"publish_staged lost {max_retries} commit races")
+        return snap, []
+
+    return _commit_retrying(path, attempt, max_retries, "publish_staged")
 
 
 def abort_staged(path: str, staged: dict) -> None:

@@ -2,18 +2,19 @@
 detection on it: the continuous form of ``operators.windows.
 burst_windows``.
 
-``_closed_window_counter`` is the skeleton shared with
-``streaming/changepoint.py``. Per key (event type / tenant / source)
-it counts rows into tumbling event-time windows, closes each window IN
+``_closed_window_counter`` is the layout shared with
+``streaming/changepoint.py``, a step of the grouped-state driver
+``state._state_stream``. Per key (event type / tenant / source) it
+counts rows into tumbling event-time windows, closes each window IN
 ORDER once the watermark passes its end, and hands the closed count to
 the operator's fold, ``step(n, fold) -> (row | None, fold)``; a row is
 emitted (append mode, exactly once per closed window) as ``(key,
-ws_epoch, *row)``. The skeleton owns the open-window counts and the
+ws_epoch, *row)``. The counter owns the open-window counts and the
 vectorized micro-batch bucketing (one numpy pass per key), the late
 fence — rows for a window at or before the newest closed one are
 dropped and COUNTED into ``dropped_rows_acc`` (append mode cannot
 revise an emitted window) — and the wake-up at the first open window's
-end, clamped past the watermark.
+end.
 
 Burst's fold is the trailing baseline of the most recent non-empty
 closed windows: a window is emitted iff its count reaches ``min_lift``
@@ -32,13 +33,13 @@ neither survives a hot stream.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType,
 )
+
+from .state import _state_stream
 
 BURST_SCHEMA = StructType([
     StructField("event_type", StringType()),
@@ -58,28 +59,24 @@ def _closed_window_counter(stream: DataFrame, step, fold: tuple,
     ``fold_ddl`` its state fields; open windows are a handful of longs
     per key, so boxed arrays are fine (unlike the engine's token
     blobs)."""
-    dropped_acc = stream.sparkSession.sparkContext.accumulator(0)
     win = int(window_seconds)
 
-    def fn(key, pdf_iter, state: GroupState):
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.exists:
-            open_ws, open_n, last_closed, *acc = state.get
+    def counter_step(key, old, pdfs, wm_ms):
+        if old is not None:
+            open_ws, open_n, last_closed, *acc = old
             counts = dict(zip(open_ws, open_n))
         else:
             counts, last_closed, acc = {}, -(1 << 62), fold
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                sec = (pdf[time_col].to_numpy("datetime64[ns]")
-                       .astype(np.int64) // 1_000_000_000)
-                uws, cnt = np.unique((sec // win) * win, return_counts=True)
-                for ws, c in zip(uws.tolist(), cnt.tolist()):
-                    if ws <= last_closed:
-                        dropped_acc.add(c)  # late: window emitted
-                    else:
-                        counts[ws] = counts.get(ws, 0) + c
+        late = 0
+        for pdf in pdfs:
+            sec = (pdf[time_col].to_numpy("datetime64[ns]")
+                   .astype(np.int64) // 1_000_000_000)
+            uws, cnt = np.unique((sec // win) * win, return_counts=True)
+            for ws, c in zip(uws.tolist(), cnt.tolist()):
+                if ws <= last_closed:
+                    late += c               # late: window emitted
+                else:
+                    counts[ws] = counts.get(ws, 0) + c
         rows = []
         for ws in sorted(counts):
             if (ws + win) * 1000 > wm_ms:
@@ -89,26 +86,18 @@ def _closed_window_counter(stream: DataFrame, step, fold: tuple,
                 rows.append((key[0], ws, *row))
             last_closed = ws
         open_ws = sorted(counts)
-        state.update((open_ws, [counts[w] for w in open_ws], last_closed,
-                      *acc))
-        if open_ws:
-            state.setTimeoutTimestamp(
-                max((open_ws[0] + win) * 1000, wm_ms + 1))
-        if rows:
-            yield pd.DataFrame(rows, columns=out_schema.fieldNames())
+        return (rows, (open_ws, [counts[w] for w in open_ws], last_closed,
+                       *acc),
+                (open_ws[0] + win) * 1000 if open_ws else None, late)
 
     keyed = (
         stream.withWatermark(time_col, watermark_delay)
         .select(F.col(key_col).alias("event_type"), time_col)
     )
-    out = keyed.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=("open_ws array<bigint>, open_n array<bigint>, "
-                         "last_closed_ws bigint, " + fold_ddl),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    out, dropped_acc = _state_stream(
+        keyed, ["event_type"], counter_step,
+        "open_ws array<bigint>, open_n array<bigint>, last_closed_ws bigint, "
+        + fold_ddl, out_schema)
     out.dropped_rows_acc = dropped_acc
     return out
 

@@ -6,8 +6,9 @@ DEFINE-predicate classified, or rules-table) — plus the step funnel of
 at watermark finality, with rows equal to the batch operator on the
 same drained input.
 
-All eight run on ONE keyed-buffer state machine, ``_cep_state_stream``.
-It owns everything that is not pattern logic:
+All eight run on ONE keyed-buffer state machine, ``_cep_state_stream``,
+a step of the grouped-state driver ``state._state_stream``. It owns
+everything that is not pattern logic:
 
 * the state per key: a bounded buffer of ``(code, ts_us, event_id)``
   triples — pattern roles only, never payloads — packed as binary
@@ -18,12 +19,12 @@ It owns everything that is not pattern logic:
   stay; the overflow and the events a decision reports as dropped are
   counted on ``dropped_events_acc``;
 * removing a key from the store once nothing is left, and the
-  event-time wake-up, clamped past the watermark. No pattern but the
-  funnel keeps tombstones: every anchor is an independent pattern
-  instance identified by its event_id, and Spark's late-row filter
-  stops replayed anchors from re-entering. A funnel resolves once per
-  user, so a resolved user stays in the store with no wake-up
-  (``NEVER``) and every later event for it is a drop.
+  event-time wake-up. No pattern but the funnel keeps tombstones:
+  every anchor is an independent pattern instance identified by its
+  event_id, and Spark's late-row filter stops replayed anchors from
+  re-entering. A funnel resolves once per user, so a resolved user
+  stays in the store with no wake-up (``NEVER``) and every later event
+  for it is a drop.
 
 Each pattern is a decision ``decide(key, code, us, eid, extra, wm_us)
 -> (rows, (code, us, eid), extra, fire_us, n_dropped)``; ``fire_us=None``
@@ -76,13 +77,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.cep import (
     ABSENCE_ROLES, TIMEOUT_ROLES, _check_rules, _horizon, _parse_steps_spec,
     _roles, _seq_scan, _skip_past, _spec_pattern, _step_code_expr, _step_tids,
     _validate_steps,
 )
+from .state import _state_stream
 
 # output schemas (DDL); each fixed twin's is its rules twin's minus rule_id
 RULES_OUT_SCHEMA = ("user_id long, rule_id string, first_event_id long, "
@@ -123,14 +124,12 @@ def _cep_state_stream(keyed: DataFrame, decide, out_schema: str,
     fold). ``rebase(code, old, new)`` re-encodes the buffered codes when
     refreshed scalars change; code -1 drops the event."""
     names = [n for n, _ in extra_state_fields]
-    columns = [f.split()[0] for f in out_schema.split(",")]
     keys = [c for c in ("user_id", "rule_id") if c in keyed.columns]
-    dropped_acc = keyed.sparkSession.sparkContext.accumulator(0)
 
-    def fn(key, pdf_iter, state: GroupState):
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            tb, ub, eb, *extra = state.get
+    def step(key, old, pdfs, wm_ms):
+        wm_us = wm_ms * 1000
+        if old is not None:
+            tb, ub, eb, *extra = old
             code = np.frombuffer(tb, dtype=np.int8)
             us = np.frombuffer(ub, dtype=np.int64)
             eid = np.frombuffer(eb, dtype=np.int64)
@@ -138,13 +137,13 @@ def _cep_state_stream(keyed: DataFrame, decide, out_schema: str,
             code = np.empty(0, np.int8)
             us = eid = np.empty(0, np.int64)
             extra = [None] * len(names)
-        parts = ([] if state.hasTimedOut
-                 else [pdf for pdf in pdf_iter if len(pdf)])
+        parts = [pdf for pdf in pdfs if len(pdf)]
+        n_trimmed = 0
         if parts:
             tail = parts[-1]
             new = [_scalar(tail[n].iloc[-1]) if n in tail.columns else x
                    for n, x in zip(names, extra)]
-            if rebase is not None and state.exists and new != extra:
+            if rebase is not None and old is not None and new != extra:
                 code = rebase(code, extra, new)
                 ok = code >= 0
                 code, us, eid = code[ok], us[ok], eid[ok]
@@ -157,42 +156,31 @@ def _cep_state_stream(keyed: DataFrame, decide, out_schema: str,
             eid = np.concatenate(
                 [eid] + [p["_eid"].to_numpy(np.int64) for p in parts])
             if code.size > max_events_in_state:
-                dropped_acc.add(code.size - max_events_in_state)
+                n_trimmed = code.size - max_events_in_state
                 keep = np.sort(
                     np.lexsort((eid, us))[:max_events_in_state])
                 code, us, eid = code[keep], us[keep], eid[keep]
 
         rows, (code, us, eid), extra, fire_us, n_dropped = decide(
             key, code, us, eid, extra, wm_us)
-        if n_dropped:
-            dropped_acc.add(n_dropped)
         if fire_us is None:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((code.tobytes(), us.tobytes(), eid.tobytes(),
-                          *extra))
-            if fire_us != NEVER:
-                state.setTimeoutTimestamp(
-                    max(fire_us // 1000 + 1, wm_us // 1000 + 1))
-        if rows:
-            yield pd.DataFrame(rows, columns=columns)
+            return rows, None, None, n_trimmed + n_dropped
+        return (rows, (code.tobytes(), us.tobytes(), eid.tobytes(), *extra),
+                None if fire_us == NEVER else fire_us // 1000 + 1,
+                n_trimmed + n_dropped)
 
-    out = keyed.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="types binary, ts_us binary, eids binary" + "".join(
+    out, dropped_acc = _state_stream(
+        keyed, keys, step,
+        "types binary, ts_us binary, eids binary" + "".join(
             f", {n} {t}" for n, t in extra_state_fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+        out_schema)
     out.dropped_events_acc = dropped_acc
     return out
 
 
 def _keyed(stream: DataFrame, time_col, key_col, type_col, id_col,
            watermark_delay, roles: DataFrame | None = None, code=None):
-    """The skeleton's input. Every event is watermarked first, then
+    """The event buffer's input. Every event is watermarked first, then
     classified by ONE broadcast join against a roles table
     ``(rule_id, _et, _code, ...)``, or by a ``code`` expression whose
     null filter also reads the event time so that Catalyst cannot push

@@ -14,11 +14,12 @@ composition; this module runs the same operators continuously:
          sources inside the same window
       -> exactly-once file sink + checkpoint
 
-Every detector rides ONE doc buffer, ``_windowed_state_stream``, and
-ONE kernel call, ``_window_kernel``; a detector only picks its state
-key and close rule. Both rules close against one threshold per key
-and call: max(watermark, the key's latest buffered event time −
-watermark delay). ``_tumbling`` keys by (window index mod
+Every detector rides ONE doc buffer, ``_windowed_state_stream`` (a
+step of ``state._state_stream``), and ONE kernel call,
+``_window_kernel``; a detector only picks its state key and close
+rule. Both rules close against one threshold per key and call:
+max(watermark, the key's latest buffered event time − watermark
+delay). ``_tumbling`` keys by (window index mod
 ``WINDOW_BUCKETS``, chunk) and closes each buffered window whose end
 is behind the threshold (the window detector and
 ``streaming/evolution.streaming_window_themes``); the session detector
@@ -72,7 +73,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType, BinaryType, IntegerType, LongType, StringType, StructField,
     StructType, TimestampType,
@@ -82,6 +82,7 @@ from ..operators.em import _broadcast_background, em_window_best
 from ..operators.hmm import detect_window_events
 from ..params import DEFAULTS, Params
 from ..plans.pipeline import _window_seconds
+from .state import _state_stream
 
 SEQUENCE_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -189,7 +190,7 @@ def streaming_session_doc_counts(
 
 
 # ---------------------------------------------------------------------------
-# stateful EM + HMM detection (applyInPandasWithState)
+# stateful EM + HMM detection (grouped state)
 # ---------------------------------------------------------------------------
 
 def _windowed_state_stream(
@@ -203,9 +204,9 @@ def _windowed_state_stream(
     min_tokens: int,
     max_docs_in_state: int,
 ) -> DataFrame:
-    """The one doc buffer of every detector: per state key, binary-
-    packed doc buffering across micro-batches, bounded state with
-    counted drops, and an event-time wake-up clamped past the watermark.
+    """The one doc buffer of every detector, a step of the grouped-state
+    driver (``state._state_stream``): per state key, binary-packed doc
+    buffering across micro-batches and bounded state with counted drops.
 
     The buffer applies the watermark (``watermark_delay`` on
     ``event_time``) itself, so the delay Spark filters with and the
@@ -231,24 +232,18 @@ def _windowed_state_stream(
     seq_pdf) -> rows`` on it (``_doc_frame`` columns; ``window_start``
     is the group's first doc's window). The kernel's parallelism is
     thus the number of groups closing, not the number of state keys."""
-    dropped_acc = keyed.sparkSession.sparkContext.accumulator(0)
     delay_ms = pd.Timedelta(watermark_delay) // pd.Timedelta(milliseconds=1)
     closed_schema = StructType([keyed.schema[k] for k in keys]
                                + STATE_SCHEMA.fields)
 
-    def fn(key, pdf_iter, state: GroupState):
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.exists:
-            vocab, buf = _unpack(*state.get)
-        else:
-            vocab = []
-            buf = ([], *(np.empty(0, t) for t in _BUF_DTYPES))
+    def step(key, old, pdfs, wm_ms):
+        vocab, buf = (_unpack(*old) if old is not None else
+                      ([], ([], *(np.empty(0, t) for t in _BUF_DTYPES))))
         n_old = len(buf[0])
-        if not state.hasTimedOut:
-            buf = _append_docs(buf, vocab, pdf_iter, min_tokens)
+        buf = _append_docs(buf, vocab, pdfs, min_tokens)
         n = len(buf[0])
         if not n:
-            return
+            return [], None, None, 0
         doc_ids, _, event_us, window_us = buf[:4]
         close_ms = max(wm_ms, int(event_us.max()) // 1000 - delay_ms)
         closed, kept, fire_us = rule(event_us, window_us, doc_ids, n_old,
@@ -257,16 +252,10 @@ def _windowed_state_stream(
                               for c in closed) if c.size]
         kept = _cap(kept, window_us, max_docs_in_state)
         lost = n - kept.size - sum(c.size for c in closed)
-        if lost:
-            dropped_acc.add(lost)
         rows = [(*key, *_pack(vocab, _take(buf, idx))) for idx in closed]
-        if kept.size:
-            state.update(_pack(vocab, _take(buf, kept)))
-            state.setTimeoutTimestamp(max(-(-fire_us // 1000), wm_ms + 1))
-        elif state.exists:
-            state.remove()
-        if rows:
-            yield pd.DataFrame(rows, columns=closed_schema.fieldNames())
+        if not kept.size:
+            return rows, None, None, lost
+        return rows, _pack(vocab, _take(buf, kept)), -(-fire_us // 1000), lost
 
     def run_close(pdf_iter):
         for pdf in pdf_iter:
@@ -279,13 +268,9 @@ def _windowed_state_stream(
             if rows:
                 yield pd.DataFrame(rows, columns=out_schema.fieldNames())
 
-    groups = (keyed.withWatermark("event_time", watermark_delay)
-              .groupBy(*keys).applyInPandasWithState(
-                  fn,
-                  outputStructType=closed_schema,
-                  stateStructType=STATE_SCHEMA,
-                  outputMode="append",
-                  timeoutConf=GroupStateTimeout.EventTimeTimeout))
+    groups, dropped_acc = _state_stream(
+        keyed.withWatermark("event_time", watermark_delay), keys, step,
+        STATE_SCHEMA, closed_schema)
     # a group's first doc id names it: hashing by it spreads the closed
     # windows (and chunks) of one bucket key over all partitions. The
     # column is computed, not a bare reference, because the projection
@@ -382,7 +367,7 @@ def _doc_frame(vocab, doc_ids, codes, event_us, _window_us, lens,
 
 
 def _tumbling(stream: DataFrame, params: Params, state_chunks: int = 1):
-    """Window keying and close rule for the skeleton: state key (window
+    """Window keying and close rule for the doc buffer: state key (window
     index mod ``WINDOW_BUCKETS``, chunk), each row carrying its window
     start (a sliding window's rows are not derivable from the event
     time). A buffered window closes once its end is behind the key's
@@ -603,6 +588,25 @@ def _encode_sources(srcs: list, src_vocab: list, code_of: dict) -> np.ndarray:
 # cross-source correlation (stream-stream join)
 # ---------------------------------------------------------------------------
 
+def _event_sides(events: DataFrame, join_watermark: str,
+                 min_strength: int) -> list[DataFrame]:
+    """Both sides of the cross-source self-join: the events of at least
+    ``min_strength``, each side watermarked on ``window_start`` when the
+    input streams, projected as (ws_l, source1, theme_l, strength1) and
+    (ws_r, source2, theme_r, strength2)."""
+    sides = []
+    for s, n in (("l", 1), ("r", 2)):
+        side = events.filter(F.col("strength") >= min_strength)
+        if events.isStreaming:
+            side = side.withWatermark("window_start", join_watermark)
+        sides.append(side.select(
+            F.col("window_start").alias(f"ws_{s}"),
+            F.col("source").alias(f"source{n}"),
+            F.col("theme_id").alias(f"theme_{s}"),
+            F.col("strength").alias(f"strength{n}")))
+    return sides
+
+
 def correlate_events_across_sources(
     events: DataFrame,
     join_watermark: str = "1 hour",
@@ -616,23 +620,7 @@ def correlate_events_across_sources(
     the event-time equality (window_start == window_start), which
     satisfies Spark's stream-stream state-cleanup requirement.
     """
-    a = events.filter(F.col("strength") >= min_strength)
-    if events.isStreaming:
-        a = a.withWatermark("window_start", join_watermark)
-        b = (events.filter(F.col("strength") >= min_strength)
-             .withWatermark("window_start", join_watermark))
-    else:
-        b = a
-    left = a.select(
-        F.col("window_start").alias("ws_l"),
-        F.col("source").alias("source1"),
-        F.col("theme_id").alias("theme_l"),
-        F.col("strength").alias("strength1"))
-    right = b.select(
-        F.col("window_start").alias("ws_r"),
-        F.col("source").alias("source2"),
-        F.col("theme_id").alias("theme_r"),
-        F.col("strength").alias("strength2"))
+    left, right = _event_sides(events, join_watermark, min_strength)
     return (
         left.join(
             right,
@@ -669,21 +657,7 @@ def uncorroborated_events(
     not yet decided and do not emit — the same late-data contract as
     every windowed operator here.
     """
-    a = events.filter(F.col("strength") >= min_strength)
-    b = events.filter(F.col("strength") >= min_strength)
-    if events.isStreaming:
-        a = a.withWatermark("window_start", join_watermark)
-        b = b.withWatermark("window_start", join_watermark)
-    left = a.select(
-        F.col("window_start").alias("ws_l"),
-        F.col("source").alias("source1"),
-        F.col("theme_id").alias("theme_l"),
-        F.col("strength").alias("strength1"))
-    right = b.select(
-        F.col("window_start").alias("ws_r"),
-        F.col("source").alias("source2"),
-        F.col("theme_id").alias("theme_r"),
-        F.col("strength").alias("strength2"))
+    left, right = _event_sides(events, join_watermark, min_strength)
     return (
         left.join(
             right,

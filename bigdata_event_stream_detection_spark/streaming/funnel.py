@@ -1,6 +1,6 @@
 """Streaming funnel / sequence-pattern CEP: the continuous form of
 ``operators.funnel.funnel_times`` with a required horizon, as one
-decision on the CEP keyed-buffer skeleton (``cep._cep_state_stream``).
+decision on the CEP keyed buffer (``cep._cep_state_stream``).
 
 Semantics (identical to batch): per user, the chain anchors at the
 GLOBALLY earliest step-0 event (t0) and every later step must land
@@ -12,7 +12,7 @@ once and completions are emitted.
 
 Events are classified by the CEP step coder (one code per distinct
 type, so a step type may repeat) and buffered as ``(code, ts, 0)`` —
-the funnel has no event id, and the constant id keeps the skeleton's
+the funnel has no event id, and the constant id keeps the buffer's
 earliest-by-(ts, id) trim stable in arrival order. State lifecycle:
 an un-anchored buffer wakes at its provably-dead point and is REMOVED
 once pruned empty (a user who only ever sends non-step-0 events costs

@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .state import _state_stream
+
 
 def streaming_windowed_distinct(
     stream: DataFrame,
@@ -147,9 +149,6 @@ def streaming_windowed_heavy_hitters(
     to exact counts when needed. State per key is bounded:
     ``capacity`` (value, count) pairs + one total.
     """
-    from pyspark.sql.streaming.state import (
-        GroupState, GroupStateTimeout,
-    )
     from pyspark.sql.types import (
         ArrayType, LongType, StringType, StructField, StructType,
     )
@@ -168,18 +167,17 @@ def streaming_windowed_heavy_hitters(
         StructField("n_bucket", LongType()),
     ])
 
-    def fn(key, pdf_iter, state: GroupState):
-        ws_us, bucket = key[0], key[1]
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            vals, cnts, n_bucket, end_us = state.get
+    def step(key, old, pdfs, wm_ms):
+        ws_us, bucket = key
+        if old is not None:
+            vals, cnts, n_bucket, end_us = old
             counters = pd.Series(list(cnts),
                                  index=list(vals), dtype="int64")
         else:
             counters = pd.Series(dtype="int64")
             n_bucket, end_us = 0, None
 
-        for pdf in pdf_iter:
+        for pdf in pdfs:
             if not len(pdf):
                 continue
             n_bucket += len(pdf)
@@ -192,32 +190,19 @@ def streaming_windowed_heavy_hitters(
                 counters = counters - cut
                 counters = counters[counters > 0]
 
-        if end_us is not None and (state.hasTimedOut or end_us <= wm_us):
-            if len(counters):
-                values = counters.index.to_numpy(dtype=object)
-                lbs = counters.to_numpy("int64")
-            else:
-                # all counters trimmed away (pure-tail bucket): emit a
-                # NULL-value marker so the bucket's row count still
-                # contributes to the window total downstream
-                values, lbs = [None], [0]
-            rows = pd.DataFrame({
-                "ws_epoch": ws_us // 1_000_000,
-                "bucket": bucket,
-                "value": values,
-                "lb": lbs,
-                "n_bucket": n_bucket,
-            })
-            state.remove()
-            yield rows
-        else:
-            state.update((list(counters.index.astype(str)),
-                          [int(c) for c in counters.to_numpy()],
-                          int(n_bucket),
-                          int(end_us if end_us is not None else 0)))
-            if end_us is not None:
-                state.setTimeoutTimestamp(
-                    max(end_us // 1000 + 1, wm_us // 1000 + 1))
+        # a timeout call always closes: its timer lies past end_us and
+        # fires only once the watermark passes it. A bucket whose
+        # counters all trimmed away (pure tail) emits a NULL-value
+        # marker so its row count still reaches the window total
+        if end_us is not None and end_us <= wm_ms * 1000:
+            pairs = counters.items() if len(counters) else [(None, 0)]
+            return ([(ws_us // 1_000_000, bucket, v, int(lb), n_bucket)
+                     for v, lb in pairs], None, None, 0)
+        return ([], (list(counters.index.astype(str)),
+                     [int(c) for c in counters.to_numpy()],
+                     int(n_bucket),
+                     int(end_us if end_us is not None else 0)),
+                None if end_us is None else end_us // 1000 + 1, 0)
 
     w = F.window(time_col, length)
     keyed = (
@@ -233,13 +218,8 @@ def streaming_windowed_heavy_hitters(
             F.col(time_col),
         )
     )
-    return keyed.groupBy("_ws_us", "_bucket").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return _state_stream(keyed, ["_ws_us", "_bucket"], step, state_schema,
+                         out_schema)[0]
 
 
 def streaming_windowed_count_min(

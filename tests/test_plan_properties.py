@@ -176,7 +176,7 @@ def _state_operators(spark, events, seqs):
         small_params,
     )
     from bigdata_event_stream_detection_spark.streaming import (
-        burst, cep, changepoint, engine, evolution, funnel,
+        burst, cep, changepoint, engine, evolution, funnel, sketches,
     )
 
     timeout_rules = spark.createDataFrame(
@@ -217,19 +217,22 @@ def _state_operators(spark, events, seqs):
             seqs, model, params),
         "burst": lambda: burst.streaming_burst_windows(events),
         "cusum": lambda: changepoint.streaming_cusum_changepoints(events),
+        "heavy_hitters": lambda: sketches.streaming_windowed_heavy_hitters(
+            events, "event_type"),
     }
 
 
 @pytest.mark.parametrize("twin", [
     "timeout", "timeout_rules", "absence", "absence_rules", "runs", "seq",
     "seq_rules", "funnel", "detect_events", "detect_events_sessions",
-    "window_themes", "burst", "cusum"])
+    "window_themes", "burst", "cusum", "heavy_hitters"])
 def test_streaming_cep_twin_scans_once(spark, tmp_path, twin):
     """Every streaming state operator — the CEP twins, the funnel, the
     window and session detectors, the window-theme emitter, burst and
     CUSUM — reads its stream ONCE (role fan-out is a single broadcast join,
     never a union of per-role scans) and runs ONE grouped-state
-    operator."""
+    operator.
+    The windowed heavy hitters run on the same grouped-state driver."""
     import pandas as pd
 
     from bigdata_event_stream_detection_spark.streaming.engine import (
